@@ -643,9 +643,6 @@ object Dedup {
     // fine for a batch scan, AnalysisException on a streaming frame;
     // no current caller is streaming, but fail soft if one ever is
     if (df.isStreaming) return df
-    // probe-only A/B valve (r17): lets a paired bench disable the
-    // spread without a code edit; never set by Bench/Verify/the driver
-    if (sys.env.get("GRAFT_SPREAD_DISABLE").contains("true")) return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     // planned partition count — physical planning only, no job
     val planned = df.rdd.getNumPartitions

@@ -19,10 +19,16 @@ import graft.sources.BlockCatalog
   * longer mean small files. DURABILITY CAVEAT: offsets commit when
   * foreachBatch returns, so rows buffered below the target are LOST if
   * the query stops before the next flush — the same at-most-once
-  * window as the reference's in-memory compactor. When every row must
-  * land, run with minRowsPerBlock=0 (flush per batch, at-least-once
-  * via content-hash idempotency) and compact post hoc with
-  * `BlockCatalog.compactSmallBlocks`.
+  * window as the reference's in-memory compactor. An AvailableNow
+  * drain always stops with its last buffer below the target, so
+  * `availableNow = true` with `minRowsPerBlock > 0` is rejected. When
+  * every row must land, run with minRowsPerBlock=0 (flush per batch,
+  * at-least-once via content-hash idempotency) and compact post hoc
+  * with `BlockCatalog.compactSmallBlocks`.
+  *
+  * `start` installs [[LocalCheckpointFileManager]] on the frame's
+  * session before the query starts. The install is session-wide and
+  * never overrides a checkpoint manager the user set.
   */
 object BlockWriter {
 
@@ -35,6 +41,12 @@ object BlockWriter {
       checkpoint: Option[String] = None,
       minRowsPerBlock: Long = 0L,
       availableNow: Boolean = false): StreamingQuery = {
+    require(!(availableNow && minRowsPerBlock > 0L),
+      "BlockWriter.start: availableNow = true with minRowsPerBlock > 0 " +
+      "would drop the last buffered rows when the drain stops; use " +
+      "minRowsPerBlock = 0 and compact afterwards with " +
+      "BlockCatalog.compactSmallBlocks")
+    LocalCheckpointFileManager.install(df.sparkSession)
     val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var buffered = 0L
     val base = df.writeStream
@@ -43,13 +55,14 @@ object BlockWriter {
         else Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (minRowsPerBlock <= 0L) {
-          // flush-per-batch path (r16): no buffering means the
-          // persist + count + isEmpty jobs bought nothing — the
-          // catalog write's own fused hash+stats aggregation is the
-          // one pass the block needs, and it already answers "empty"
-          // (null hash -> skipped). One job per micro-batch, was
-          // three.
-          catalog.write(batch, definition, key, tsUs)
+          // flush-per-batch path: the catalog write reads the batch
+          // twice (its fused hash+stats aggregation, which also
+          // answers "empty", then the parquet write). The persist makes
+          // the first read fill the cache and the second read it, so a
+          // stateful upstream runs once per micro-batch, not twice.
+          val p = batch.persist()
+          try catalog.write(p, definition, key, tsUs)
+          finally p.unpersist()
           ()
         } else if (!batch.isEmpty) {
           val p = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

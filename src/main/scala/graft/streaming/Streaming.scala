@@ -13,6 +13,12 @@ import graft.operators.L2Book.{Snapshot, Update}
   * exactly the reference's online/offline split, minus its hand-rolled
   * runtime. Watermarks give strictly more than the reference's
   * "input must be ts-sorted" assumption.
+  *
+  * Every public source, builder and drain here first installs
+  * [[LocalCheckpointFileManager]] on its session, so the offset, commit
+  * and state-store files of a query started on its result are written
+  * without process forks. The install is session-wide and never
+  * overrides a checkpoint manager the user set.
   */
 object Streaming {
 
@@ -37,6 +43,7 @@ object Streaming {
     * and Tables.normalizeTs restores the nanos-Long contract on top,
     * whatever the footer said. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    LocalCheckpointFileManager.install(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val onDisk = spark.read.parquet(s"$dir/events.parquet").schema
     // FileStreamSource takes a directory; the glob filter narrows it to
@@ -50,7 +57,7 @@ object Streaming {
   /** A transform usable identically in batch and streaming: tumbling
     * 1h windowed aggregates per event_type with a 2h watermark. */
   def windowedAgg(df: DataFrame): DataFrame =
-    df.withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
+    installed(df).withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
       .withWatermark("event_ts", "2 hours")
       .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -77,7 +84,7 @@ object Streaming {
   def intervalJoinStream(left: DataFrame, right: DataFrame,
       key: String, tsCol: String, lookbackUs: Long,
       watermarkDelay: String): DataFrame = {
-    val l = left.withColumn("l_ts", timestamp_micros(col(tsCol)))
+    val l = installed(left).withColumn("l_ts", timestamp_micros(col(tsCol)))
       .withWatermark("l_ts", watermarkDelay)
     val r = right.withColumnRenamed(key, "r_key")
       .withColumn("r_ts", timestamp_micros(col(tsCol)))
@@ -103,7 +110,7 @@ object Streaming {
   def ohlcvStream(df: DataFrame, bucketUs: Long): DataFrame = {
     val vc = round(col("value") * 100)
     val okey = graft.operators.WindowOps.orderKey(col("ts_us"), col("event_id"))
-    df.withColumn("ts_us", expr("ts div 1000"))
+    installed(df).withColumn("ts_us", expr("ts div 1000"))
       .groupBy(col("event_type"),
         graft.operators.WindowOps.bucket(col("ts_us"), bucketUs).as("bucket_us"))
       .agg(
@@ -127,7 +134,7 @@ object Streaming {
     * is 32 B per in-window distinct digest, never the document. */
   def exactDedupStream(df: DataFrame, text: org.apache.spark.sql.Column,
       tsCol: org.apache.spark.sql.Column, watermarkDelay: String): DataFrame =
-    df.withColumn("__event_ts", tsCol)
+    installed(df).withColumn("__event_ts", tsCol)
       .withColumn("__digest", sha2(text, 256))
       .withWatermark("__event_ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("__digest")
@@ -143,11 +150,13 @@ object Streaming {
 
   /** Streaming source replaying the documents parquet — the shape of a
     * streaming crawl ingest (glob-narrowed like [[eventsStream]]). */
-  def documentsStream(spark: SparkSession, dir: String): DataFrame =
+  def documentsStream(spark: SparkSession, dir: String): DataFrame = {
+    LocalCheckpointFileManager.install(spark)
     spark.readStream
       .schema(DocumentsSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
+  }
 
   /** Streaming JSONL source — the streaming twin of
     * [[graft.sources.Ingest.readJsonl]]: schema'd (never inferred)
@@ -159,6 +168,7 @@ object Streaming {
     * on-the-fly curation path. */
   def jsonlStream(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    LocalCheckpointFileManager.install(spark)
     val withCorrupt =
       if (schema.fieldNames.contains("_corrupt_record")) schema
       else schema.add("_corrupt_record",
@@ -186,7 +196,7 @@ object Streaming {
   def exactDedupKeepListStream(df: DataFrame,
       text: org.apache.spark.sql.Column, id: org.apache.spark.sql.Column,
       nChars: org.apache.spark.sql.Column): DataFrame =
-    df.groupBy(sha2(text, 256).as("digest"))
+    installed(df).groupBy(sha2(text, 256).as("digest"))
       .agg(min(id).as("keep_id"), count(lit(1)).as("n_copies"),
         min(nChars).as("n_chars"))
 
@@ -205,7 +215,7 @@ object Streaming {
     * the drained owners (the corpus-drift composition shape). */
   def shingleOwnerStream(df: DataFrame, text: org.apache.spark.sql.Column,
       id: org.apache.spark.sql.Column, n: Int): DataFrame =
-    graft.operators.Dedup.explodeShingles(df, text, id, n)
+    graft.operators.Dedup.explodeShingles(installed(df), text, id, n)
       .select(col("doc_id"), xxhash64(col("s")).as("s"))
       .groupBy("s")
       .agg(min(col("doc_id")).as("first_id"), count(lit(1)).as("n_occ"))
@@ -228,7 +238,7 @@ object Streaming {
   def paragraphKeepListStream(df: DataFrame,
       text: org.apache.spark.sql.Column, id: org.apache.spark.sql.Column,
       size: Int): DataFrame =
-    graft.operators.TextAnalysis.chunkWords(df, text, id, size, size)
+    graft.operators.TextAnalysis.chunkWords(installed(df), text, id, size, size)
       .groupBy(sha2(col("chunk"), 256).as("digest"))
       .agg(min(struct(col("doc_id"), col("chunk_idx"))).as("k"),
         count(lit(1)).as("n_copies"))
@@ -346,7 +356,7 @@ object Streaming {
       size: Int, minDf: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.operators.TextAnalysis.chunkWords(df, text, id, size, size)
+    graft.operators.TextAnalysis.chunkWords(installed(df), text, id, size, size)
       .select(sha2(col("chunk"), 256).as("digest"), col("doc_id"))
       .as[(String, Long)]
       .groupByKey(_._1)
@@ -371,7 +381,7 @@ object Streaming {
       cap: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(group.cast("string").as("g"),
+    installed(df).select(group.cast("string").as("g"),
         coalesce(score, lit(-1L)).cast("long").as("s"),
         id.cast("long").as("i"))
       .as[(String, Long, Long)]
@@ -409,7 +419,7 @@ object Streaming {
     * the stream. */
   def vocabCountStream(df: DataFrame,
       text: org.apache.spark.sql.Column): DataFrame =
-    df.select(explode(split(lower(text), " ")).as("word"))
+    installed(df).select(explode(split(lower(text), " ")).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
 
@@ -464,7 +474,8 @@ object Streaming {
       // replay-agg drain, and 8 cores BEAT 32 on every session-default
       // corpus drain at sf0.1 before the r17 bound (SCALE.md r17
       // crossover table).
-      statePartitions: Option[Int] = None): DataFrame =
+      statePartitions: Option[Int] = None): DataFrame = {
+    LocalCheckpointFileManager.install(df.sparkSession)
     // rocksdbState: route the query's keyed state through the RocksDB
     // provider — REQUIRED when state cardinality is corpus-sized (the
     // boilerplate df pass holds one entry per DISTINCT PASSAGE: ~28M at
@@ -477,6 +488,7 @@ object Streaming {
         runAvailableNowInner(df, outputMode)
       }
     }
+  }
 
   /** Scale-ADAPTIVE state-shard bound for CORPUS-cardinality drains
     * (r17; the guide §2.2 partition-sizing rule applied to streaming
@@ -505,9 +517,6 @@ object Streaming {
     * explicit key-space bound — that rule is stronger. */
   def corpusStateShards(spark: SparkSession, inputPath: String,
       targetBytesPerShard: Long = 32L << 20, floor: Int = 8): Option[Int] = {
-    // probe-only A/B valve (r17): restores the pre-r17 session-default
-    // shard count; never set by Bench/Verify/the driver
-    if (sys.env.get("GRAFT_STATE_SHARDS_DISABLE").contains("true")) return None
     val bytes =
       try {
         val p = new org.apache.hadoop.fs.Path(inputPath)
@@ -620,6 +629,7 @@ object Streaming {
       noDataBatch: Boolean = true,
       statePartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
+    LocalCheckpointFileManager.install(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_bdrain_")
     sweepOnExit(root)
     val path = root.resolve("tbl").toString
@@ -697,6 +707,14 @@ object Streaming {
     drainDirs.add(p)
   }
 
+  /** `ds`, after installing [[LocalCheckpointFileManager]] on its
+    * session: every builder here passes its input through this, so a
+    * query started on the result checkpoints without process forks. */
+  private def installed[T](ds: Dataset[T]): Dataset[T] = {
+    LocalCheckpointFileManager.install(ds.sparkSession)
+    ds
+  }
+
   case class DocEvent(docId: Long, tsUs: Long, text: String)
   /** Per-band verdict: `matchedId` = smallest already-seen doc in this
     * band bucket with estimated Jaccard >= threshold, or -1. */
@@ -750,7 +768,7 @@ object Streaming {
     // Bucket key folds (bidx, band slice) through xxhash64 with the
     // accumulated-seed rule — the same combination catalyst's
     // multi-column xxhash64 applies in the batch band join.
-    val bandRows = ds.flatMap { d =>
+    val bandRows = installed(ds).flatMap { d =>
       val lowered = UTF8String.fromString(d.text).toLowerCase.toString
       graft.operators.Dedup.minhashSigOf(lowered, as, bs, shingleN,
           baseHash) match {
@@ -797,7 +815,7 @@ object Streaming {
     // tier rule single-sourced with the batch explode: 4 disjoint
     // pairs at radius <= 3, C(8,2) at <= 6 (requires <= 6 internally)
     val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
-    val bandRows = ds.flatMap { d =>
+    val bandRows = installed(ds).flatMap { d =>
       if (d.text == null) Iterator.empty
       else {
         val lowered = UTF8String.fromString(d.text).toLowerCase.toString
@@ -848,7 +866,7 @@ object Streaming {
       maxBucket: Int = Int.MaxValue): Dataset[BandVerdict] = {
     import ds.sparkSession.implicits._
     val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
-    val bandRows = ds.flatMap { case (did, tsUs, sig) =>
+    val bandRows = installed(ds).flatMap { case (did, tsUs, sig) =>
       combos.iterator.zipWithIndex.map { case ((i, j), idx) =>
         (graft.operators.Dedup.packBandKey(idx,
             graft.operators.Dedup.chunkPairVal(sig, i, j)),
@@ -877,7 +895,7 @@ object Streaming {
       : Dataset[(Long, Long, Int, Long, Long)] = {
     import ds.sparkSession.implicits._
     val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
-    val bandRows = ds.flatMap { case (did, tsUs, sig) =>
+    val bandRows = installed(ds).flatMap { case (did, tsUs, sig) =>
       combos.iterator.zipWithIndex.map { case ((i, j), idx) =>
         (graft.operators.Dedup.packBandKey(idx,
             graft.operators.Dedup.chunkPairVal(sig, i, j)),
@@ -906,7 +924,7 @@ object Streaming {
       : Dataset[(Long, Long, Int, Array[Long])] = {
     import ds.sparkSession.implicits._
     val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
-    val bandRows = ds.flatMap { case (did, tsUs, sig) =>
+    val bandRows = installed(ds).flatMap { case (did, tsUs, sig) =>
       combos.iterator.zipWithIndex.map { case ((i, j), idx) =>
         (graft.operators.Dedup.packBandKey(idx,
             graft.operators.Dedup.chunkPairVal(sig, i, j)),
@@ -1309,7 +1327,7 @@ object Streaming {
     */
   def combineLatest(ds: Dataset[FeatureEvent]): Dataset[CombinedEvent] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
+    installed(ds).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: String, rows: Iterator[FeatureEvent],
          state: GroupState[Map[String, Double]]) => {
@@ -1346,7 +1364,7 @@ object Streaming {
     // (ArrayDeque came back as ArrayBuffer), arrays are stable.
     implicit val stateEnc =
       org.apache.spark.sql.Encoders.kryo[Array[(Long, Double)]]
-    ds.groupByKey(_.key)
+    installed(ds).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: String, rows: Iterator[ValueEvent],
          state: GroupState[Array[(Long, Double)]]) => {
@@ -1419,7 +1437,7 @@ object Streaming {
     // and measured 8x/decade on dense probe windows)
     val stateEnc = org.apache.spark.sql.Encoders.kryo[Array[Long]]
     val zz = z.toLong * z
-    ds.groupByKey(_.key)
+    installed(ds).groupByKey(_.key)
       .flatMapGroupsWithState[Array[Long], AnomalyEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: String, rows: Iterator[CentsEvent],
@@ -1490,7 +1508,7 @@ object Streaming {
   def throttleElapsedStream(ds: Dataset[ThrottleEvent], windowUs: Long)
       : Dataset[ThrottleEvent] = {
     import ds.sparkSession.implicits._
-    ds.groupByKey(_.key)
+    installed(ds).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (_: String, rows: Iterator[ThrottleEvent],
          state: GroupState[Long]) => {
@@ -1541,7 +1559,7 @@ object Streaming {
         out.iterator
       }
     }
-    ds.groupByKey(_.key)
+    installed(ds).groupByKey(_.key)
       .transformWithState(processor, TimeMode.None(), OutputMode.Append())
   }
 
@@ -1557,7 +1575,7 @@ object Streaming {
     import ds.sparkSession.implicits._
     implicit val stateEnc =
       org.apache.spark.sql.Encoders.kryo[Array[(Long, Double, Boolean)]]
-    ds.groupByKey(_.key)
+    installed(ds).groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: String, rows: Iterator[SidedEvent],
          state: GroupState[Array[(Long, Double, Boolean)]]) => {
@@ -1598,7 +1616,7 @@ object Streaming {
   def l2BookStream(updates: Dataset[Update], depth: Int): Dataset[Snapshot] = {
     import updates.sparkSession.implicits._
     implicit val stateEnc = org.apache.spark.sql.Encoders.kryo[L2Book.BookState]
-    updates
+    installed(updates)
       .groupByKey(_.instrument)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (instrument: String, rows: Iterator[Update],

@@ -1265,4 +1265,174 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == Set((10L, 20L), (10L, 22L)))
     } finally q.stop()
   }
+
+  /** Commands of the processes the JVM started while `body` ran, from
+    * an in-process JFR recording of `jdk.ProcessStart`. */
+  private def processStarts(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val f = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
+    try {
+      rec.dump(f)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+        .map(_.getString("command"))
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(f)
+    }
+  }
+
+  /** A two-trigger AvailableNow drain of a JSON-lines directory through
+    * exactDedupStream into a foreachBatch collect sink, checkpointed
+    * under `root`; returns the rows it emitted. */
+  private def dedupDrain(root: java.nio.file.Path): Seq[String] = {
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    val in = java.nio.file.Files.createDirectories(root.resolve("in"))
+    val t0 = 1704067200000000L
+    Seq(Seq("a", "b", "a"), Seq("b", "c")).zipWithIndex.foreach { case (texts, f) =>
+      val lines = texts.zipWithIndex.map { case (t, i) =>
+        s"""{"ts_us": ${t0 + f * 1000L + i}, "text": "$t"}""" }
+      java.nio.file.Files.write(in.resolve(s"part-$f.json"),
+        lines.mkString("\n").getBytes("UTF-8"))
+      in.resolve(s"part-$f.json").toFile.setLastModified(1700000000000L + f * 1000L)
+    }
+    val src = spark.readStream.schema("ts_us LONG, text STRING")
+      .option("maxFilesPerTrigger", "1").json(in.toString)
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val q = Streaming.exactDedupStream(src, col("text"),
+        timestamp_micros(col("ts_us")), "1 hour")
+      .writeStream.outputMode("append")
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.collect().foreach(r => out.add(r.getString(1)))
+      }
+      .option("checkpointLocation", root.resolve("ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    import scala.jdk.CollectionConverters._
+    out.asScala.toSeq.sorted
+  }
+
+  test("checkpoint fork guard: a stateful drain starts no process, Spark's default manager does") {
+    val key = graft.streaming.LocalCheckpointFileManager.ConfKey
+    val prev = spark.conf.getOption(key)
+    def mentions(cmds: Seq[String], root: java.nio.file.Path) =
+      cmds.filter(_.contains(root.toString))
+    try {
+      spark.conf.unset(key)
+      val root = java.nio.file.Files.createTempDirectory("graft_fork_guard")
+      var rows = Seq.empty[String]
+      val cmds = processStarts { rows = dedupDrain(root) }
+      assert(rows == Seq("a", "b", "c"))
+      // no readlink at all, and nothing touching the checkpoint
+      assert(!cmds.exists(_.startsWith("readlink")), cmds.mkString("\n"))
+      assert(mentions(cmds, root).isEmpty, mentions(cmds, root).mkString("\n"))
+
+      // the control: the guard sees the forks of Spark's default
+      // FileContext manager when the user names it
+      spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
+        ".checkpointing.FileContextBasedCheckpointFileManager")
+      val root2 = java.nio.file.Files.createTempDirectory("graft_fork_control")
+      val cmds2 = processStarts { rows = dedupDrain(root2) }
+      assert(rows == Seq("a", "b", "c"))
+      assert(mentions(cmds2, root2).exists(_.startsWith("readlink")),
+        cmds2.mkString("\n"))
+      assert(mentions(cmds2, root2).exists(_.startsWith("chmod")),
+        cmds2.mkString("\n"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("checkpoint manager: builders install it, a user value stays, the scheme picks the backend") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    import graft.streaming.{BlockWriter, LocalCheckpointFileManager, NioLocalFileSystem}
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val key = LocalCheckpointFileManager.ConfKey
+    val graftClass = classOf[LocalCheckpointFileManager].getName
+    val prev = spark.conf.getOption(key)
+    val df = Seq((1L, "a")).toDF("ts_us", "text")
+    val builders: Seq[(String, () => Unit)] = Seq(
+      "exactDedupStream" -> (() => Streaming.exactDedupStream(df, col("text"),
+        timestamp_micros(col("ts_us")), "1 hour")),
+      "documentsStream" -> (() => Streaming.documentsStream(spark, dir)),
+      "l2BookStream" -> (() => Streaming.l2BookStream(MemoryStream[U].toDS(), 3)),
+      "vocabCountStream" -> (() => Streaming.vocabCountStream(df, col("text"))),
+      "BlockWriter.start" -> { () =>
+        val cat = new graft.sources.BlockCatalog(spark,
+          java.nio.file.Files.createTempDirectory("graft_install_bw").toString)
+        BlockWriter.start(MemoryStream[(Long, Double)].toDS().toDF("ts_us", "v"),
+          cat, "f", "k", "ts_us").stop()
+      })
+    try {
+      builders.foreach { case (name, build) =>
+        spark.conf.unset(key)
+        build()
+        assert(spark.conf.getOption(key).contains(graftClass), name)
+      }
+      // a value the user set, in the session or the Hadoop conf, stays
+      val userClass = classOf[FileSystemBasedCheckpointFileManager].getName
+      spark.conf.set(key, userClass)
+      builders.foreach { case (name, build) =>
+        build()
+        assert(spark.conf.getOption(key).contains(userClass), name)
+      }
+      spark.conf.unset(key)
+      val hadoop = spark.sparkContext.hadoopConfiguration
+      hadoop.set(key, userClass)
+      try {
+        builders.head._2()
+        assert(spark.conf.getOption(key).isEmpty)
+      } finally hadoop.unset(key)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+
+    def fsOf(fm: CheckpointFileManager): FileSystem =
+      classOf[FileSystemBasedCheckpointFileManager].getMethod("fs").invoke(fm)
+        .asInstanceOf[FileSystem]
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set(key, graftClass)
+    // file: paths, qualified or not: Spark's FileSystem-based manager
+    // over the NIO local filesystem, which the session never sees
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_fm")
+    for (p <- Seq(new Path(tmp.toUri), new Path(tmp.toString))) {
+      val fm = CheckpointFileManager.create(p, conf)
+      assert(fm.isInstanceOf[LocalCheckpointFileManager])
+      val d = fm.asInstanceOf[LocalCheckpointFileManager].delegate
+      assert(d.isInstanceOf[FileSystemBasedCheckpointFileManager])
+      assert(fsOf(d).isInstanceOf[NioLocalFileSystem])
+      assert(d.isLocal)
+    }
+    assert(!FileSystem.get(tmp.toUri, conf).isInstanceOf[NioLocalFileSystem])
+    // the delegate commits through temp file then rename, keeping .crc
+    val fm = CheckpointFileManager.create(new Path(tmp.toUri), conf)
+    val f = new Path(tmp.resolve("0").toUri)
+    val os = fm.createAtomic(f, overwriteIfPossible = false)
+    os.write("v1".getBytes("UTF-8"))
+    os.close()
+    assert(fm.exists(f))
+    val is = fm.open(f)
+    try assert(new String(is.readAllBytes(), "UTF-8") == "v1") finally is.close()
+    assert(java.nio.file.Files.exists(tmp.resolve(".0.crc")))
+    assert(fm.list(new Path(tmp.toUri)).map(_.getPath.getName).toSeq == Seq("0"))
+    fm.delete(f)
+    assert(!fm.exists(f))
+
+    // any other scheme: exactly the manager Spark itself picks
+    conf.set("fs.graftfake.impl", classOf[RawLocalFileSystem].getName)
+    conf.setBoolean("fs.graftfake.impl.disable.cache", true)
+    val fake = new Path("graftfake:///tmp/graft_ckpt_fake")
+    val sparkConf = new Configuration(conf)
+    sparkConf.unset(key)
+    val want = CheckpointFileManager.create(fake, sparkConf)
+    val got = CheckpointFileManager.create(fake, conf)
+      .asInstanceOf[LocalCheckpointFileManager].delegate
+    assert(got.getClass == want.getClass)
+    assert(fsOf(got).getClass == fsOf(want).getClass)
+    assert(!fsOf(got).isInstanceOf[NioLocalFileSystem])
+  }
 }
