@@ -1,6 +1,8 @@
 package graft.consumers
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
+import org.apache.spark.sql.functions.col
 
 /** Backtest loop + execution simulator (svoe `backtester/loop/loop.py:
   * 49-77`, `execution/execution_simulator.py:18-181`, §3.3): drive a
@@ -67,10 +69,21 @@ object Backtester {
     sim.result(lastPrice)
   }
 
-  /** Sequential backtest over the whole frame in ts order. */
+  /** The replay order: ts, then every other orderable column in schema
+    * order. Rows sharing a ts would otherwise replay in whatever order
+    * the input partitions deliver them, and the portfolio path (trade
+    * count included) would depend on partitioning. Rows that tie on
+    * every orderable column differ at most in unorderable ones (maps). */
+  private def replayOrder(fls: DataFrame, tsCol: String): Seq[Column] =
+    col(tsCol) +: fls.schema.fields.toSeq
+      .filter(f => f.name != tsCol && RowOrdering.isOrderable(f.dataType))
+      .map(f => fls.col(s"`${f.name.replace("`", "``")}`"))
+
+  /** Sequential backtest over the whole frame in [[replayOrder]]: the
+    * result does not depend on how `fls` is partitioned. */
   def run(fls: DataFrame, tsCol: String, priceCol: String, strategy: Strategy,
       initialCash: Double = 0.0, commissionRate: Double = 0.001): Result = {
-    val ordered = fls.orderBy(tsCol)
+    val ordered = fls.orderBy(replayOrder(fls, tsCol): _*)
     val tsIdx = fls.columns.indexOf(tsCol)
     val priceIdx = fls.columns.indexOf(priceCol)
     import scala.jdk.CollectionConverters._
@@ -100,7 +113,6 @@ object Backtester {
       initialCash: Double = 0.0, commissionRate: Double = 0.001): DataFrame = {
     val spark = fls.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     fls.filter(col(priceCol).isNotNull)
       .select(col(keyCol).cast("string").as("k"),
         col(tsCol).cast("long").as("ts"), col(seqCol).cast("long").as("seq"),
@@ -132,11 +144,12 @@ object Backtester {
   def runSharded(fls: DataFrame, tsCol: String, priceCol: String,
       strategy: Strategy, shards: Int, initialCash: Double = 0.0,
       commissionRate: Double = 0.001): Seq[Result] = {
-    import org.apache.spark.sql.functions.col
     val tsIdx = fls.columns.indexOf(tsCol)
     val priceIdx = fls.columns.indexOf(priceCol)
+    // equal ts values land in one range partition, so the within-
+    // partition replay order is the sequential loop's
     fls.repartitionByRange(shards, col(tsCol))
-      .sortWithinPartitions(tsCol)
+      .sortWithinPartitions(replayOrder(fls, tsCol): _*)
       .rdd
       .mapPartitions(rows => Iterator.single(
         runLoop(rows, tsIdx, priceIdx, strategy, initialCash, commissionRate)))

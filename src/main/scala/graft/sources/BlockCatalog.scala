@@ -103,26 +103,23 @@ class BlockCatalog(val spark: SparkSession, root: String) {
     v
   }
 
-  /** Names + sizes of every file under the meta log dir — the
+  /** Names + sizes of every file in the (flat) meta log dir — the
     * append-only contract means any commit, from any process, changes
     * this set (new uniquely-named part files), so an unchanged listing
     * proves the cached collected log is current. One driver-side
-    * filesystem call instead of a mergeSchema parquet read + Spark job. */
+    * `listStatus` instead of a mergeSchema parquet read + Spark job.
+    * It reads names and lengths only: `listFiles` would build a
+    * `LocatedFileStatus` per file, which loads owner and permissions,
+    * and without Hadoop's native library each load forks `ls -ld`. */
   private def logFingerprint: String =
     try {
       val p = new org.apache.hadoop.fs.Path(metaPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) "absent"
-      else {
-        val it = fs.listFiles(p, true)
-        val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val s = it.next()
-          parts += s"${s.getPath.getName}:${s.getLen}"
-        }
-        parts.sorted.mkString(",")
-      }
-    } catch { case _: java.io.IOException => s"unlistable-${System.nanoTime()}" }
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .map(s => s"${s.getPath.getName}:${s.getLen}").sorted.mkString(",")
+    } catch {
+      case _: java.io.FileNotFoundException => "absent"
+      case _: java.io.IOException => s"unlistable-${System.nanoTime()}"
+    }
 
   /** One collected log event — the full meta row (r16: the stats ride
     * along so [[metaAsOf]] can be served from the collected cache with

@@ -26,9 +26,13 @@ import graft.sources.BlockCatalog
   * at-least-once via content-hash idempotency) and compact post hoc
   * with `BlockCatalog.compactSmallBlocks`.
   *
-  * `start` installs [[LocalCheckpointFileManager]] on the frame's
-  * session before the query starts. The install is session-wide and
-  * never overrides a checkpoint manager the user set.
+  * `start` calls [[StreamingSession.install]] on the frame's session
+  * before the query starts. That sets [[LocalCheckpointFileManager]]
+  * as the checkpoint manager and `spark.sql.artifact.isolation.enabled`
+  * to `false`, so the sink's query checkpoints without process forks
+  * and reuses the generated classes earlier queries compiled. The
+  * install is session-wide and never overrides a value the user set
+  * for either key.
   */
 object BlockWriter {
 
@@ -46,7 +50,7 @@ object BlockWriter {
       "would drop the last buffered rows when the drain stops; use " +
       "minRowsPerBlock = 0 and compact afterwards with " +
       "BlockCatalog.compactSmallBlocks")
-    LocalCheckpointFileManager.install(df.sparkSession)
+    StreamingSession.install(df.sparkSession)
     val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var buffered = 0L
     val base = df.writeStream

@@ -5,7 +5,6 @@ import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
@@ -31,7 +30,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *    theirs.
   *
   * Spark instantiates the class named by
-  * `spark.sql.streaming.checkpointFileManagerClass`; [[LocalCheckpointFileManager.install]]
+  * `spark.sql.streaming.checkpointFileManagerClass`; [[StreamingSession.install]]
   * sets that conf, and every public streaming entry point of
   * [[Streaming]] and [[BlockWriter]] calls it before a query starts.
   */
@@ -67,16 +66,6 @@ object LocalCheckpointFileManager {
 
   /** Spark's own setting naming the checkpoint manager class. */
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  /** Make `spark`'s streaming queries use this manager. Idempotent and
-    * session-wide: it sets the session conf only when neither the
-    * session conf nor the base Hadoop conf names a manager, so a value
-    * the user set is never overridden. A query captures the session
-    * conf when it starts, so the call must precede `.start()`. */
-  def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ConfKey).isEmpty &&
-        spark.sparkContext.hadoopConfiguration.get(ConfKey) == null)
-      spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
 
   private def localScheme(path: Path, conf: Configuration): Boolean =
     Option(path.toUri.getScheme)

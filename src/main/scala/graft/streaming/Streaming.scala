@@ -14,11 +14,18 @@ import graft.operators.L2Book.{Snapshot, Update}
   * runtime. Watermarks give strictly more than the reference's
   * "input must be ts-sorted" assumption.
   *
-  * Every public source, builder and drain here first installs
-  * [[LocalCheckpointFileManager]] on its session, so the offset, commit
-  * and state-store files of a query started on its result are written
-  * without process forks. The install is session-wide and never
-  * overrides a checkpoint manager the user set.
+  * Every public source, builder and drain here first calls
+  * [[StreamingSession.install]] on its session. It applies two
+  * settings:
+  *  - [[LocalCheckpointFileManager]] as the checkpoint manager, so the
+  *    offset, commit and state-store files of a query started on the
+  *    result are written without process forks;
+  *  - `spark.sql.artifact.isolation.enabled=false`, so every query's
+  *    tasks share the executor's default classloader and Spark's
+  *    codegen cache serves one query's generated classes to the next
+  *    instead of recompiling them.
+  * The install is session-wide and never overrides a value the user
+  * set for either key.
   */
 object Streaming {
 
@@ -43,7 +50,7 @@ object Streaming {
     * and Tables.normalizeTs restores the nanos-Long contract on top,
     * whatever the footer said. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    LocalCheckpointFileManager.install(spark)
+    StreamingSession.install(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val onDisk = spark.read.parquet(s"$dir/events.parquet").schema
     // FileStreamSource takes a directory; the glob filter narrows it to
@@ -151,7 +158,7 @@ object Streaming {
   /** Streaming source replaying the documents parquet — the shape of a
     * streaming crawl ingest (glob-narrowed like [[eventsStream]]). */
   def documentsStream(spark: SparkSession, dir: String): DataFrame = {
-    LocalCheckpointFileManager.install(spark)
+    StreamingSession.install(spark)
     spark.readStream
       .schema(DocumentsSchema)
       .option("pathGlobFilter", "documents.parquet")
@@ -168,7 +175,7 @@ object Streaming {
     * on-the-fly curation path. */
   def jsonlStream(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    LocalCheckpointFileManager.install(spark)
+    StreamingSession.install(spark)
     val withCorrupt =
       if (schema.fieldNames.contains("_corrupt_record")) schema
       else schema.add("_corrupt_record",
@@ -475,7 +482,7 @@ object Streaming {
       // corpus drain at sf0.1 before the r17 bound (SCALE.md r17
       // crossover table).
       statePartitions: Option[Int] = None): DataFrame = {
-    LocalCheckpointFileManager.install(df.sparkSession)
+    StreamingSession.install(df.sparkSession)
     // rocksdbState: route the query's keyed state through the RocksDB
     // provider — REQUIRED when state cardinality is corpus-sized (the
     // boilerplate df pass holds one entry per DISTINCT PASSAGE: ~28M at
@@ -629,7 +636,7 @@ object Streaming {
       noDataBatch: Boolean = true,
       statePartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
-    LocalCheckpointFileManager.install(spark)
+    StreamingSession.install(spark)
     val root = java.nio.file.Files.createTempDirectory("graft_bdrain_")
     sweepOnExit(root)
     val path = root.resolve("tbl").toString
@@ -707,11 +714,12 @@ object Streaming {
     drainDirs.add(p)
   }
 
-  /** `ds`, after installing [[LocalCheckpointFileManager]] on its
-    * session: every builder here passes its input through this, so a
-    * query started on the result checkpoints without process forks. */
+  /** `ds`, after [[StreamingSession.install]] on its session: every
+    * builder here passes its input through this, so a query started on
+    * the result checkpoints without process forks and shares the
+    * session's executor classloader, and with it the codegen cache. */
   private def installed[T](ds: Dataset[T]): Dataset[T] = {
-    LocalCheckpointFileManager.install(ds.sparkSession)
+    StreamingSession.install(ds.sparkSession)
     ds
   }
 

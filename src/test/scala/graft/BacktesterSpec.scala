@@ -468,4 +468,26 @@ class BacktesterSpec extends AnyFunSuite {
       Seq("f1", "f2"), "px")
     assert(strat != null)
   }
+
+  test("sequential and sharded loops replay rows sharing a ts in one order, whatever the partitioning") {
+    // 1,000 pairs of rows sharing a ts: a buy and a flat target at
+    // different prices. Ordered by ts alone, the pair's order followed
+    // the input partitioning (2000/1531/1519/1490 trades under 1/3/7/13
+    // partitions); ties now break on the remaining columns.
+    import spark.implicits._
+    val rows = (0 until 1000).flatMap { i =>
+      Seq((i.toLong, 100.0 + i % 7, 1.0), (i.toLong, 100.0 + (i * 3) % 5, 0.0))
+    }
+    val strat: Backtester.Strategy = r => r.getDouble(2)
+    val sim = new Backtester.Simulator(0.0, 0.001)
+    import Ordering.Double.TotalOrdering
+    rows.sorted.foreach { case (ts, price, target) => sim.step(ts, price, target) }
+    val fls = rows.toDF("ts_us", "price", "target")
+    val nTrades = Seq(1, 3, 7, 13).flatMap { n =>
+      Seq(Backtester.run(fls.repartition(n), "ts_us", "price", strat).nTrades,
+        Backtester.runSharded(fls.repartition(n), "ts_us", "price", strat,
+          shards = 1).head.nTrades)
+    }
+    assert(nTrades.forall(_ == sim.nTrades), nTrades.mkString("/"))
+  }
 }

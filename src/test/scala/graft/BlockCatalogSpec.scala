@@ -255,4 +255,20 @@ class BlockCatalogSpec extends AnyFunSuite {
     assert(fresh.scanAll("feat", "T").count() == 10)
     assert(!fresh.write(df1, "feat", "T", "ts_us")) // dedup still sees the row
   }
+
+  test("meta-log fingerprint is fork-free: write, scan and a cached scan start no ls") {
+    // every catalog read lists the meta log to check its collected-log
+    // cache; a listing that loads owners and permissions forks one
+    // `ls -ld` per meta file without Hadoop's native library
+    val root = Files.createTempDirectory("graft_fp_forks").toString
+    val cat = new BlockCatalog(spark, root)
+    val df = (0 until 50).map(i => (day0 + i * 60000000L, i.toDouble))
+      .toDF("ts_us", "v")
+    val cmds = ForkProbe.processStarts {
+      assert(cat.write(df, "feat", "K", "ts_us"))
+      assert(cat.scan("feat", "K", day0, day0 + 49 * 60000000L).count() == 50)
+      assert(cat.scan("feat", "K", day0, day0 + 9 * 60000000L).count() == 10)
+    }
+    assert(!cmds.exists(_.startsWith("ls")), cmds.mkString("\n"))
+  }
 }

@@ -1266,25 +1266,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  /** Commands of the processes the JVM started while `body` ran, from
-    * an in-process JFR recording of `jdk.ProcessStart`. */
-  private def processStarts(body: => Unit): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
-    try body finally rec.stop()
-    val f = java.nio.file.Files.createTempFile("graft_forks", ".jfr")
-    try {
-      rec.dump(f)
-      jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
-        .map(_.getString("command"))
-    } finally {
-      rec.close()
-      java.nio.file.Files.deleteIfExists(f)
-    }
-  }
-
   /** A two-trigger AvailableNow drain of a JSON-lines directory through
     * exactDedupStream into a foreachBatch collect sink, checkpointed
     * under `root`; returns the rows it emitted. */
@@ -1325,7 +1306,7 @@ class StreamingSpec extends AnyFunSuite {
       spark.conf.unset(key)
       val root = java.nio.file.Files.createTempDirectory("graft_fork_guard")
       var rows = Seq.empty[String]
-      val cmds = processStarts { rows = dedupDrain(root) }
+      val cmds = ForkProbe.processStarts { rows = dedupDrain(root) }
       assert(rows == Seq("a", "b", "c"))
       // no readlink at all, and nothing touching the checkpoint
       assert(!cmds.exists(_.startsWith("readlink")), cmds.mkString("\n"))
@@ -1336,7 +1317,7 @@ class StreamingSpec extends AnyFunSuite {
       spark.conf.set(key, "org.apache.spark.sql.execution.streaming" +
         ".checkpointing.FileContextBasedCheckpointFileManager")
       val root2 = java.nio.file.Files.createTempDirectory("graft_fork_control")
-      val cmds2 = processStarts { rows = dedupDrain(root2) }
+      val cmds2 = ForkProbe.processStarts { rows = dedupDrain(root2) }
       assert(rows == Seq("a", "b", "c"))
       assert(mentions(cmds2, root2).exists(_.startsWith("readlink")),
         cmds2.mkString("\n"))
@@ -1345,19 +1326,14 @@ class StreamingSpec extends AnyFunSuite {
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("checkpoint manager: builders install it, a user value stays, the scheme picks the backend") {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
-    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+  /** One source, builder and sink of each kind, by name: each must
+    * call the streaming install. */
+  private def installingBuilders: Seq[(String, () => Unit)] = {
     import org.apache.spark.sql.functions.{col, timestamp_micros}
-    import graft.streaming.{BlockWriter, LocalCheckpointFileManager, NioLocalFileSystem}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = LocalCheckpointFileManager.ConfKey
-    val graftClass = classOf[LocalCheckpointFileManager].getName
-    val prev = spark.conf.getOption(key)
     val df = Seq((1L, "a")).toDF("ts_us", "text")
-    val builders: Seq[(String, () => Unit)] = Seq(
+    Seq(
       "exactDedupStream" -> (() => Streaming.exactDedupStream(df, col("text"),
         timestamp_micros(col("ts_us")), "1 hour")),
       "documentsStream" -> (() => Streaming.documentsStream(spark, dir)),
@@ -1366,9 +1342,21 @@ class StreamingSpec extends AnyFunSuite {
       "BlockWriter.start" -> { () =>
         val cat = new graft.sources.BlockCatalog(spark,
           java.nio.file.Files.createTempDirectory("graft_install_bw").toString)
-        BlockWriter.start(MemoryStream[(Long, Double)].toDS().toDF("ts_us", "v"),
+        graft.streaming.BlockWriter.start(
+          MemoryStream[(Long, Double)].toDS().toDF("ts_us", "v"),
           cat, "f", "k", "ts_us").stop()
       })
+  }
+
+  test("checkpoint manager: builders install it, a user value stays, the scheme picks the backend") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+    import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+    import graft.streaming.{LocalCheckpointFileManager, NioLocalFileSystem}
+    val key = LocalCheckpointFileManager.ConfKey
+    val graftClass = classOf[LocalCheckpointFileManager].getName
+    val prev = spark.conf.getOption(key)
+    val builders = installingBuilders
     try {
       builders.foreach { case (name, build) =>
         spark.conf.unset(key)
@@ -1434,5 +1422,41 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.getClass == want.getClass)
     assert(fsOf(got).getClass == fsOf(want).getClass)
     assert(!fsOf(got).isInstanceOf[NioLocalFileSystem])
+  }
+
+  test("codegen cache: a second streaming query reuses the first one's generated classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    // start from an empty cache, so the first drain compiles its classes
+    // whatever earlier specs left there
+    val cacheOf = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cacheOf.setAccessible(true)
+    val cache = cacheOf.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    def compiles(body: => Unit): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val runs = Seq("graft_codegen_a", "graft_codegen_b").map { name =>
+      val root = java.nio.file.Files.createTempDirectory(name)
+      compiles(assert(dedupDrain(root) == Seq("a", "b", "c")))
+    }
+    // each query runs on its own session clone; with per-clone executor
+    // classloaders the second drain recompiles every class
+    assert(runs.head > 0 && runs(1) * 2 < runs.head, runs.mkString(" then "))
+  }
+
+  test("streaming install: a user-set artifact isolation value survives every builder") {
+    val key = graft.streaming.StreamingSession.IsolationKey
+    val prev = spark.conf.getOption(key)
+    try installingBuilders.foreach { case (name, build) =>
+      spark.conf.unset(key)
+      build()
+      assert(spark.conf.getOption(key).contains("false"), name)
+      spark.conf.set(key, "true")
+      build()
+      assert(spark.conf.getOption(key).contains("true"), name)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
