@@ -58,7 +58,7 @@ object SparkEntry {
     allDefs.map { case (k, d) => k -> d.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    allDefs.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
+    allDefs.map { case (k, d) => k -> d.oracle }
 }

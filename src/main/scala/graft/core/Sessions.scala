@@ -2,7 +2,13 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Stable tokens for SESSION-SCOPED caches (r14 ADVICE): keying a
+/** Session setup and session-scoped state, in one place.
+  *
+  * [[local]] builds the local session every main, tool and test suite
+  * runs on, and [[withConfs]] is the one way code here flips a session
+  * conf for the span of a call.
+  *
+  * Stable tokens for SESSION-SCOPED caches (r14 ADVICE): keying a
   * memo on `System.identityHashCode(spark)` has two failure modes —
   * the hash can collide (a recycled/colliding identity would hand a
   * new session a persisted DataFrame or temp-table path bound to a
@@ -15,6 +21,44 @@ import org.apache.spark.sql.SparkSession
   * long-lived JVMs (notebook servers, Verify/Bench loops across
   * sessions) flat. */
 object Sessions {
+
+  /** The local session on `cores` threads: as many shuffle partitions
+    * as cores (not Spark's 200: at this data scale extra partitions are
+    * pure scheduling overhead), UTC session time, no UI, WARN logs.
+    * Adaptive execution stays at Spark 4's default (on). Returns the
+    * active session, with these runtime confs applied, when one
+    * already exists in the JVM. */
+  def local(cores: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Run `body` with `pairs` set on the session, then restore every
+    * key to its state before the call: a key that held a value gets it
+    * back, a key that was never set is unset again. The previous state
+    * comes from `getAll`, which lists only keys that were set;
+    * `getOption` would report Spark's default for an unset key, and
+    * writing that back would leave the default behind as an explicit
+    * setting.
+    *
+    * The flip is session-wide for `body`'s span: a query started
+    * concurrently in the same session picks it up too. Streaming
+    * queries capture the session conf when they start. */
+  def withConfs[T](spark: SparkSession, pairs: Seq[(String, String)])(
+      body: => T): T = {
+    val prev = spark.conf.getAll
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally pairs.foreach { case (k, _) =>
+      prev.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 
   private val live = new java.util.concurrent.ConcurrentHashMap[
     String, java.lang.ref.WeakReference[SparkSession]]

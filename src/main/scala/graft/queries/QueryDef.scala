@@ -2,9 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One verifiable operator query: a Spark build function plus (when the
-  * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle SQL
-  * over the same parquet tables. The driver hash-compares the two at
+/** One verifiable operator query: a Spark build function plus an
+  * equivalent DuckDB oracle SQL over the same parquet tables. The driver hash-compares the two at
   * sf0.01 (column names must match exactly; see Verify.scala).
   *
   * Determinism rules used throughout (so exact hash compare passes):
@@ -17,12 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class QueryDef(
     build: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QueryDef {
   def apply(oracleSql: String)(build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(build, Some(oracleSql))
-
-  def noOracle(build: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(build, None)
+    QueryDef(build, oracleSql)
 }

@@ -131,16 +131,6 @@ class BlockCatalog(val spark: SparkSession, root: String) {
 
   private var logCache: Option[(String, Seq[LogRow])] = None
 
-  /** Meta-log READ instrumentation (r16 probe surface): cache-miss
-    * collects of the merged log — (count, nanos). The CatalogMetaProbe
-    * separates this from data read/write wall. */
-  private var metaReadCount = 0L
-  private var metaReadNanos = 0L
-  private[graft] def metaReadStats: (Long, Long) = (metaReadCount, metaReadNanos)
-  private[graft] def resetMetaReadStats(): Unit = {
-    metaReadCount = 0L; metaReadNanos = 0L
-  }
-
   /** Advance the collected-log cache IN PLACE after one of our own
     * meta appends (r16): the appended rows are known exactly, so the
     * next read needs no mergeSchema re-collect — the fingerprint is
@@ -150,16 +140,9 @@ class BlockCatalog(val spark: SparkSession, root: String) {
     * contract): a FOREIGN append racing into the gap between our
     * parquet append and the listing would be fingerprint-absorbed
     * with its rows missing — the same race the contract already
-    * excludes. Cold cache (None) stays cold: nothing to advance.
-    * `advanceLogCache=false` restores the r15 invalidate-on-append
-    * behavior (the probe's control arm). */
-  private[graft] var advanceLogCache: Boolean = true
+    * excludes. Cold cache (None) stays cold: nothing to advance. */
   private def noteAppended(rows: Seq[LogRow]): Unit =
-    logCache = logCache match {
-      case Some((_, old)) if advanceLogCache =>
-        Some((logFingerprint, old ++ rows))
-      case _ => None
-    }
+    logCache = logCache.map { case (_, old) => (logFingerprint, old ++ rows) }
 
   /** The meta log COLLECTED, cached per listing fingerprint. The log
     * is metadata-sized by contract (one row per block event), so a
@@ -182,7 +165,6 @@ class BlockCatalog(val spark: SparkSession, root: String) {
         logCache = Some((fp, Seq.empty))
         Seq.empty
       case _ =>
-        val t0 = System.nanoTime()
         val log = metaLog
         val rows: Seq[LogRow] =
           if (!log.columns.contains("hash")) Seq.empty
@@ -197,8 +179,6 @@ class BlockCatalog(val spark: SparkSession, root: String) {
                 r.getString(2), r.getString(3), r.getLong(4),
                 r.getLong(5), r.getLong(6), r.getLong(7)))
           }
-        metaReadCount += 1
-        metaReadNanos += System.nanoTime() - t0
         logCache = Some((fp, rows))
         rows
     }

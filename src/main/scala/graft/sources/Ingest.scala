@@ -57,19 +57,12 @@ object Ingest {
     try {
       val n = normalized.count()
       val parts = math.max(1L, (n + rowsPerBlock - 1) / rowsPerBlock).toInt
-      val prev = spark.conf.getOption("spark.sql.files.maxRecordsPerFile")
-      spark.conf.set("spark.sql.files.maxRecordsPerFile", rowsPerBlock.toString)
-      try {
+      graft.core.Sessions.withConfs(spark,
+          Seq("spark.sql.files.maxRecordsPerFile" -> rowsPerBlock.toString)) {
         val blocks = normalized
           .repartitionByRange(parts, col(tsUs))
           .sortWithinPartitions(col(tsUs))
-        val stored = catalog.write(blocks, definition, key, tsUs)
-        Report(n, stored)
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set("spark.sql.files.maxRecordsPerFile", v)
-          case None => spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-        }
+        Report(n, catalog.write(blocks, definition, key, tsUs))
       }
     } finally normalized.unpersist()
   }

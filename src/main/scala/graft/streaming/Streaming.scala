@@ -482,26 +482,19 @@ object Streaming {
       // corpus drain at sf0.1 before the r17 bound (SCALE.md r17
       // crossover table).
       statePartitions: Option[Int] = None): DataFrame = {
-    StreamingSession.install(df.sparkSession)
-    // rocksdbState: route the query's keyed state through the RocksDB
-    // provider — REQUIRED when state cardinality is corpus-sized (the
-    // boilerplate df pass holds one entry per DISTINCT PASSAGE: ~28M at
-    // the sf100eq probe OOM'd the default memory-backed store at 16g;
-    // RocksDB spills to disk and is the production answer for big
-    // streaming state — and it is also FASTER there: 67.1 s vs 85.6 s
-    // in-memory at the 4M-entry band-state measurement, SCALE.md r14).
-    withStateStore(df.sparkSession, rocksdbState) {
-      withDrainConfs(df.sparkSession, noDataBatch, statePartitions) {
-        runAvailableNowInner(df, outputMode)
-      }
+    val saveMode = if (outputMode == "complete") "overwrite" else "append"
+    val out = drain(df, "graft_stream_", outputMode,
+        drainConfs(df.sparkSession, rocksdbState, noDataBatch, statePartitions)) {
+      (batch, out) => batch.write.mode(saveMode).parquet(out)
     }
+    readBack(df.sparkSession, out, df.schema)()
   }
 
   /** Scale-ADAPTIVE state-shard bound for CORPUS-cardinality drains
     * (r17; the guide §2.2 partition-sizing rule applied to streaming
     * state, which AQE cannot coalesce): shards =
     * clamp(ceil(inputBytes / targetBytesPerShard), floor, session
-    * shuffle partitions — the cap withDrainConfs already enforces).
+    * shuffle partitions — the cap drainConfs already enforces).
     * Streaming state shards are FIXED at query start by the
     * checkpoint, and every shard pays store load + commit on every
     * trigger (measured linear in shard count, r16; still the dominant
@@ -532,77 +525,54 @@ object Streaming {
       } catch { case _: java.io.IOException => return None } // unknown: keep default
     val n = math.max(floor.toLong,
       (bytes + targetBytesPerShard - 1) / targetBytesPerShard)
-    Some(math.min(n, Int.MaxValue.toLong).toInt) // withDrainConfs caps at session
+    Some(math.min(n, Int.MaxValue.toLong).toInt) // drainConfs caps at session
   }
 
-  /** The ONE session-conf flip behind every drain helper (r14 ADVICE:
-    * three inline copies could drift): run `body` with the streaming
-    * state-store provider set to RocksDB, restoring the previous value
-    * after. The flip is SESSION-GLOBAL for `body`'s duration — a
-    * streaming query STARTED concurrently in the same session would
-    * silently pick it up too. Graft's own drains run serialized
-    * (Verify/Bench); a production caller owning concurrent streams
-    * should instead set the provider in the session config it builds
-    * each query with. */
-  private def withStateStore[T](spark: SparkSession, rocksdb: Boolean)(
-      body: => T): T =
-    if (!rocksdb) body
-    else {
-      // changelog checkpointing (r17, guide §5/§1.1 measured): by
-      // default EVERY RocksDB commit uploads a full store snapshot per
-      // shard per trigger — measured 43-51 s of summed per-shard commit
-      // time per data batch on the maintenance drain (32 shards) vs
-      // 8-15 s with changelog mode, which writes only the trigger's
-      // delta and leaves snapshotting to background maintenance.
-      // Result-neutral by construction: only the CHECKPOINT FORMAT
-      // changes (state contents, eviction, and emitted rows are
-      // byte-identical; every drain here starts from a fresh checkpoint
-      // so no cross-format restore exists). Wall on the graded pair:
-      // mm_phash_maintenance_stream 15.0 -> 9.6 s warm (DrainProfile
-      // A/B, 3 reps each arm).
-      val pairs = Seq(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-          "true")
-      val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
-  /** The [[withStateStore]] discipline for the two per-drain session
-    * confs the r16 optimization round introduced (see
-    * [[runAvailableNow]]'s parameter scaladoc for when each is
-    * result-neutral): both are captured by the streaming query at
-    * START (StreamExecution clones the session), so setting them
-    * around the drain body and restoring after scopes them to this
-    * drain. Same serialized-drains caveat as withStateStore. */
-  private def withDrainConfs[T](spark: SparkSession, noDataBatch: Boolean,
-      statePartitions: Option[Int])(body: => T): T = {
-    // statePartitions is the caller's KEY-CARDINALITY bound; never
-    // EXCEED the session's own shuffle-partition setting with it (a
-    // low-core session would otherwise get MORE state shards than its
-    // default — the bound is a ceiling on useful shards, not a floor).
+  /** The session confs one drain runs under (see [[runAvailableNow]]'s
+    * parameter comments for when each is result-neutral). A streaming
+    * query captures them when it starts (StreamExecution clones the
+    * session), so [[drain]] sets them around its query through
+    * [[graft.core.Sessions.withConfs]] and restores them after.
+    *
+    *  - `rocksdbState`: keyed state goes through the RocksDB provider —
+    *    REQUIRED when state cardinality is corpus-sized (the
+    *    boilerplate df pass holds one entry per DISTINCT PASSAGE: ~28M
+    *    at the sf100eq probe OOM'd the default memory-backed store at
+    *    16g; RocksDB spills to disk and is also FASTER there: 67.1 s vs
+    *    85.6 s in-memory at the 4M-entry band-state measurement,
+    *    SCALE.md r14) — with changelog checkpointing (r17): by default
+    *    EVERY RocksDB commit uploads a full store snapshot per shard
+    *    per trigger — measured 43-51 s of summed per-shard commit time
+    *    per data batch on the maintenance drain (32 shards) vs 8-15 s
+    *    with changelog mode, which writes only the trigger's delta and
+    *    leaves snapshotting to background maintenance. Result-neutral
+    *    by construction: only the CHECKPOINT FORMAT changes, and every
+    *    drain starts from a fresh checkpoint. Wall on the graded pair:
+    *    mm_phash_maintenance_stream 15.0 -> 9.6 s warm.
+    *  - `noDataBatch = false` turns off the engine's watermark-commit
+    *    batch.
+    *  - `statePartitions` is the caller's KEY-CARDINALITY bound; it
+    *    never EXCEEDS the session's own shuffle-partition setting (a
+    *    low-core session would otherwise get MORE state shards than its
+    *    default — the bound is a ceiling on useful shards, not a
+    *    floor).
+    *
+    * Same caveat as every session-wide flip: a production caller
+    * running concurrent streams in one session should set these in
+    * the session it builds each query with. */
+  private def drainConfs(spark: SparkSession, rocksdbState: Boolean,
+      noDataBatch: Boolean, statePartitions: Option[Int]): Seq[(String, String)] = {
     val sessionShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pairs =
-      (if (noDataBatch) Nil
-       else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) ++
-      statePartitions.map(n =>
-        "spark.sql.shuffle.partitions" -> math.min(n, sessionShuffle).toString)
-    if (pairs.isEmpty) body
-    else {
-      val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
+    (if (!rocksdbState) Nil
+     else Seq(
+       "spark.sql.streaming.stateStore.providerClass" ->
+         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
+         "true")) ++
+    (if (noDataBatch) Nil
+     else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) ++
+    statePartitions.map(n =>
+      "spark.sql.shuffle.partitions" -> math.min(n, sessionShuffle).toString)
   }
 
   /** [[runAvailableNow]] whose drain lands in a [[graft.sources
@@ -636,55 +606,53 @@ object Streaming {
       noDataBatch: Boolean = true,
       statePartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
+    val out = drain(df, "graft_bdrain_", "complete",
+        drainConfs(spark, rocksdbState, noDataBatch, statePartitions)) {
+      (batch, out) => graft.sources.BucketedStore.write(batch, table, out,
+        keys, buckets, sortCols)
+    }
+    readBack(spark, out, df.schema)(graft.sources.BucketedStore.read(spark, table))
+  }
+
+  /** The one `Trigger.AvailableNow` drain behind [[runAvailableNow]],
+    * [[runAvailableNowBucketed]], [[hashDedupIncrementalStream]] and
+    * [[hashDedupMaintStream]]: installs the streaming session settings,
+    * makes a fresh `<prefix>` temp root, runs `df` to exhaustion under
+    * `confs` with its checkpoint at `<root>/ckpt`, and hands every
+    * micro-batch to `sink` together with the output path `<root>/out`,
+    * which it returns.
+    *
+    * The drained output must outlive this call (the returned frame
+    * reads it lazily), so reclamation is a JVM-exit hook — without it
+    * every drain leaks its checkpoint + output on disk FOREVER across
+    * JVMs (found as 24 GB of orphaned graft_stream_ dirs after a probe
+    * campaign; at probe scale a single drain is gigabytes). */
+  private def drain(df: DataFrame, prefix: String, outputMode: String,
+      confs: Seq[(String, String)])(sink: (DataFrame, String) => Unit): String = {
+    val spark = df.sparkSession
     StreamingSession.install(spark)
-    val root = java.nio.file.Files.createTempDirectory("graft_bdrain_")
+    val root = java.nio.file.Files.createTempDirectory(prefix)
     sweepOnExit(root)
-    val path = root.resolve("tbl").toString
-    withStateStore(spark, rocksdbState) {
-      withDrainConfs(spark, noDataBatch, statePartitions) {
-      val q = df.writeStream.outputMode("complete")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.sources.BucketedStore.write(batch, table, path, keys,
-            buckets, sortCols)
-        }
+    val out = root.resolve("out").toString
+    graft.core.Sessions.withConfs(spark, confs) {
+      df.writeStream.outputMode(outputMode)
+        .foreachBatch { (batch: DataFrame, _: Long) => sink(batch, out) }
         .option("checkpointLocation", root.resolve("ckpt").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-      }
+        .awaitTermination()
     }
-    if (spark.catalog.tableExists(table))
-      graft.sources.BucketedStore.read(spark, table)
-    else // a stream that emitted nothing: empty frame, same schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        df.schema)
+    out
   }
 
-  private def runAvailableNowInner(df: DataFrame, outputMode: String): DataFrame = {
-    val spark = df.sparkSession
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_")
-    // the drained parquet must outlive this call (the returned frame
-    // reads it lazily), so reclamation is a JVM-exit hook — without it
-    // every drain leaks its checkpoint + output on disk FOREVER across
-    // JVMs (found as 24 GB of orphaned graft_stream_ dirs after a probe
-    // campaign; at probe scale a single drain is gigabytes)
-    sweepOnExit(root)
-    val out = root.resolve("out").toString
-    val saveMode = if (outputMode == "complete") "overwrite" else "append"
-    val q = df.writeStream.outputMode(outputMode)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode(saveMode).parquet(out)
-      }
-      .option("checkpointLocation", root.resolve("ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-      spark.read.parquet(out)
-    else // a stream that emitted nothing: empty frame, same schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        df.schema)
-  }
+  /** A drain's output through `read` (by default its parquet), or an
+    * empty frame of `schema` when the stream emitted nothing and `out`
+    * was never written. */
+  private def readBack(spark: SparkSession, out: String, schema: StructType)(
+      read: => DataFrame = spark.read.parquet(out)): DataFrame =
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out))) read
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Register one JVM shutdown hook that recursively deletes every
     * drain directory created this session (newest-first is
@@ -1057,51 +1025,34 @@ object Streaming {
     val verdicts = hashDedupIncrementalVerdicts(ds, maxDist,
         watermarkDelayMs, stateMaxBucket)
       .toDF("docId", "tsUs", "bidx", "matchedId", "sig")
-    val root = java.nio.file.Files.createTempDirectory("graft_incr_stream_")
-    sweepOnExit(root)
-    val out = root.resolve("out").toString
     // noDataBatch = false: the band fMGWS's timeout branch only evicts
     // (emits nothing — bandDedupStreamGen), so the engine's final
     // watermark-commit batch can change no verdict; it would pay one
     // full state reload + commit across every shard. Pinned by the
     // shared batch oracle.
-    withStateStore(spark, rocksdbState) {
-     withDrainConfs(spark, noDataBatch = false, statePartitions) {
-      val q = verdicts.writeStream.outputMode("append")
-        .foreachBatch { (batch0: DataFrame, _: Long) =>
-          // persist the trigger's verdicts ONCE: the fold consumes
-          // them twice (per-doc agg + the index-join leg), and each
-          // un-persisted consumption re-runs the whole fMGWS state
-          // pass — measured 64.3 -> 47.3 s (-26%) on the 15M x 1M
-          // 4-trigger probe (SCALE.md r15), censuses identical
-          val batch = batch0.persist()
-          try incrementalBatchFold(batch, indexChunks, maxDist, maxBucket)
-            .write.mode("append").parquet(out)
-          finally batch.unpersist()
-        }
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-     }
+    val out = drain(verdicts, "graft_incr_stream_", "append",
+        drainConfs(spark, rocksdbState, noDataBatch = false, statePartitions)) {
+      (batch0, out) =>
+        // persist the trigger's verdicts ONCE: the fold consumes
+        // them twice (per-doc agg + the index-join leg), and each
+        // un-persisted consumption re-runs the whole fMGWS state
+        // pass — measured 64.3 -> 47.3 s (-26%) on the 15M x 1M
+        // 4-trigger probe (SCALE.md r15), censuses identical
+        val batch = batch0.persist()
+        try incrementalBatchFold(batch, indexChunks, maxDist, maxBucket)
+          .write.mode("append").parquet(out)
+        finally batch.unpersist()
     }
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-      spark.read.parquet(out)
-    else emptyVerdictFrame(spark)
+    readBack(spark, out, VerdictSchema)()
   }
 
-  private def emptyVerdictFrame(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("dup_of_index",
-          org.apache.spark.sql.types.BooleanType),
-        org.apache.spark.sql.types.StructField("dup_of_batch_earlier",
-          org.apache.spark.sql.types.BooleanType),
-        org.apache.spark.sql.types.StructField("keep",
-          org.apache.spark.sql.types.BooleanType))))
+  /** The (doc_id, dup_of_index, dup_of_batch_earlier, keep) frame of
+    * [[incrementalBatchFold]]: the incremental drains' result. */
+  private val VerdictSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("dup_of_index", BooleanType),
+    StructField("dup_of_batch_earlier", BooleanType),
+    StructField("keep", BooleanType)))
 
   /** The STREAMING MAINTENANCE LOOP (r14 verdict #6):
     * [[hashDedupIncrementalStream]] with IN-LOOP index appends — the
@@ -1170,54 +1121,42 @@ object Streaming {
     val verdicts = hashDedupIncrementalVerdicts(ds, maxDist,
         watermarkDelayMs, stateMaxBucket)
       .toDF("docId", "tsUs", "bidx", "matchedId", "sig")
-    val root = java.nio.file.Files.createTempDirectory("graft_maint_stream_")
-    sweepOnExit(root)
-    val out = root.resolve("out").toString
     // noDataBatch = false: same audit as hashDedupIncrementalStream —
     // the band state's timeout branch emits nothing, the fold/append
     // cycle runs only on data triggers, so the watermark-commit batch
     // is pure per-shard reload+commit cost (a third of this drain's
     // trigger count at the graded two-file slicing).
-    withStateStore(spark, rocksdbState) {
-     withDrainConfs(spark, noDataBatch = false, statePartitions) {
-      val q = verdicts.writeStream.outputMode("append")
-        .foreachBatch { (batch0: DataFrame, _: Long) =>
-          val s = batch0.sparkSession
-          // one materialization instead of THREE state passes (fold
-          // consumes the trigger twice, the keeper join a third time)
-          // — measured 77.7 -> 59.7 s (-23%) at the 15M probe
-          val batch = batch0.persist()
-          try {
-            val fold = incrementalBatchFold(batch,
-                graft.sources.BucketedStore.read(s, indexTable),
-                maxDist, maxBucket)
-              .localCheckpoint() // EAGER: freeze before the append below
-            fold.write.mode("append").parquet(out)
-            val keeperSigs = batch
-              .select(col("docId").as("doc_id"), col("sig").as("simhash"))
-              .distinct()
-              .join(fold.filter(col("keep")).select("doc_id"), Seq("doc_id"))
-            graft.sources.BucketedStore.append(
-              graft.operators.Dedup.simhashChunks(keeperSigs, maxDist),
-              indexTable)
-            // in-loop hygiene: the next trigger re-resolves the table,
-            // so a fired compact changes only its scan cost
-            compactAtFilesPerBucket.foreach(k =>
-              graft.sources.BucketedStore.compactIfFragmented(s,
-                indexTable, k))
-          } finally batch.unpersist()
-        }
-        .option("checkpointLocation", root.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-     }
+    val out = drain(verdicts, "graft_maint_stream_", "append",
+        drainConfs(spark, rocksdbState, noDataBatch = false, statePartitions)) {
+      (batch0, out) =>
+        val s = batch0.sparkSession
+        // one materialization instead of THREE state passes (fold
+        // consumes the trigger twice, the keeper join a third time)
+        // — measured 77.7 -> 59.7 s (-23%) at the 15M probe
+        val batch = batch0.persist()
+        try {
+          val fold = incrementalBatchFold(batch,
+              graft.sources.BucketedStore.read(s, indexTable),
+              maxDist, maxBucket)
+            .localCheckpoint() // EAGER: freeze before the append below
+          fold.write.mode("append").parquet(out)
+          val keeperSigs = batch
+            .select(col("docId").as("doc_id"), col("sig").as("simhash"))
+            .distinct()
+            .join(fold.filter(col("keep")).select("doc_id"), Seq("doc_id"))
+          graft.sources.BucketedStore.append(
+            graft.operators.Dedup.simhashChunks(keeperSigs, maxDist),
+            indexTable)
+          // in-loop hygiene: the next trigger re-resolves the table,
+          // so a fired compact changes only its scan cost
+          compactAtFilesPerBucket.foreach(k =>
+            graft.sources.BucketedStore.compactIfFragmented(s,
+              indexTable, k))
+        } finally batch.unpersist()
     }
     if (compactAtFilesPerBucket.isDefined)
       graft.sources.BucketedStore.vacuumBuckets(spark, indexTable)
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-      spark.read.parquet(out)
-    else emptyVerdictFrame(spark)
+    readBack(spark, out, VerdictSchema)()
   }
 
   /** The shared band-bucket dedup engine behind [[minhashDedupStream]]

@@ -28,8 +28,6 @@ object TimeUtils {
     case _ => throw new IllegalArgumentException(s"bad duration: '$s'")
   }
 
-  def parseSeconds(s: String): Double = parseMicros(s) / 1e6
-
   /** Bucket start for an epoch-micros ts, buckets aligned to epoch
     * (equivalently UTC midnight for divisors of a day). */
   def bucketStartUs(tsUs: Long, widthUs: Long): Long = {

@@ -1,20 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder-side probe (never driver-run): run ANY declared SparkEntry
   * query under a StreamingQueryListener and print every micro-batch
   * progress JSON it emits — durationMs breakdown (addBatch, getBatch,
   * walCommit, commitOffsets, queryPlanning, triggerExecution) and
   * state-operator metrics (commit times, state rows, memory) for EVERY
   * streaming query the build starts, including drains whose handle is
-  * internal (hashDedupMaintStream & co., which StreamProfile cannot
-  * reach). Guide §1.1 empirical loop, drain edition.
+  * internal (hashDedupMaintStream & co.). Guide §1.1 empirical loop,
+  * drain edition.
   *
   * Usage: sbt "runMain graft.tools.DrainProfile <query> [reps]"
-  * Env knobs (A/B arms):
-  *   SPARK_GRAFT_CHANGELOG=true  -> RocksDB changelog checkpointing
-  *   SPARK_GRAFT_TRACKROWS=false -> rocksdb.trackTotalNumberOfRows off
+  * (SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS as for Bench).
   */
 object DrainProfile {
   def main(args: Array[String]): Unit = {
@@ -22,21 +18,7 @@ object DrainProfile {
     val reps = if (args.length > 1) args(1).toInt else 1
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // emulate statePartitions=N for drains that pass None: the drain
-    // caps its shard count at the session shuffle setting
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUF", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_CHANGELOG").foreach(v => spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", v))
-    sys.env.get("SPARK_GRAFT_TRACKROWS").foreach(v => spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", v))
+    val spark = graft.core.Sessions.local(cpus.toInt)
 
     spark.streams.addListener(
       new org.apache.spark.sql.streaming.StreamingQueryListener {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `explain("formatted")` for named SparkEntry queries to files —
   * the plans/r16 before/after evidence trail for the optimization
@@ -10,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> [name ...]"
   *
   * Writes <outDir>/<query>_<suffix>.txt per query (all queries when no
-  * names given). Session shape matches Bench (shuffle partitions =
-  * cores, AQE on) so the dumped initial plans correspond to what the
+  * names given). Session shape matches Bench (`Sessions.local`:
+  * shuffle partitions = cores, AQE on) so the dumped initial plans correspond to what the
   * bench executes; plans are captured BEFORE execution, so AQE runtime
   * rewrites (coalesce/skew) are not in them — the committed files show
   * the static plan shape: exchanges, join strategies, pushed filters.
@@ -23,14 +22,7 @@ object PlanDump {
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(cpus.toInt)
     Files.createDirectories(Paths.get(outDir))
     val picks =
       if (names.nonEmpty) names else graft.SparkEntry.queries.keys.toSeq.sorted

@@ -4,17 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (forked test JVM). */
 object TestSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = graft.core.Sessions.local(4)
 
   /** PURE-SCALA replay of the hot-bucket keep rule
     * (graft.operators.Dedup.md5Keeps) — first 6 md5 hex chars of the
