@@ -34,11 +34,6 @@ object Tables {
       throw new IllegalStateException(s"events.ts: unexpected type $other")
   }
 
-  def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
-  }
-
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame = apply(s, d, "customer")
@@ -46,7 +41,10 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = apply(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
-  def events(s: SparkSession, d: String): DataFrame = eventsRaw(s, d)
+  def events(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    normalizeTs(apply(s, d, "events"))
+  }
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

@@ -838,17 +838,6 @@ object Trainer {
       featureCols: Seq[String]) extends Model {
     def predict(features: Array[Double]): Double =
       model.predict(org.apache.spark.ml.linalg.Vectors.dense(features))
-    /** Train MSE over a frame (the spec's monotonicity surface). */
-    def trainMse(df: DataFrame, labelCol: String): Double = {
-      import org.apache.spark.ml.feature.VectorAssembler
-      val assembler = new VectorAssembler()
-        .setInputCols(featureCols.toArray).setOutputCol("__features")
-      val scored = model.transform(assembler.transform(
-        df.select((featureCols.map(c => col(c).cast("double").as(c)) :+
-          col(labelCol).cast("double").as("__label")): _*)))
-      scored.select(avg(pow(col(model.getPredictionCol) - col("__label"), 2)))
-        .head().getDouble(0)
-    }
   }
 
   /** Adapt a model to the backtest loop (reference inference loop):

@@ -1112,8 +1112,8 @@ object Dedup {
   }
 
   /** The chunk-pair band set for a Hamming radius — single-sourced for
-    * the batch explode ([[simhashChunks]]) and BOTH streaming twins
-    * (Streaming.simhashDedupStream / hashDedupStream): 4 DISJOINT
+    * the batch explode ([[simhashChunks]]) and the streaming band
+    * frame (Streaming.hammingBands): 4 DISJOINT
     * pairs for maxDist <= 3 (pigeonhole-exact at 1/7 the band rows),
     * all C(8,2) = 28 pairs for <= 6. */
   def chunkPairCombos(maxDist: Int): Array[(Int, Int)] = {
@@ -1125,7 +1125,7 @@ object Dedup {
   /** The chunk-pair band VALUE of a signature for combo (i, j) — the
     * scalar twin of [[simhashChunks]]'s Column expression (chunk i in
     * the high byte, chunk j low), single-sourced for the streaming
-    * legs (Streaming.simhashDedupStream / hashDedupStream) so the bit
+    * band frame (Streaming.hammingBands) so the bit
     * layout cannot drift from the batch explode; DedupSpec pins the
     * Column-vs-scalar equality. */
   def chunkPairVal(sig: Long, i: Int, j: Int): Long =
@@ -1192,6 +1192,36 @@ object Dedup {
       universe = Some(newDocs.select(id.cast("long").as("doc_id"))),
       maxBucket = maxBucket)
 
+  /** Distinct batch doc_ids within `maxDist` of ANY index signature —
+    * the INDEX leg of [[incrementalNearDupHashes]], factored out so
+    * the streaming composition's per-micro-batch fold
+    * ([[graft.streaming.Streaming.hashDedupIncrementalStream]]) joins
+    * the SAME plan shape against the same stored band table: batch
+    * sigs explode to chunk bands, both sides capBuckets-guarded, one
+    * (cidx, cval) join, popcount verify, bare-id distinct. Store
+    * `indexChunks` bucketed on (cidx, cval) and the index side never
+    * re-shuffles. Index-side value pruning (a broadcast left-semi
+    * against the batch's band keys) is exact but measured a ~2x LOSS
+    * on skew-modeled perceptual-hash populations, where every batch
+    * touches the hot slots (SCALE.md r15), so the index is joined
+    * whole. */
+  def hashIndexDupIds(batchSigs: DataFrame, indexChunks: DataFrame,
+      maxDist: Int, maxBucket: Int = SimhashHotBucketCap): DataFrame = {
+    val bb = capBuckets(simhashChunks(batchSigs, maxDist), Seq("cidx", "cval"),
+      maxBucket, col("doc_id"))
+    val ib = capBuckets(indexChunks, Seq("cidx", "cval"), maxBucket,
+        col("doc_id"))
+      .select(col("doc_id").as("i_id"), col("simhash").as("i_sim"),
+        col("cidx").as("i_cidx"), col("cval").as("i_cval"))
+    bb.as("x")
+      .join(ib, col("x.cidx") === col("i_cidx") &&
+        col("x.cval") === col("i_cval"))
+      .select(col("x.doc_id").as("doc_id"),
+        bit_count(col("x.simhash").bitwiseXOR(col("i_sim"))).as("hamming"))
+      .filter(col("hamming") <= maxDist)
+      .select(col("doc_id")).distinct()
+  }
+
   /** [[incrementalNearDupSimhash]] over PRECOMPUTED 64-bit Hamming
     * signatures — the perceptual-media leg of the incremental family
     * (what [[Streaming.hashDedupStream]]'s precomputed-signature leg
@@ -1214,130 +1244,13 @@ object Dedup {
     * batch. The default is the family guard; the cap cannot trip
     * below `maxBucket` docs sharing one band value, so grading-scale
     * results are exact. Pass Int.MaxValue to opt out. */
-  /** Distinct batch doc_ids within `maxDist` of ANY index signature —
-    * the INDEX leg of [[incrementalNearDupHashes]], factored out so
-    * the streaming composition's per-micro-batch fold
-    * ([[graft.streaming.Streaming.hashDedupIncrementalStream]]) joins
-    * the SAME plan shape against the same stored band table: batch
-    * sigs explode to chunk bands, both sides capBuckets-guarded, one
-    * (cidx, cval) join, popcount verify, bare-id distinct. Store
-    * `indexChunks` bucketed on (cidx, cval) and the index side never
-    * re-shuffles. */
-  def hashIndexDupIds(batchSigs: DataFrame, indexChunks: DataFrame,
-      maxDist: Int, maxBucket: Int = SimhashHotBucketCap,
-      indexPrefilter: Boolean = false): DataFrame = {
-    val bchunks = simhashChunks(batchSigs, maxDist)
-    val bb = capBuckets(bchunks, Seq("cidx", "cval"), maxBucket, col("doc_id"))
-    // INDEX-SIDE VALUE PRUNING — built, measured, DEFAULT OFF (r15).
-    // The r14 amortization decade named "skip index band data a
-    // batch's band values cannot touch" as the next lever; this is
-    // that lever as a broadcast LEFT-SEMI of the index against the
-    // batch's distinct (cidx, cval) keys. It is EXACT (whole index
-    // groups removed atomically, so capBuckets' surviving counts —
-    // and therefore verdicts — are unchanged even in the capped
-    // regime; BucketingSpec pins equality), always broadcast-safe
-    // (key space bounded at bands x 2^16), and preserves the
-    // bucketed scan's no-exchange property. But on SKEW-MODELED
-    // perceptual-hash populations it is a measured LOSS at every
-    // realistic batch size (IncrementalScaleProbe, 50M index,
-    // SCALE.md r15): row mass concentrates in the hot slots every
-    // batch touches — a 1M batch hits 24% of slots holding 99.7% of
-    // rows, a 10k batch 3.8% of slots holding 88.1% — so <= 12% of
-    // the join feed is ever prunable while the semi pass itself is
-    // paid once per consumption of this frame (capBuckets reads it
-    // twice). Alternated walls: OFF 19-30 s vs ON 45-56 s at both
-    // batch sizes. FILE-level variants die earlier still (the 16-bit
-    // saturation math, SCALE.md r15). Opt in only for hash families
-    // whose band-value population is near-uniform AND whose batches
-    // are small — there selectivity is ~(touched slots / 65536) per
-    // band and can actually bite. The levers that DO pay on skewed
-    // populations: file-count hygiene (BucketedStore.compactBuckets,
-    // measured ~2x recovery after 10 appends) and the hot-bucket cap.
-    val ibSrc =
-      if (!indexPrefilter) indexChunks
-      else indexChunks.join(
-        // one banding pass: the broadcast key set derives from the SAME
-        // bchunks frame as the batch side above — re-banding batchSigs
-        // here doubled the batch pass on a path already measured
-        // marginal (r15 ADVICE)
-        broadcast(bchunks.select(col("cidx"), col("cval")).distinct()),
-        Seq("cidx", "cval"), "left_semi")
-    val ib = capBuckets(ibSrc, Seq("cidx", "cval"), maxBucket,
-        col("doc_id"))
-      .select(col("doc_id").as("i_id"), col("simhash").as("i_sim"),
-        col("cidx").as("i_cidx"), col("cval").as("i_cval"))
-    bb.as("x")
-      .join(ib, col("x.cidx") === col("i_cidx") &&
-        col("x.cval") === col("i_cval"))
-      .select(col("x.doc_id").as("doc_id"),
-        bit_count(col("x.simhash").bitwiseXOR(col("i_sim"))).as("hamming"))
-      .filter(col("hamming") <= maxDist)
-      .select(col("doc_id")).distinct()
-  }
-
-  /** What [[bandSkewAdvisor]] measured on a stored band index.
-    * `slots` = occupied (cidx, cval) keys (bounded at bands x 2^16);
-    * `meanRowsPerSlot` = rows / slots — the cheap one-pass signal the
-    * SCALE.md r15 rule names (`approx_count_distinct` against the row
-    * count); `topShare` = the fraction of index ROWS held by the top
-    * `topFraction` of slots by row count — the discriminator the 50M
-    * probe actually measured (skew-modeled populations: 88-99.7% of
-    * rows in the slots every batch touches; unbiased sigs: no hot
-    * mass, 763 rows/slot uniformly). `recommendPrefilter` applies the
-    * measured regime rule. */
-  final case class BandSkewReport(slots: Long, rows: Long,
-      meanRowsPerSlot: Double, p99RowsPerSlot: Long, maxRowsPerSlot: Long,
-      topShare: Double, recommendPrefilter: Boolean)
-
-  /** The r15 prefilter decision rule AS CODE (r15 verdict #4): should
-    * [[hashIndexDupIds]]' `indexPrefilter` be on for THIS stored
-    * index? The measured law (SCALE.md r15, 50M-doc probe, both
-    * regimes): value pruning pays iff rows-per-slot is near-uniform —
-    * on skew-modeled hash populations the hot slots hold 88-99.7% of
-    * rows and every batch touches them (<= 12% of the join feed ever
-    * prunable, ON ~2x slower); on unbiased populations no slot is hot
-    * (top 1% of slots hold ~1% of rows) and the broadcast left-semi
-    * prunes ~86% of the index scan (ON wins the alternation at both
-    * probe batch sizes). The rule here: recommend ON iff the top
-    * `topFraction` of slots hold <= `maxTopShare` of rows.
-    *
-    * Cost: one groupBy over the band key space (bounded at bands x
-    * 2^16 slots — metadata-sized by construction) + one top-k pass
-    * over the slot-count frame; run it once per stored index, at
-    * build or compaction time, not per batch. The verdict is advisory
-    * — exactness holds with the prefilter on OR off (BucketingSpec);
-    * only the wall clock is at stake. */
-  def bandSkewAdvisor(indexChunks: DataFrame, topFraction: Double = 0.01,
-      maxTopShare: Double = 0.10): BandSkewReport = {
-    require(topFraction > 0 && topFraction <= 1 && maxTopShare > 0,
-      s"bad advisor knobs ($topFraction, $maxTopShare)")
-    val counts = indexChunks.groupBy("cidx", "cval")
-      .agg(count(lit(1)).as("c"))
-      .persist()
-    try {
-      val s = counts.agg(count(lit(1)).as("slots"), sum("c").as("rows"),
-          max("c").as("mx"),
-          expr("percentile(c, 0.99)").cast("long").as("p99"))
-        .collect()(0)
-      val (slots, rows, mx, p99) =
-        (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
-      val topK = math.max(1L, math.ceil(slots * topFraction).toLong)
-      val topRows = counts.orderBy(col("c").desc, col("cidx"), col("cval"))
-        .limit(topK.toInt).agg(sum("c")).collect()(0).getLong(0)
-      val topShare = topRows.toDouble / rows
-      BandSkewReport(slots, rows, rows.toDouble / slots, p99, mx,
-        topShare, recommendPrefilter = topShare <= maxTopShare)
-    } finally { counts.unpersist(); () }
-  }
-
   def incrementalNearDupHashes(batchSigs: DataFrame, indexSigs: DataFrame,
       maxDist: Int, indexChunks: Option[DataFrame] = None,
       universe: Option[DataFrame] = None,
-      maxBucket: Int = SimhashHotBucketCap,
-      indexPrefilter: Boolean = false): DataFrame = {
+      maxBucket: Int = SimhashHotBucketCap): DataFrame = {
     val idxDup = hashIndexDupIds(batchSigs,
         indexChunks.getOrElse(simhashChunks(indexSigs, maxDist)),
-        maxDist, maxBucket, indexPrefilter)
+        maxDist, maxBucket)
       .withColumn("dup_idx", lit(true))
     // self-pair mining INSIDE the batch is exactly the case the r13
     // form rule routes through the in-bucket form (simhashPairsBucketed
@@ -1717,8 +1630,7 @@ object Dedup {
     * a degenerate bucket's whole row set through one task, this
     * filter is embarrassingly parallel. The hot-size side is
     * hot-bucket-count-sized (<= n/cap rows), so AQE broadcasts it in
-    * the common case; use [[graft.operators.Similarity.cappedBucketStats]]
-    * for cap-pressure observability (the old code path's warn log). */
+    * the common case; cap pressure is reported by [[CapObserver]]. */
   private[graft] def capBuckets(exploded: DataFrame, keys: Seq[String],
       maxBucket: Int, sampleKey: Column): DataFrame =
     if (maxBucket == Int.MaxValue) exploded
@@ -1782,7 +1694,7 @@ object Dedup {
     }
   }
 
-  /** Embedding near-dup pairs via SRP-LSH candidates + exact cosine
+  /** Embedding near-dup pairs via SRP-LSH buckets + exact cosine
     * verification — the scale path for `embeddingNearDupPairs` (same
     * output schema; equal output whenever every >=threshold pair
     * collides in at least one table). The per-pair miss probability is
@@ -1792,53 +1704,12 @@ object Dedup {
     * testdata (threshold 0.35, p~0.61) exactness needs the wide
     * bits=2/tables=32 setting, which degenerates toward all-pairs —
     * a property of thresholding noise-level similarity, not of the
-    * operator (measured ratios in SCALE.md). Candidates are deduped
-    * as bare id pairs before the embedding payloads are re-attached. */
-  /** SRP-LSH candidate id pairs for embedding near-dup detection: rows
-    * sharing any table's bucket, emitted as bare (a_id, b_id) pairs —
-    * the candidate stage that embeddingNearDupPairsLsh feeds to exact
-    * verification (public so candidate-set size is measurable —
-    * SCALE.md reports the ratios).
-    *
-    * Dedup is `distinct()` over the bare id-pair multiset — the
-    * map-side partial aggregate collapses most multiplicity before the
-    * exchange, and the shuffled rows are 16 bytes. A "min matching
-    * table" formulation that avoids the dedup shuffle entirely (carry
-    * both bucket vectors through the join, filter pairs that already
-    * matched an earlier table with exists/zip_with/slice) was measured
-    * 9x SLOWER here: the higher-order lambdas allocate two sliced
-    * arrays per joined row — the CollapseProject/HOF trap again
-    * (CLAUDE.md). If the dedup exchange ever dominates at cluster
-    * scale, that filter needs a custom codegen'd Expression, not HOFs. */
-  def lshCandidatePairs(df: DataFrame, id: Column, emb: Column,
-      bits: Int, tables: Int, dim: Int, seed: Long = 42L,
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    val bucketed = capBuckets(
-      df.select(id.cast("long").as("id"),
-        posexplode(Similarity.bucketArray(emb, bits, dim, tables, seed))
-          .as(Seq("tbl", "bkt"))),
-      Seq("tbl", "bkt"), maxBucket, col("id"))
-    bucketed.as("a")
-      .join(bucketed.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
-      .distinct()
-  }
-
-  /** `quantizedScreen = true` inserts the lossless integer screen of
-    * [[embeddingNearDupPairsQuantized]] between the candidate join and
-    * the double cosine: candidate rows carry int8-range codes, pairs
-    * failing `graft_idot >= ceil(L^2 t - 2L sqrt(d) - d)` die before
-    * any float math. The margin theorem guarantees no true pair is
-    * screened out, so the output is IDENTICAL either way (spec-pinned);
-    * the screen only changes which rows pay the exact verify — the
-    * right default once candidate volume, not bucketing, dominates. */
+    * operator (measured ratios in SCALE.md). A NULL embedding yields a
+    * NULL bucket array, which posexplode drops: such rows join no
+    * bucket and appear in no pair. */
   def embeddingNearDupPairsLsh(df: DataFrame, id: Column, emb: Column,
       threshold: Double, bits: Int = 2, tables: Int = 32, dim: Int = 64,
-      seed: Long = 42L, maxBucket: Int = Int.MaxValue,
-      quantizedScreen: Boolean = false): DataFrame = {
+      seed: Long = 42L, maxBucket: Int = Int.MaxValue): DataFrame = {
     // IN-BUCKET verify (round 8, the knnGraph shape): candidates are
     // scored inside each capped bucket group and only VERIFIED pairs
     // (cos >= threshold) leave the fold — the pair-materialized form
@@ -1848,32 +1719,19 @@ object Dedup {
     // pairs only: OUTPUT-sized by definition of the operator. A pair
     // colliding in several tables re-verifies once per table — the
     // explicit trade: redundant 64-dim dots are cheap, pair-sized
-    // exchanges are not. The screen (lossless integer margin, see
-    // [[embeddingNearDupPairsQuantized]]) rides the exploded rows as
-    // code arrays and kills non-candidates before any float math,
-    // exactly as it did between the join and the verify.
+    // exchanges are not.
     val spark = df.sparkSession
     import spark.implicits._
     graft.functions.VectorExpressions.register(spark)
-    import graft.functions.VectorExpressions.quantize_vec
-    val levels = 127
-    val screen = quantizedScreen
-    val minScore =
-      if (!screen) Long.MinValue
-      else math.ceil(levels.toDouble * levels * threshold
-        - 2.0 * levels * math.sqrt(dim) - dim).toLong
     val thr = threshold
-    val exploded0 = df.select(id.cast("long").as("id"), emb.as("e"),
+    val exploded = df.select(id.cast("long").as("id"), emb.as("e"),
       posexplode(Similarity.bucketArray(emb, bits, dim, tables, seed))
         .as(Seq("tbl", "bkt")))
-    val exploded =
-      if (screen) exploded0.withColumn("q", quantize_vec(col("e"), levels))
-      else exploded0.withColumn("q", lit(null).cast("array<bigint>"))
     capBuckets(exploded, Seq("tbl", "bkt"), maxBucket, col("id"))
       .groupBy(col("tbl"), col("bkt"))
-      .agg(collect_list(struct(col("id").as("_1"), col("e").as("_2"),
-        col("q").as("_3"))).as("ms"))
-      .select(col("ms")).as[Array[(Long, Array[Float], Array[Long])]]
+      .agg(collect_list(struct(col("id").as("_1"), col("e").as("_2")))
+        .as("ms"))
+      .select(col("ms")).as[Array[(Long, Array[Float])]]
       .flatMap { m =>
         // LAZY pair iterator (the knnGraph rule): a hot bucket on a
         // dup-heavy corpus verifies O(cap^2) pairs and most PASS the
@@ -1891,8 +1749,7 @@ object Dedup {
           private var nxt: (Long, Long, Double) = null
           private def advance(): Unit = {
             while (nxt == null && i < n - 1) {
-              if (m(i)._1 != m(j)._1 &&
-                  (!screen || Similarity.idotD(m(i)._3, m(j)._3) >= minScore)) {
+              if (m(i)._1 != m(j)._1) {
                 val den = norms(i) * norms(j)
                 // den == 0: a zero vector has no direction (the old
                 // form's NULL cos), never a near-dup

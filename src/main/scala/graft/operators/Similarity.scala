@@ -61,16 +61,6 @@ object Similarity {
     acc
   }
 
-  /** Scalar twin of graft_idot: exact Long dot of two code arrays
-    * (the quantized-screen scorer for in-bucket pair folds). */
-  private[operators] def idotD(a: Array[Long], b: Array[Long]): Long = {
-    val n = math.min(a.length, b.length)
-    var acc = 0L
-    var i = 0
-    while (i < n) { acc += a(i) * b(i); i += 1 }
-    acc
-  }
-
   /** Same fold via the codegen'd native expression (graft_dot) —
     * identical arithmetic/order, tight primitive loop instead of
     * per-element lambda frames. Requires VectorExpressions.register
@@ -608,177 +598,6 @@ object Similarity {
     labels.join(pred, "vec_id")
       .select(col("vec_id"), col("label"), col("pred_label"),
         (col("label") === col("pred_label")).as("agree"))
-  }
-
-  /** Deterministic anchor sample for recall evaluation: the first `n`
-    * vectors in (md5(vec_id), vec_id) order — the repo's md5-prefix
-    * sampling discipline (content-independent, engine-replayable,
-    * spread uniformly over the id space however ids were assigned, so
-    * a replicated probe corpus doesn't concentrate anchors in one
-    * replica). orderBy+limit plans as TakeOrdered (per-partition top-n
-    * then a driver merge of n-row heads), never a global sort — safe
-    * at any corpus size for mining-set-sized n.
-    *
-    * Exists because a recall ESTIMATE converges long before every
-    * query runs (SCALE.md): the brute ground-truth arm is anchors x
-    * corpus dots, so sampling anchors is the knob that keeps
-    * deep-decade recall probes affordable. */
-  def sampleAnchors(corpus: DataFrame, n: Int): DataFrame =
-    corpus.orderBy(md5(col("vec_id").cast("string")), col("vec_id").asc)
-      .limit(n)
-
-  /** Recall@k of a kNN GRAPH (src_id, neighbor_id edges, e.g.
-    * [[knnGraph]] output) against the exact cosine top-k, on `anchors`
-    * sampled anchors: per anchor, how many of the true top-k the graph
-    * found, as exact integer ppm. The graph side is pruned to the
-    * anchor set via a broadcast join BEFORE touching the (possibly
-    * corpus x k sized) edge frame, so nothing graph-sized shuffles;
-    * the brute arm pays anchors x corpus dots — the sampled cost this
-    * harness exists to bound. */
-  def graphRecallSampled(corpus: DataFrame, graph: DataFrame, k: Int,
-      anchors: Int): DataFrame = {
-    val a = sampleAnchors(corpus, anchors)
-    val anchorIds = broadcast(
-      a.select(col("vec_id").cast("long").as("q_id")))
-    val found = graph
-      .select(col("src_id").cast("long").as("q_id"),
-        col("neighbor_id").cast("long").as("neighbor_id"))
-      .join(anchorIds, "q_id")
-      // robust to non-distinct edge inputs (a graph written twice, a
-      // union'd graph): duplicate edges would multiply brute rows
-      // through the left join and push recall_ppm past 1,000,000
-      .dropDuplicates("q_id", "neighbor_id")
-      .withColumn("hit", lit(1L))
-    bruteForceTopK(corpus, a, k)
-      .select(col("q_id").cast("long").as("q_id"),
-        col("neighbor_id").cast("long").as("neighbor_id"))
-      .join(found, Seq("q_id", "neighbor_id"), "left")
-      .groupBy("q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"))
-      .select(col("q_id"), col("hits"),
-        expr(s"hits * 1000000 div $k").as("recall_ppm"))
-  }
-
-  /** [[graphRecallSampled]] WITHOUT materializing the graph: the
-    * fifth-decade recall probe. The full kNN graph's candidate shuffle
-    * is tables x corpus embedding-carrying rows (~170 GB at 20M
-    * vectors — past this probe box's disk), but an ANCHOR's graph row
-    * depends only on the buckets the anchor itself occupies. So:
-    * broadcast the anchors' own bucket keys onto the exploded frame (a
-    * map-side prune to whole anchor-occupied buckets), then apply
-    * Dedup.capBuckets ITSELF (r12: the one shared keep rule, no inline
-    * re-derivation) — the bucket-key join keeps buckets whole, so the
-    * bucket sizes (and thus the kept member sets) are identical to the
-    * full graph build's.
-    * An anchor participates in a bucket only if it itself survived the
-    * subsample there (knnGraph forms pairs among survivors only).
-    * Per-anchor top-k over the union of its kept buckets under the
-    * same (cos desc, id asc, nulls last) total order equals the full
-    * graph's row for that anchor BY CONSTRUCTION (buckets the anchor
-    * does not occupy contribute nothing to it; spec-pinned equal to
-    * [[knnGraph]]-then-[[graphRecallSampled]] with and without cap
-    * pressure). */
-  def graphRecallAnchorsOnly(corpus: DataFrame, k: Int, anchors: Int,
-      bits: Int = 0, dim: Int = 64, tables: Int = 24, seed: Long = 42L,
-      maxBucket: Int = KnnHotBucketCap): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.VectorExpressions.register(spark)
-    val b = if (bits > 0) bits else autoBits(corpus.count())
-    val a = sampleAnchors(corpus, anchors)
-    val exploded = corpus.select(col("vec_id").cast("long").as("id"),
-      col("embedding"),
-      posexplode(bucketArray(col("embedding"), b, dim, tables, seed))
-        .as(Seq("tbl", "bkt")))
-    val aBuckets = a.select(col("vec_id").cast("long").as("q_id"),
-      posexplode(bucketArray(col("embedding"), b, dim, tables, seed))
-        .as(Seq("tbl", "bkt")))
-    // WHOLE anchor-occupied buckets (no size filter: over-cap buckets
-    // subsample rather than drop, so their kept members still count),
-    // then THE capBuckets keep rule — each pruned bucket is complete,
-    // so its size (and every member's keep verdict) matches the full
-    // graph build's. maxBucket == Int.MaxValue passes through.
-    val members0 = exploded.join(
-      broadcast(aBuckets.select("tbl", "bkt").distinct()), Seq("tbl", "bkt"))
-    val members = graft.operators.Dedup
-      .capBuckets(members0, Seq("tbl", "bkt"), maxBucket, col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // (tbl, bkt, q_id) buckets where the anchor ITSELF survived the
-    // subsample — pairs in knnGraph form among survivors only, so a
-    // capped-out anchor gets nothing from that bucket
-    val anchorKept = members
-      .select(col("tbl"), col("bkt"), col("id").as("q_id"))
-      .join(broadcast(aBuckets), Seq("tbl", "bkt", "q_id"))
-    val scored = members
-      .join(broadcast(anchorKept), Seq("tbl", "bkt"))
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id").as("neighbor_id"), col("embedding"))
-      .dropDuplicates("q_id", "neighbor_id")
-      .join(broadcast(a.select(col("vec_id").cast("long").as("q_id"),
-        col("embedding").as("qe"))), "q_id")
-      .select(col("q_id"), col("neighbor_id"),
-        cosine(col("qe"), col("embedding")).as("cos"))
-    val found = rerankTopK(scored, k)
-      .select(col("q_id"), col("neighbor_id")).withColumn("hit", lit(1L))
-    val result = bruteForceTopK(corpus, a, k)
-      .select(col("q_id").cast("long").as("q_id"),
-        col("neighbor_id").cast("long").as("neighbor_id"))
-      .join(found, Seq("q_id", "neighbor_id"), "left")
-      .groupBy("q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"))
-      .select(col("q_id"), col("hits"),
-        expr(s"hits * 1000000 div $k").as("recall_ppm"))
-    // r12 verdict #2 (the capBuckets-leak class, probe-path edition):
-    // materialize the anchors-sized result, THEN drop the cached
-    // exploded frame — the connectedComponents lifecycle — so a
-    // long-lived session calling the probe repeatedly parks nothing.
-    val rows = result.collect().toSeq
-    members.unpersist(blocking = false)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), result.schema)
-  }
-
-  /** [[ivfPqTopK]] recall@k vs brute, on sampled anchors — the
-    * emb_ann_recall evaluation with the anchor set as a knob instead
-    * of the graded query's fixed vec_id < 10 slice. */
-  def annRecallSampled(corpus: DataFrame, k: Int, anchors: Int,
-      nProbe: Int = 2): DataFrame = {
-    val a = sampleAnchors(corpus, anchors)
-    val approx = ivfPqTopK(corpus, a, k, nProbe)
-      .select(col("q_id").cast("long").as("q_id"),
-        col("neighbor_id").cast("long").as("neighbor_id"))
-      .withColumn("hit", lit(1L))
-    bruteForceTopK(corpus, a, k)
-      .select(col("q_id").cast("long").as("q_id"),
-        col("neighbor_id").cast("long").as("neighbor_id"))
-      .join(approx, Seq("q_id", "neighbor_id"), "left")
-      .groupBy("q_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"))
-      .select(col("q_id"), col("hits"),
-        expr(s"hits * 1000000 div $k").as("recall_ppm"))
-  }
-
-  /** Probe-side hot-bucket audit for the [[knnGraph]] family: per-table
-    * count of LSH buckets OVER `maxBucket` (these are subsampled down
-    * to the cap by Dedup.capBuckets) and the rows they held —
-    * the "capped-bucket log counts" a scale probe records next to its
-    * recall row, so a recall drop can be attributed to cap pressure
-    * (duplicate mass) rather than bucket-space exhaustion. One
-    * aggregation over the exploded (tbl, bkt) frame; output is
-    * tables-sized. */
-  def cappedBucketStats(corpus: DataFrame, bits: Int, dim: Int,
-      maxBucket: Int, tables: Int = 24, seed: Long = 42L): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.VectorExpressions.register(spark)
-    val b = if (bits > 0) bits else autoBits(corpus.count())
-    corpus.select(col("vec_id").cast("long").as("id"),
-        posexplode(bucketArray(col("embedding"), b, dim, tables, seed))
-          .as(Seq("tbl", "bkt")))
-      .groupBy("tbl", "bkt").agg(count(lit(1)).as("rows"))
-      .filter(col("rows") > maxBucket)
-      .groupBy("tbl")
-      .agg(count(lit(1)).as("capped_buckets"),
-        sum(col("rows")).as("rows_in_capped"))
-      .orderBy("tbl")
   }
 
   /** Corpus-scaled SRP bit width: the smallest b in [1, maxBits] with

@@ -647,8 +647,8 @@ object DocQueries {
          |    * 1000000 // count(*) AS BIGINT) AS novelty_ppm
          |FROM sh JOIN f USING (s)
          |GROUP BY 1""".stripMargin) { (s, dir) =>
-      // PLAIN drain, deliberately: the bucketed-drain variant
-      // (runAvailableNowBucketed) was measured against this exact
+      // PLAIN drain, deliberately: a bucketed drain (removed; see
+      // SCALE.md) was measured against this exact
       // query at 15M docs in a same-day three-way control (r11,
       // SCALE.md) and LOST — 1043s plain vs 1132s bucketed-unsorted
       // vs 1200s bucketed-sorted. For a drain whose owner table is

@@ -720,8 +720,8 @@ object EmbeddingQueries {
     // bits=8 x 8 tables. Identical vectors share every table's bucket
     // (recall is structural, not probabilistic), no original pair
     // reaches 0.9, so LSH output == brute force == exactly the n
-    // seeded pairs at cos 1.0. Candidate set stays sub-quadratic
-    // (spec-measured ~4% of all-pairs in DedupSpec).
+    // seeded pairs at cos 1.0. Each 8-bit table spreads the corpus
+    // over 256 buckets, so the in-bucket verify stays sub-quadratic.
     "emb_lsh_dups_realistic" -> QueryDef(
       """WITH aug AS (
         |  SELECT vec_id, embedding FROM embeddings

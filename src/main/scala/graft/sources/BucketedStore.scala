@@ -105,7 +105,7 @@ object BucketedStore {
     * once into `numBuckets` partitions hash-placed on the bucket
     * columns — the same murmur3-pmod routing `bucketBy` uses, so each
     * write task holds exactly one bucket and emits exactly one file
-    * (the runAvailableNowBucketed alignment) — and re-registered under
+    * — and re-registered under
     * the same name at a VERSIONED sibling path (write-new-then-swap).
     * The superseded directory is NOT deleted here: a reader holding an
     * already-resolved plan over the old files (lazy OR concurrent —
@@ -147,28 +147,6 @@ object BucketedStore {
     * engine-minted temp/sibling paths, never user strings). */
   private[graft] val SupersededProp = "graft.superseded.locations"
 
-  /** Count of parquet data files currently under `table`'s location —
-    * the maintenance-cadence signal (one driver-side recursive
-    * listing; cost is proportional to file count, which is exactly
-    * the quantity being bounded). */
-  def dataFileCount(spark: SparkSession, table: String): Long = {
-    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // listStatus, NOT listFiles(recursive): the recursive iterator
-    // resolves block locations per file — measured 5 ms/file vs 20 us
-    // with a flat dir listing (250x; a fragmented table is exactly
-    // where this runs). Bucketed tables write flat part files; recurse
-    // manually on the (never-seen) nested case.
-    def walk(p: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(p).foldLeft(0L) { (n, s) =>
-        n + (if (s.isDirectory) walk(s.getPath)
-             else if (s.getPath.getName.endsWith(".parquet")) 1L else 0L)
-      }
-    walk(loc)
-  }
-
   /** The SCALE.md r15 cadence rule as code: [[compactBuckets]] iff the
     * table has fragmented past `maxFilesPerBucket` (measured wall: 10
     * appends -> 11,264 files -> ~2x verdict scan at 50M; one compact
@@ -178,12 +156,24 @@ object BucketedStore {
     * schedule. */
   def compactIfFragmented(spark: SparkSession, table: String,
       maxFilesPerBucket: Int): Option[String] = {
-    val spec = spark.sessionState.catalog
+    val meta = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec
+    val spec = meta.bucketSpec
       .getOrElse(throw new IllegalArgumentException(s"$table is not bucketed"))
-    if (dataFileCount(spark, table) >
-        maxFilesPerBucket.toLong * spec.numBuckets)
+    val loc = new org.apache.hadoop.fs.Path(meta.location)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the parquet data-file count, by listStatus, NOT
+    // listFiles(recursive): the recursive iterator resolves block
+    // locations per file — measured 5 ms/file vs 20 us with a flat dir
+    // listing (250x; a fragmented table is exactly where this runs).
+    // Bucketed tables write flat part files; recurse manually on the
+    // (never-seen) nested case.
+    def files(p: org.apache.hadoop.fs.Path): Long =
+      fs.listStatus(p).foldLeft(0L) { (n, s) =>
+        n + (if (s.isDirectory) files(s.getPath)
+             else if (s.getPath.getName.endsWith(".parquet")) 1L else 0L)
+      }
+    if (files(loc) > maxFilesPerBucket.toLong * spec.numBuckets)
       Some(compactBuckets(spark, table))
     else None
   }

@@ -575,52 +575,13 @@ object Streaming {
       "spark.sql.shuffle.partitions" -> math.min(n, sessionShuffle).toString)
   }
 
-  /** [[runAvailableNow]] whose drain lands in a [[graft.sources
-    * .BucketedStore]] table hash-bucketed on `keys` — for
-    * drain-then-join compositions (the novelty/boilerplate corpus-
-    * drift shape) where the drained table is the PERSISTENT side of a
-    * corpus-sized tail join: the bucketed scan reports its
-    * partitioning, so the tail join plans ONE exchange (the per-doc
-    * side) instead of two. The bucketing itself is free of extra
-    * exchanges BY ALIGNMENT: the drained frame arrives hash-partitioned
-    * on the state key (the streaming agg's own shuffle), and
-    * `bucketBy(shufflePartitions, stateKey)` uses the same murmur3
-    * pmod routing, so each drain task writes exactly one bucket file —
-    * which also makes `sortCols` metadata usable by downstream
-    * sort-merge joins (one file per bucket = no re-sort). Complete
-    * mode only (each AvailableNow batch overwrites the table with the
-    * full state snapshot, exactly like the parquet drain).
-    *
-    * WHEN IT PAYS — measured, not assumed (r11 same-day three-way
-    * control at 15M docs, SCALE.md): for a drain whose table is
-    * joined ONCE, the bucketed write's own overhead EXCEEDS the one
-    * saved join exchange (plain 1043s vs bucketed-unsorted 1132s vs
-    * bucketed-sorted 1200s on doc_novelty_stream), so the graded
-    * novelty query deliberately stays on the plain drain. Use this
-    * variant when the drained table is the PERSISTENT side of
-    * repeated downstream joins (the BucketedStore incremental-index
-    * shape) — placement paid once, amortized over every read. */
-  def runAvailableNowBucketed(df: DataFrame, table: String,
-      keys: Seq[String], buckets: Int, sortCols: Seq[String] = Nil,
-      rocksdbState: Boolean = false,
-      noDataBatch: Boolean = true,
-      statePartitions: Option[Int] = None): DataFrame = {
-    val spark = df.sparkSession
-    val out = drain(df, "graft_bdrain_", "complete",
-        drainConfs(spark, rocksdbState, noDataBatch, statePartitions)) {
-      (batch, out) => graft.sources.BucketedStore.write(batch, table, out,
-        keys, buckets, sortCols)
-    }
-    readBack(spark, out, df.schema)(graft.sources.BucketedStore.read(spark, table))
-  }
-
   /** The one `Trigger.AvailableNow` drain behind [[runAvailableNow]],
-    * [[runAvailableNowBucketed]], [[hashDedupIncrementalStream]] and
-    * [[hashDedupMaintStream]]: installs the streaming session settings,
-    * makes a fresh `<prefix>` temp root, runs `df` to exhaustion under
-    * `confs` with its checkpoint at `<root>/ckpt`, and hands every
-    * micro-batch to `sink` together with the output path `<root>/out`,
-    * which it returns.
+    * [[hashDedupIncrementalStream]] and [[hashDedupMaintStream]]:
+    * installs the streaming session settings, makes a fresh `<prefix>`
+    * temp root, runs `df` to exhaustion under `confs` with its
+    * checkpoint at `<root>/ckpt`, and hands every micro-batch to
+    * `sink` together with the output path `<root>/out`, which it
+    * returns.
     *
     * The drained output must outlive this call (the returned frame
     * reads it lazily), so reclamation is a JVM-exit hook — without it
@@ -776,44 +737,56 @@ object Streaming {
   /** Streaming SimHash near-dup dedup — the SimHash leg of the Kappa
     * twin pair (same shape as [[minhashDedupStream]]): per-doc simhash
     * in the stateless map (identical bits to batch via the shared
-    * `Dedup.simhashOf`), band rows keyed by the SAME C(8,2) 16-bit
-    * chunk-pair banding as the batch `simhashPairs` (pigeonhole-exact
-    * for hamming <= maxDist <= 6), bucket state + watermark eviction in
-    * the shared engine. A doc matches when any bucket holds an earlier
-    * doc within `maxDist` — the batch `simhashPairs(sigs, maxDist)`
-    * pair set restricted to a_id < b_id (StreamingSpec parity). */
+    * `Dedup.simhashOf`; null text is dropped), band rows from
+    * [[hammingBands]], the batch `simhashPairs` band tier
+    * (pigeonhole-exact for hamming <= maxDist <= 6), bucket state +
+    * watermark eviction in the shared engine. A doc matches when any
+    * bucket holds an earlier doc within `maxDist` — the batch
+    * `simhashPairs(sigs, maxDist)` pair set restricted to a_id < b_id
+    * (StreamingSpec parity). */
   def simhashDedupStream(ds: Dataset[DocEvent], maxDist: Int,
       watermarkDelayMs: Long, maxBucket: Int = Int.MaxValue,
       baseHash: graft.operators.Dedup.BaseHash =
         graft.operators.Dedup.XxHash): Dataset[BandVerdict] = {
     import ds.sparkSession.implicits._
     import org.apache.spark.unsafe.types.UTF8String
-    // tier rule single-sourced with the batch explode: 4 disjoint
-    // pairs at radius <= 3, C(8,2) at <= 6 (requires <= 6 internally)
-    val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
-    val bandRows = installed(ds).flatMap { d =>
+    val sigs = ds.flatMap { d =>
       if (d.text == null) Iterator.empty
-      else {
-        val lowered = UTF8String.fromString(d.text).toLowerCase.toString
-        val sig = graft.operators.Dedup.simhashOf(lowered, baseHash)
-        combos.iterator.zipWithIndex.map { case ((i, j), idx) =>
-          // composite bucket key: comboIdx in the high bits, collision-
-          // free; bit layout single-sourced in Dedup.chunkPairVal/
-          // packBandKey (the batch simhashChunks layout)
-          (graft.operators.Dedup.packBandKey(idx,
-              graft.operators.Dedup.chunkPairVal(sig, i, j)),
-            idx, d.docId, d.tsUs, Array(sig),
-            new java.sql.Timestamp(d.tsUs / 1000))
-        }
+      else Iterator((d.docId, d.tsUs, graft.operators.Dedup.simhashOf(
+        UTF8String.fromString(d.text).toLowerCase.toString, baseHash)))
+    }
+    bandDedupStream(hammingBands(sigs, maxDist, watermarkDelayMs),
+      hammingWithin(maxDist), watermarkDelayMs, maxBucket)
+  }
+
+  /** The band frame the Hamming streams share: one (bucket, bidx,
+    * docId, tsUs, sig, eventTs) row per (doc, band), watermarked on
+    * eventTs. The band tier is the batch explode's (4 disjoint chunk
+    * pairs at radius <= 3, C(8,2) at <= 6, which it requires), and the
+    * bucket key is the batch `simhashChunks` bit layout, single-sourced
+    * in Dedup.chunkPairVal/packBandKey: the combo index in the high
+    * bits, so keys never collide across bands. */
+  private def hammingBands(ds: Dataset[(Long, Long, Long)] /* docId, tsUs, hash */ ,
+      maxDist: Int, watermarkDelayMs: Long)
+      : Dataset[(Long, Int, Long, Long, Array[Long], java.sql.Timestamp)] = {
+    import ds.sparkSession.implicits._
+    val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
+    installed(ds).flatMap { case (did, tsUs, sig) =>
+      combos.iterator.zipWithIndex.map { case ((i, j), idx) =>
+        (graft.operators.Dedup.packBandKey(idx,
+            graft.operators.Dedup.chunkPairVal(sig, i, j)),
+          idx, did, tsUs, Array(sig),
+          new java.sql.Timestamp(tsUs / 1000))
       }
     }.toDF("bucket", "bidx", "docId", "tsUs", "sig", "eventTs")
       .withWatermark("eventTs", s"$watermarkDelayMs milliseconds")
       .as[(Long, Int, Long, Long, Array[Long], java.sql.Timestamp)]
-    val md = maxDist
-    val match_ : (Array[Long], Array[Long]) => Boolean =
-      (a, b) => java.lang.Long.bitCount(a(0) ^ b(0)) <= md
-    bandDedupStream(bandRows, match_, watermarkDelayMs, maxBucket)
   }
+
+  /** The Hamming verify of a [[hammingBands]] bucket: the two
+    * signatures differ in at most `maxDist` bits. */
+  private def hammingWithin(maxDist: Int): (Array[Long], Array[Long]) => Boolean =
+    (a, b) => java.lang.Long.bitCount(a(0) ^ b(0)) <= maxDist
 
   /** Streaming near-dup dedup over PRECOMPUTED 64-bit Hamming
     * signatures — the perceptual-media leg of the Kappa twin family:
@@ -839,24 +812,9 @@ object Streaming {
     * are a superset. */
   def hashDedupStream(ds: Dataset[(Long, Long, Long)] /* docId, tsUs, hash */ ,
       maxDist: Int, watermarkDelayMs: Long,
-      maxBucket: Int = Int.MaxValue): Dataset[BandVerdict] = {
-    import ds.sparkSession.implicits._
-    val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
-    val bandRows = installed(ds).flatMap { case (did, tsUs, sig) =>
-      combos.iterator.zipWithIndex.map { case ((i, j), idx) =>
-        (graft.operators.Dedup.packBandKey(idx,
-            graft.operators.Dedup.chunkPairVal(sig, i, j)),
-          idx, did, tsUs, Array(sig),
-          new java.sql.Timestamp(tsUs / 1000))
-      }
-    }.toDF("bucket", "bidx", "docId", "tsUs", "sig", "eventTs")
-      .withWatermark("eventTs", s"$watermarkDelayMs milliseconds")
-      .as[(Long, Int, Long, Long, Array[Long], java.sql.Timestamp)]
-    val md = maxDist
-    val match_ : (Array[Long], Array[Long]) => Boolean =
-      (a, b) => java.lang.Long.bitCount(a(0) ^ b(0)) <= md
-    bandDedupStream(bandRows, match_, watermarkDelayMs, maxBucket)
-  }
+      maxBucket: Int = Int.MaxValue): Dataset[BandVerdict] =
+    bandDedupStream(hammingBands(ds, maxDist, watermarkDelayMs),
+      hammingWithin(maxDist), watermarkDelayMs, maxBucket)
 
   /** The in-stream half of [[hashDedupIncrementalStream]] — the
     * [[hashDedupStream]] band state with the SIGNATURE riding each
@@ -870,21 +828,8 @@ object Streaming {
       stateMaxBucket: Int = Int.MaxValue)
       : Dataset[(Long, Long, Int, Long, Long)] = {
     import ds.sparkSession.implicits._
-    val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
-    val bandRows = installed(ds).flatMap { case (did, tsUs, sig) =>
-      combos.iterator.zipWithIndex.map { case ((i, j), idx) =>
-        (graft.operators.Dedup.packBandKey(idx,
-            graft.operators.Dedup.chunkPairVal(sig, i, j)),
-          idx, did, tsUs, Array(sig),
-          new java.sql.Timestamp(tsUs / 1000))
-      }
-    }.toDF("bucket", "bidx", "docId", "tsUs", "sig", "eventTs")
-      .withWatermark("eventTs", s"$watermarkDelayMs milliseconds")
-      .as[(Long, Int, Long, Long, Array[Long], java.sql.Timestamp)]
-    val md = maxDist
-    val match_ : (Array[Long], Array[Long]) => Boolean =
-      (a, b) => java.lang.Long.bitCount(a(0) ^ b(0)) <= md
-    bandDedupStreamGen(bandRows, match_, watermarkDelayMs, stateMaxBucket,
+    bandDedupStreamGen(hammingBands(ds, maxDist, watermarkDelayMs),
+      hammingWithin(maxDist), watermarkDelayMs, stateMaxBucket,
       (did, ts, bidx, matched, _, sig) => (did, ts, bidx, matched, sig(0)))
   }
 
@@ -899,23 +844,9 @@ object Streaming {
       maxBucket: Int = Int.MaxValue)
       : Dataset[(Long, Long, Int, Array[Long])] = {
     import ds.sparkSession.implicits._
-    val combos = graft.operators.Dedup.chunkPairCombos(maxDist)
-    val bandRows = installed(ds).flatMap { case (did, tsUs, sig) =>
-      combos.iterator.zipWithIndex.map { case ((i, j), idx) =>
-        (graft.operators.Dedup.packBandKey(idx,
-            graft.operators.Dedup.chunkPairVal(sig, i, j)),
-          idx, did, tsUs, Array(sig),
-          new java.sql.Timestamp(tsUs / 1000))
-      }
-    }.toDF("bucket", "bidx", "docId", "tsUs", "sig", "eventTs")
-      .withWatermark("eventTs", s"$watermarkDelayMs milliseconds")
-      .as[(Long, Int, Long, Long, Array[Long], java.sql.Timestamp)]
-    val md = maxDist
-    val match_ : (Array[Long], Array[Long]) => Boolean =
-      (a, b) => java.lang.Long.bitCount(a(0) ^ b(0)) <= md
-    bandDedupStreamGen(bandRows, match_, watermarkDelayMs, maxBucket,
-      (did, ts, bidx, _, all, _) => (did, ts, bidx, all),
-      collectAll = true)
+    bandDedupStreamGen(hammingBands(ds, maxDist, watermarkDelayMs),
+      hammingWithin(maxDist), watermarkDelayMs, maxBucket,
+      (did, ts, bidx, _, all, _) => (did, ts, bidx, all), collectAll = true)
   }
 
   /** Per-video collapse of [[hashMatchStream]] verdicts over PACKED
@@ -1468,46 +1399,6 @@ object Streaming {
           state.update(lastEmit)
           out.iterator
         })
-  }
-
-  /** `transformWithState` twin of [[throttleElapsedStream]] — the
-    * Spark 4 arbitrary-state API evaluated against fMGWS (SCALE.md
-    * records the decision). What it buys: typed `ValueState`/
-    * `ListState` cells persisted through the state-store encoder
-    * directly (no Kryo round-trip, so the Array-vs-ArrayDeque trap
-    * documented in CLAUDE.md disappears by construction), per-state
-    * TTL, and multiple independent state cells per key. What it costs:
-    * the operator requires the RocksDB state-store provider — the
-    * default HDFS-backed store refuses it (STATE_STORE_PROVIDER
-    * error) — so every deployment opts into RocksDB, and the API is
-    * marked Evolving in 4.x. Decision: the fMGWS twins stay the query
-    * path (they run on any store, and their Kryo states are
-    * spec-pinned); this twin exists as the migration template and is
-    * spec-held equal to both the fMGWS twin and the batch fold.
-    */
-  def throttleElapsedStreamTws(ds: Dataset[ThrottleEvent], windowUs: Long)
-      : Dataset[ThrottleEvent] = {
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val processor = new StatefulProcessor[String, ThrottleEvent, ThrottleEvent] {
-      @transient private var lastEmit: ValueState[Long] = _
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        lastEmit = getHandle.getValueState[Long]("lastEmit",
-          org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-      override def handleInputRows(key: String, rows: Iterator[ThrottleEvent],
-          timerValues: TimerValues): Iterator[ThrottleEvent] = {
-        var last = if (lastEmit.exists()) lastEmit.get() else Long.MinValue
-        val out = rows.toArray.sortBy(r => (r.tsUs, r.seq)).filter { r =>
-          if (last == Long.MinValue || r.tsUs - last >= windowUs) {
-            last = r.tsUs; true
-          } else false
-        }
-        lastEmit.update(last)
-        out.iterator
-      }
-    }
-    installed(ds).groupByKey(_.key)
-      .transformWithState(processor, TimeMode.None(), OutputMode.Append())
   }
 
   case class SidedEvent(key: String, okey: Long, notional: Double, isBuy: Boolean)

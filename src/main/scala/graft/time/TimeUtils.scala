@@ -1,13 +1,14 @@
 package graft.time
 
-/** Duration-string parsing and time-bucket helpers.
+/** Duration-string parsing.
   *
   * Mirrors the reference's duration grammar (`'1m'` → 60s, `'20s'`,
-  * `'1h'`, `'1d'`, `'125ms'`) from svoe `common/time/utils.py:12-17`, and
-  * its UTC-midnight-aligned bucketing (`get_sampling_bucket_ts`,
-  * `utils.py:40-51`). The reference keeps float epoch-seconds rounded to
-  * 3dp; we keep exact integer microseconds end-to-end (a deliberate
-  * precision upgrade, see SURVEY.md §7 risk register).
+  * `'1h'`, `'1d'`, `'125ms'`) from svoe `common/time/utils.py:12-17`.
+  * Its UTC-midnight-aligned bucketing (`get_sampling_bucket_ts`,
+  * `utils.py:40-51`) is the epoch-aligned `floorDiv` in L2Book's
+  * sampler. The reference keeps float epoch-seconds rounded to 3dp; we
+  * keep exact integer microseconds end-to-end (a deliberate precision
+  * upgrade, see SURVEY.md §7 risk register).
   */
 object TimeUtils {
   private val Pattern = """^\s*(\d+)\s*(ms|us|s|m|h|d|w)\s*$""".r
@@ -26,12 +27,5 @@ object TimeUtils {
         case "w"  => v * 604800L * 1000000L
       }
     case _ => throw new IllegalArgumentException(s"bad duration: '$s'")
-  }
-
-  /** Bucket start for an epoch-micros ts, buckets aligned to epoch
-    * (equivalently UTC midnight for divisors of a day). */
-  def bucketStartUs(tsUs: Long, widthUs: Long): Long = {
-    val q = Math.floorDiv(tsUs, widthUs)
-    q * widthUs
   }
 }

@@ -252,16 +252,25 @@ class BacktesterSpec extends AnyFunSuite {
       val f2 = (i % 4).toLong
       (f1, f2, if (f1 <= 4) 10.0 + f2 else 50.0 - f2)
     }.toDF("f1", "f2", "y").repartition(8)
-    val mses = Seq(1, 3, 8).map(it =>
-      Trainer.fitGBT(df, Seq("f1", "f2"), "y", maxIter = it, maxDepth = 3)
-        .trainMse(df, "y"))
+    // train MSE through the fitted Spark model's own frame scorer
+    import org.apache.spark.sql.functions.{avg, col, pow}
+    val assembled = new org.apache.spark.ml.feature.VectorAssembler()
+      .setInputCols(Array("f1", "f2")).setOutputCol("__features")
+      .transform(df.select(col("f1").cast("double").as("f1"),
+        col("f2").cast("double").as("f2"), col("y")))
+    def trainMse(m: Trainer.GBTModelWrapper): Double =
+      m.model.transform(assembled)
+        .select(avg(pow(col(m.model.getPredictionCol) - col("y"), 2)))
+        .head().getDouble(0)
+    val mses = Seq(1, 3, 8).map(it => trainMse(
+      Trainer.fitGBT(df, Seq("f1", "f2"), "y", maxIter = it, maxDepth = 3)))
     assert(mses(0) >= mses(1) && mses(1) >= mses(2),
       s"train MSE must be monotone nonincreasing in iterations: $mses")
     // stepSize 1.0: the boosted fit reproduces the separable target
     // exactly within a couple of rounds
     val exact = Trainer.fitGBT(df, Seq("f1", "f2"), "y", maxIter = 3,
       maxDepth = 3, stepSize = 1.0)
-    assert(exact.trainMse(df, "y") < 1e-12)
+    assert(trainMse(exact) < 1e-12)
     // and the single-row Model surface agrees with the frame scorer
     assert(math.abs(exact.predict(Array(2.0, 1.0)) - 11.0) < 1e-9)
     assert(math.abs(exact.predict(Array(7.0, 3.0)) - 47.0) < 1e-9)

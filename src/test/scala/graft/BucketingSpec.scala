@@ -187,48 +187,6 @@ class BucketingSpec extends AnyFunSuite {
     }
   }
 
-  test("hashIndexDupIds prefilter: broadcast left-semi, no index-side shuffle added") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, dir)
-    val side = substring(md5(col("doc_id").cast("string")), 1, 1)
-    val idxSigs = Dedup.simhash(docs.filter(side < "a"),
-      col("text"), col("doc_id"))
-    BucketedStore.write(Dedup.simhashChunks(idxSigs, 3), "graft_pf_idx",
-      tmp("graft_pf"), Seq("cidx", "cval"), buckets = 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // broadcast threshold OFF: the semi must broadcast via the
-      // EXPLICIT hint (bounded key space), not a size estimate
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val batch = Dedup.simhash(docs.filter(side >= "a"),
-        col("text"), col("doc_id"))
-      def dup(pf: Boolean) = Dedup.hashIndexDupIds(batch,
-        BucketedStore.read(spark, "graft_pf_idx"), maxDist = 3,
-        indexPrefilter = pf)
-      val withPf = dup(true)
-      val withoutPf = dup(false)
-      val p = withPf.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
-      assert(p.contains("LeftSemi") && p.contains("BroadcastHashJoin"),
-        s"prefilter must plan a broadcast left-semi:\n$p")
-      assert(p.contains("Bucketed: true"),
-        "the index scan must stay bucketed under the prefilter")
-      // exactly ONE extra hashpartitioning exchange is allowed: the
-      // distinct over the batch's band keys (bounded at bands x 2^16
-      // rows — metadata, never the index)
-      assert(exchanges(withPf) == exchanges(withoutPf) + 1,
-        s"prefilter shuffles: ${exchanges(withPf)} vs ${exchanges(withoutPf)}")
-      val a = withPf.orderBy("doc_id").collect().map(_.toSeq).toSeq
-      val b = withoutPf.orderBy("doc_id").collect().map(_.toSeq).toSeq
-      assert(a == b, "prefilter changed verdicts")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sql("DROP TABLE IF EXISTS graft_pf_idx")
-    }
-  }
-
   test("compactBuckets: appends collapse to one file per bucket, verdicts identical") {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
@@ -303,53 +261,5 @@ class BucketingSpec extends AnyFunSuite {
         "second vacuum must be a no-op")
       assert(verdict() == before, "vacuum changed verdicts")
     } finally spark.sql("DROP TABLE IF EXISTS graft_cmp_idx")
-  }
-
-  test("bucketed stream drain: the novelty tail join drops one exchange") {
-    import graft.streaming.Streaming
-    val docs = Tables.documents(spark, dir)
-    // drain the shingle-owner stream straight into a bucketed table
-    val owners = Streaming.runAvailableNowBucketed(
-      Streaming.shingleOwnerStream(Streaming.documentsStream(spark, dir),
-        col("text"), col("doc_id"), 3),
-      table = "graft_novelty_owners_spec", keys = Seq("s"), buckets = 4,
-      sortCols = Seq("s"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val sh = Dedup.explodeShingles(docs, col("text"), col("doc_id"), 3)
-        .select(col("doc_id"), xxhash64(col("s")).as("s"))
-      def tail(f: org.apache.spark.sql.DataFrame) = sh.join(f, "s")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shingles"),
-          sum(when(col("doc_id") === col("first_id"), 1L).otherwise(0L))
-            .as("n_novel"))
-        .select(col("doc_id"), col("n_shingles"), col("n_novel"),
-          expr("n_novel * 1000000 div n_shingles").as("novelty_ppm"))
-      val bucketed = tail(owners)
-      val p = plan(bucketed)
-      assert(p.contains("Bucketed: true"), s"owner scan not bucketed:\n$p")
-      // unbucketed owners: exchange(sh) + exchange(owners) + exchange
-      // for the doc_id agg = 3; bucketed owners: the owner side reads
-      // its placement from the scan = 2
-      val control = tail(owners.sparkSession.read.parquet(
-        spark.sql("DESCRIBE FORMATTED graft_novelty_owners_spec")
-          .filter(col("col_name") === "Location")
-          .head.getString(1)))
-      assert(exchanges(control) == 3,
-        s"control plan should shuffle both join sides + agg:\n${plan(control)}")
-      assert(exchanges(bucketed) == 2,
-        s"owner-side exchange survived bucketing:\n$p")
-      // semantics unchanged: equal to the batch novelty profile
-      val a = bucketed.collect().map(_.toSeq).toSet
-      val b = Dedup.noveltyProfile(docs, col("text"), col("doc_id"), 3)
-        .collect().map(_.toSeq).toSet
-      assert(a == b)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.sql("DROP TABLE IF EXISTS graft_novelty_owners_spec")
-    }
   }
 }

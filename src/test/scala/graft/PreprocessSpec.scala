@@ -158,6 +158,5 @@ class PreprocessSpec extends AnyFunSuite {
     assert(parseMicros("24h") == 86400000000L)
     assert(parseMicros("2d") == 2 * 86400000000L)
     assertThrows[IllegalArgumentException](parseMicros("5x"))
-    assert(bucketStartUs(3601000000L, 3600000000L) == 3600000000L)
   }
 }

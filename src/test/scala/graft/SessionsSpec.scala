@@ -116,4 +116,108 @@ class SessionsSpec extends AnyFunSuite {
     assert("writeStream".r.findAllMatchIn(streaming).size == 1,
       "Streaming.scala must drain through its one writeStream")
   }
+
+  /** Public defs of `src/main` that nothing outside their own
+    * definition line names, each with the reason it stays. */
+  private val uncalled = Map(
+    // svoe reference capabilities
+    "runSharded" -> "sharded backtest, SURVEY §3.3",
+    "scanSplitAtGaps" -> "the gap rule of svoe blocks.py:84-101",
+    "parseYaml" -> "FeaturizerConfig YAML entry",
+    "fitLinear" -> "trainer surface",
+    "fitGBT" -> "trainer surface",
+    "modelStrategy" -> "inference-loop surface: a model drives the backtest",
+    "exportLibsvm" -> "trainer export surface",
+    "exportMatrix" -> "trainer export surface",
+    "tsViolationsBySeq" -> "svoe df_utils.py:93-94 ordering check",
+    "windowedAgg" -> "the Kappa parity example: one per-event fold, batch and stream",
+    "registerQueryViews" -> "SQL entry point",
+    // reference twins that specs compare the query path against
+    "tviSided" -> "declarative twin of Preprocess.slidingTvi",
+    "anomalyExactFlag" -> "exact twin of the sliding anomaly flag",
+    "approxQuantiles" -> "the GK sketch the exact quantiles are checked against",
+    "simhashPairs" -> "join-form twin of simhashPairsBucketed and the streams",
+    "bpeMergeLoopNaive" -> "naive twin of bpeMergeLoop",
+    "lshBucket" -> "per-plane twin of the native graft_srp")
+
+  /** `text` with its comments blanked, newlines kept, so line numbers
+    * hold; string and char literals are copied as they are. Block
+    * comments nest, as in Scala. */
+  private def stripComments(text: String): String = {
+    val out = new StringBuilder
+    val n = text.length
+    var i = 0
+    var depth = 0
+    def blank(from: Int, to: Int): Unit =
+      (from until to).foreach(k => out += (if (text(k) == '\n') '\n' else ' '))
+    while (i < n) {
+      if (depth > 0 || text.startsWith("/*", i)) {
+        if (text.startsWith("/*", i)) { depth += 1; blank(i, i + 2); i += 2 }
+        else if (text.startsWith("*/", i)) { depth -= 1; blank(i, i + 2); i += 2 }
+        else { blank(i, i + 1); i += 1 }
+      } else if (text.startsWith("//", i)) {
+        val e = text.indexOf('\n', i)
+        val j = if (e < 0) n else e
+        blank(i, j); i = j
+      } else if (text.startsWith("\"\"\"", i)) {
+        val e = text.indexOf("\"\"\"", i + 3)
+        var j = if (e < 0) n else e + 3
+        while (j < n && text(j) == '"') j += 1
+        out ++= text.substring(i, j); i = j
+      } else if (text(i) == '"') {
+        var j = i + 1
+        while (j < n && text(j) != '"' && text(j) != '\n')
+          j += (if (text(j) == '\\') 2 else 1)
+        j = math.min(j + 1, n)
+        out ++= text.substring(i, j); i = j
+      } else if (text(i) == '\'' && i + 2 < n && text(i + 2) == '\'') {
+        out ++= text.substring(i, i + 3); i += 3
+      } else if (text(i) == '\'' && i + 3 < n && text(i + 1) == '\\' &&
+          text(i + 3) == '\'') {
+        out ++= text.substring(i, i + 4); i += 4
+      } else { out += text(i); i += 1 }
+    }
+    out.toString
+  }
+
+  test("caller lint: every public def of src/main is called, or allowlisted with a reason") {
+    import scala.jdk.CollectionConverters._
+    def read(root: Path): Map[Path, String] = {
+      val st = Files.walk(root)
+      try st.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(f => f -> stripComments(Files.readString(f))).toMap
+      finally st.close()
+    }
+    val main = read(Paths.get("src/main/scala"))
+    val bench = read(Paths.get("lifebench/scala")).values.toSeq
+    assert(main.nonEmpty && bench.nonEmpty, "run from the project root")
+    // a member of a top-level object or class (two-space indent);
+    // `private[pkg]` is visible to specs, so it counts as public here
+    val topLevel = """^(?:(?:private(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s""".r
+    val memberDef = """^  (?:(?:final|implicit|lazy|@\w+|private\[\w+\]|protected\[\w+\])\s+)*def\s+([A-Za-z_]\w*)""".r
+    val found = for {
+      (file, text) <- main.toSeq
+      lines = text.split("\n", -1).toIndexedSeq
+      kinds = lines.scanLeft(Option.empty[String]) { (k, l) =>
+        topLevel.findPrefixMatchOf(l).map(_.group(1)).orElse(k)
+      }.tail
+      (line, idx) <- lines.zipWithIndex
+      if kinds(idx).exists(k => k == "object" || k == "class")
+      name <- memberDef.findPrefixMatchOf(line).map(_.group(1))
+      if name != "main" && name != "apply"
+      word = ("(?<![A-Za-z0-9_])" + java.util.regex.Pattern.quote(name) +
+        "(?![A-Za-z0-9_])").r
+      rest = (lines.take(idx) ++ lines.drop(idx + 1)).mkString("\n")
+      others = main.collect { case (f, t) if f != file => t } ++ bench
+      if word.findFirstIn(rest).isEmpty &&
+        others.forall(t => word.findFirstIn(t).isEmpty)
+    } yield name
+    val names = found.toSet
+    val unlisted = names -- uncalled.keySet
+    val stale = uncalled.keySet -- names
+    assert(unlisted.isEmpty, s"public defs with no caller: $unlisted;" +
+      " delete them, or allowlist each with a reason")
+    assert(stale.isEmpty, s"allowlisted defs that now have a caller or" +
+      s" are gone: $stale; drop them from the list")
+  }
 }

@@ -29,10 +29,14 @@ class SimilaritySpec extends AnyFunSuite {
     import spark0.implicits._
     val withNull = emb.select(col("vec_id"), col("embedding"))
       .unionByName(Seq((99999L, null: Array[Float])).toDF("vec_id", "embedding"))
-    val cands = graft.operators.Dedup.lshCandidatePairs(withNull,
-        col("vec_id"), col("embedding"), bits = 6, tables = 4, dim = 64)
-      .filter(col("a_id") === 99999L || col("b_id") === 99999L)
-    assert(cands.count() == 0)
+    // threshold -1: every bucket-mate pair verifies, so the output is
+    // exactly the pairs the buckets formed
+    val pairs = graft.operators.Dedup.embeddingNearDupPairsLsh(withNull,
+        col("vec_id"), col("embedding"), threshold = -1.0, bits = 6,
+        tables = 4, dim = 64)
+    assert(!pairs.isEmpty, "vacuous fixture: no bucket formed a pair")
+    assert(pairs.filter(col("a_id") === 99999L || col("b_id") === 99999L)
+      .count() == 0)
     // and the bucket array itself is null, not zeros
     val arr = withNull.filter(col("vec_id") === 99999L)
       .select(graft.functions.VectorExpressions.srp_buckets(
@@ -460,85 +464,5 @@ class SimilaritySpec extends AnyFunSuite {
       .collect()
     assert(open.exists(r => r.getLong(0) == 0L && r.getLong(1) == 99999L
       && r.getInt(3) == 1))
-  }
-
-  test("sampleAnchors: deterministic md5-prefix pick, replayable by hand") {
-    val a1 = Similarity.sampleAnchors(emb, 16).select("vec_id")
-      .collect().map(_.getLong(0)).toSeq
-    val a2 = Similarity.sampleAnchors(emb, 16).select("vec_id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(a1 == a2 && a1.length == 16 && a1.distinct.length == 16)
-    // replay the rule driver-side: md5 of the decimal id string, then id
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h(id: Long): String = md.digest(id.toString.getBytes("UTF-8"))
-      .map(b => f"${b & 0xff}%02x").mkString
-    val expect = emb.select("vec_id").collect().map(_.getLong(0))
-      .sortBy(id => (h(id), id)).take(16).toSeq
-    assert(a1 == expect)
-  }
-
-  test("graphRecallSampled: exact graph scores 1e6 ppm, empty graph 0") {
-    val anchors = 12
-    val truthEdges = Similarity.bruteForceTopK(
-        emb, Similarity.sampleAnchors(emb, anchors), 5)
-      .select(col("q_id").as("src_id"), col("neighbor_id"))
-    val perfect = Similarity.graphRecallSampled(emb, truthEdges, 5, anchors)
-      .collect()
-    assert(perfect.length == anchors)
-    assert(perfect.forall(r => r.getLong(2) == 1000000L))
-    val empty = Similarity.graphRecallSampled(
-      emb, truthEdges.filter(lit(false)), 5, anchors).collect()
-    assert(empty.length == anchors && empty.forall(_.getLong(2) == 0L))
-    // the production LSH graph: one row per anchor, ppm in [0, 1e6]
-    val g = Similarity.knnGraph(emb, 5,
-      bits = Similarity.autoBits(emb.count()), dim = 64,
-      maxBucket = Similarity.KnnHotBucketCap)
-    val real = Similarity.graphRecallSampled(emb, g, 5, anchors).collect()
-    assert(real.length == anchors)
-    assert(real.forall(r => r.getLong(2) >= 0L && r.getLong(2) <= 1000000L))
-  }
-
-  test("graphRecallAnchorsOnly == full-graph recall, with and without cap pressure") {
-    // the graph-free probe path must reproduce the materialized graph's
-    // recall rows exactly — including when the cap subsamples real
-    // buckets (the anchor itself may or may not survive the sample)
-    for (cap <- Seq(Similarity.KnnHotBucketCap, 24)) {
-      val g = Similarity.knnGraph(emb, 5,
-        bits = Similarity.autoBits(emb.count()), dim = 64, maxBucket = cap)
-      val full = Similarity.graphRecallSampled(emb, g, 5, 16)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val fast = Similarity.graphRecallAnchorsOnly(emb, 5, 16, maxBucket = cap)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(fast == full, s"cap=$cap")
-    }
-  }
-
-  test("graphRecallAnchorsOnly retains no persisted RDD (r12 verdict #2)") {
-    // the probe path caches its exploded `members` frame; it must
-    // materialize the anchors-sized result and unpersist before
-    // returning, so a long-lived session calling the probe repeatedly
-    // parks nothing (the connectedComponents lifecycle)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val r = Similarity.graphRecallAnchorsOnly(emb, 5, 8).collect()
-    assert(r.length == 8)
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "recall probe must not retain new persisted RDDs")
-  }
-
-  test("annRecallSampled: anchor-count knob honored, ppm bounded") {
-    val r = Similarity.annRecallSampled(emb, k = 10, anchors = 8).collect()
-    assert(r.length == 8)
-    assert(r.forall(x => x.getLong(2) >= 0L && x.getLong(2) <= 1000000L))
-  }
-
-  test("cappedBucketStats: tiny cap reports pressure, huge cap reports none") {
-    val none = Similarity.cappedBucketStats(emb, bits = 0, dim = 64,
-      maxBucket = Int.MaxValue).collect()
-    assert(none.isEmpty)
-    val some = Similarity.cappedBucketStats(emb, bits = 1, dim = 64,
-      maxBucket = 1).collect()
-    // bits=1 -> 2 buckets/table over the whole corpus: every table capped
-    assert(some.nonEmpty)
-    assert(some.forall(r => r.getLong(1) >= 1L))
   }
 }

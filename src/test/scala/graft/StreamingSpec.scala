@@ -126,7 +126,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("corpusStateShards: input-derived, floored, capped at the session setting") {
     // tiny input -> the floor; huge target-relative input -> clamp to
-    // Int range (withDrainConfs applies the session cap); missing path
+    // Int range (the drain's Sessions.withConfs scope applies the
+    // session cap); missing path
     // -> None (keep the session default)
     val p = s"$dir/documents.parquet"
     assert(Streaming.corpusStateShards(spark, p) == Some(8))
@@ -634,7 +635,7 @@ class StreamingSpec extends AnyFunSuite {
       "HDFS-backed state artifacts found — default did not route to RocksDB")
     // session conf restored after the drain
     assert(spark.conf.getOption(StoreKey) == prev,
-      "withStateStore must restore the previous provider conf")
+      "Sessions.withConfs must restore the previous provider conf")
   }
 
   test("hashDedupMaintStream: in-loop appends promote later-trigger matches to dup_of_index") {
@@ -896,49 +897,6 @@ class StreamingSpec extends AnyFunSuite {
         .map(_.getLong(2)).toSet
       assert(streamed == batch && streamed == Set(1L, 3L, 5L, 6L, 7L))
     } finally q.stop()
-  }
-
-  test("transformWithState throttle twin == fMGWS twin == batch fold (RocksDB store)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1704067200000000L
-    val H = 3600000000L
-    val events = Seq(
-      ("u", t0, 1L, 1.0), ("u", t0 + 3 * H, 2L, 2.0), ("u", t0 + 7 * H, 3L, 3.0),
-      ("u", t0 + 9 * H, 4L, 4.0), ("u", t0 + 14 * H, 5L, 5.0),
-      ("w", t0, 6L, 6.0), ("w", t0 + 8 * H, 7L, 7.0))
-      .map(Streaming.ThrottleEvent.tupled)
-    val batch = graft.operators.Preprocess.throttleElapsed(
-        events.toDF("key", "tsUs", "seq", "value"), "tsUs", 6 * H,
-        Seq("key"), seq = Some("seq"))
-      .collect().map(_.getLong(2)).toSet
-
-    // transformWithState requires the RocksDB state-store provider
-    // (the default HDFS-backed store rejects it) — scoped to this query
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[Streaming.ThrottleEvent]
-      val q = Streaming.throttleElapsedStreamTws(input.toDS(), 6 * H)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("tws_throttle_out").start()
-      try {
-        input.addData(events.take(3): _*) // state must cross the batch line
-        q.processAllAvailable()
-        input.addData(events.drop(3): _*)
-        q.processAllAvailable()
-        val streamed = spark.table("tws_throttle_out").collect()
-          .map(_.getLong(2)).toSet
-        assert(streamed == batch && streamed == Set(1L, 3L, 5L, 6L, 7L))
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-    }
   }
 
   test("combine_latest: each event carries latest value of every feature") {
