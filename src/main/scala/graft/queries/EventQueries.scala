@@ -101,9 +101,9 @@ object EventQueries {
         val root = java.nio.file.Files.createTempDirectory("graft_cat_q").toString
         val cat = new graft.sources.BlockCatalog(s, root)
         val W = 7L * 86400000000L
-        // persisted once: each catalog write reads its slice twice (the
-        // fused hash+stats agg, then the data write) — 5 weekly writes
-        // would otherwise re-scan the parquet ~10x
+        // persisted once: the week listing, the weekly writes and the
+        // two idempotency re-writes would otherwise each re-scan the
+        // parquet
         val e = ev(s, dir)
           .select(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))

@@ -23,18 +23,6 @@ class BlockCatalog(val spark: SparkSession, root: String) {
   private def dataPath(definition: String, key: String) = s"$root/$definition/$key/data"
   private def metaPath = s"$root/_meta"
 
-  /** Order-independent content hash of a frame: decimal sum of row
-    * hashes (wrap-free under ANSI; duplicate-multiset-sensitive,
-    * unlike XOR). */
-  def contentHash(df: DataFrame): String = {
-    val cols = df.columns.sorted.map(col)
-    val h = df
-      .select(xxhash64(cols.toIndexedSeq: _*).cast(org.apache.spark.sql.types.DecimalType(38, 0))
-        .as("h"))
-      .agg(sum(col("h"))).collect()(0)
-    if (h.isNullAt(0)) "empty" else h.getDecimal(0).toBigInteger.toString(16)
-  }
-
   /** The raw append-only meta LOG: one row per catalog event —
     * op="add" (block stored) or op="drop" (block superseded by
     * compaction). APPEND-ONLY is the concurrency contract: every meta
@@ -67,41 +55,18 @@ class BlockCatalog(val spark: SparkSession, root: String) {
     * (definition, key) contract (racing writers could stamp the same
     * version; content-hash dedup keeps that harmless for adds).
     *
-    * Caching semantics (ADVICE r8, reworked r10): this public reader
-    * reflects the CURRENT log on every call — a read-only instance, or
-    * one polling between another process's appends, sees every commit
-    * (the r8 instance-lifetime cache answered a reader's first scan
-    * forever, so `scanAsOf(currentVersion(...))` could silently miss
-    * newer versions). Since r10 the scan itself rides [[logRows]], the
-    * fingerprint-validated collected log, so "reflects the current
-    * log" costs a directory listing, not a Spark job, when nothing
-    * changed. Writers additionally ride [[cachedVersion]]: the
-    * first append scans once, then each bump advances the instance
-    * cache — without that, the Nth write re-reads and aggregates the
-    * whole mergeSchema'd meta log, making N appends O(N^2) log scans
-    * (ADVICE r7). The write cache is exactly as safe as the version
-    * numbers themselves: both assume the single writer per
-    * (definition, key); an out-of-band append by ANOTHER instance is
-    * the same race the contract already excludes. A fresh read here
-    * also refreshes the write cache forward (never backward).
-    *
-    * The reader path itself is cached too (r10, recovering the r9
-    * correctness-for-speed cost — +0.3s across the two catalog queries
-    * at sf0.1, far worse at 100x catalog churn): the cache key is the
-    * meta log's FILE-LISTING fingerprint. The log is append-only
-    * parquet — every commit, from any process, materializes as new
-    * uniquely-named part files — so "the listing is unchanged" proves
-    * "no commit landed since the cached scan", which is exactly the
-    * staleness the r8 instance-lifetime cache got wrong. The listing
-    * is one driver-side filesystem call instead of a full mergeSchema
-    * parquet read + agg. */
-  def currentVersion(definition: String, key: String): Long = {
-    val k = (definition, key)
-    val scanned = scanVersion(definition, key)
-    val v = math.max(scanned, verCache.getOrElse(k, 0L))
-    verCache.update(k, v)
-    v
-  }
+    * Read from [[logRows]], so it reflects the CURRENT log on every
+    * call: a read-only instance, or one polling between another
+    * process's appends, sees every commit (the r8 instance-lifetime
+    * cache answered a reader's first scan forever, so
+    * `scanAsOf(currentVersion(...))` could silently miss newer
+    * versions). Our own appends advance the collected log in place
+    * ([[appendMetaRows]]), so N writes cost N directory listings, not
+    * N re-reads of the whole mergeSchema'd log (the O(N^2) of ADVICE
+    * r7). */
+  def currentVersion(definition: String, key: String): Long =
+    logRows.filter(r => r.definition == definition && r.key == key)
+      .map(_.ver).maxOption.getOrElse(0L)
 
   /** Names + sizes of every file in the (flat) meta log dir — the
     * append-only contract means any commit, from any process, changes
@@ -131,27 +96,19 @@ class BlockCatalog(val spark: SparkSession, root: String) {
 
   private var logCache: Option[(String, Seq[LogRow])] = None
 
-  /** Advance the collected-log cache IN PLACE after one of our own
-    * meta appends (r16): the appended rows are known exactly, so the
-    * next read needs no mergeSchema re-collect — the fingerprint is
-    * re-listed AFTER the append, pairing the new listing with
-    * old rows + ours. Exactly as safe as the version numbers
-    * themselves (single writer per (definition, key), the verCache
-    * contract): a FOREIGN append racing into the gap between our
-    * parquet append and the listing would be fingerprint-absorbed
-    * with its rows missing — the same race the contract already
-    * excludes. Cold cache (None) stays cold: nothing to advance. */
-  private def noteAppended(rows: Seq[LogRow]): Unit =
-    logCache = logCache.map { case (_, old) => (logFingerprint, old ++ rows) }
-
   /** The meta log COLLECTED, cached per listing fingerprint. The log
     * is metadata-sized by contract (one row per block event), so a
     * local copy is always affordable — and it converts the read-side
     * helpers (version lookup, hash-dedup check, live-block derivation)
     * from one Spark read + job EACH into zero jobs while the log is
     * unchanged, one small collect when it isn't (r10: ev_catalog_scan
-    * paid ~10 mergeSchema log reads per run; the listing fingerprint
-    * keeps every cache hit exactly as fresh as a rescan). */
+    * paid ~10 mergeSchema log reads per run; +0.3s across the two
+    * catalog queries at sf0.1, far worse at 100x catalog churn). The
+    * listing fingerprint keeps every cache hit exactly as fresh as a
+    * rescan: the log is append-only, so every commit, from any
+    * process, adds uniquely-named part files, and "the listing is
+    * unchanged" proves "no commit landed since the cached scan" —
+    * exactly the staleness the r8 instance-lifetime cache got wrong. */
   private def logRows: Seq[LogRow] = {
     val fp = logFingerprint
     logCache match {
@@ -252,50 +209,35 @@ class BlockCatalog(val spark: SparkSession, root: String) {
     if (!fs.rename(tmp, file))
       throw new java.io.IOException(
         s"meta append commit failed: rename $tmp -> $file")
+    // advance the collected-log cache IN PLACE (r16): the appended rows
+    // are known exactly, so the next read needs no mergeSchema
+    // re-collect — the fingerprint is re-listed AFTER the append,
+    // pairing the new listing with old rows + ours. Exactly as safe as
+    // the version numbers themselves (single writer per (definition,
+    // key)): a FOREIGN append racing into the gap between our append
+    // and the listing would be fingerprint-absorbed with its rows
+    // missing — the same race the contract already excludes. A cold
+    // cache (None) stays cold: nothing to advance.
+    logCache = logCache.map { case (_, old) => (logFingerprint, old ++ rows) }
   }
 
-  /** Write-path version lookup: instance cache, log scan only on the
-    * first touch of (definition, key). */
-  private def cachedVersion(definition: String, key: String): Long =
-    verCache.getOrElseUpdate((definition, key),
-      scanVersion(definition, key))
-
-  private def scanVersion(definition: String, key: String): Long = {
-    val rs = logRows.filter(r => r.definition == definition && r.key == key)
-    if (rs.isEmpty) 0L else rs.map(_.ver).max
-  }
-
-  private val verCache =
-    scala.collection.mutable.HashMap.empty[(String, String), Long]
-
-  /** Advance the instance version cache after a meta append. */
-  private def noteVersion(definition: String, key: String, ver: Long): Unit =
-    verCache.update((definition, key), ver)
-
-  /** The LIVE catalog view, derived from the log at read time:
-    * op="add" rows deduplicated on (definition, key, hash) — two racing
-    * writers of identical content collapse to one block — minus every
-    * tombstoned hash. Tombstones are permanent: a content hash, once
+  /** The LIVE blocks as of a version, derived from the collected log
+    * at read time: op="add" rows stamped <= asOfVer, deduplicated on
+    * (definition, key, hash) at their LOWEST version — two racing
+    * writers of identical content collapse to one block, the first
+    * cataloged — minus every tombstoned hash, sorted by (definition,
+    * key, ver, hash). Tombstones are permanent: a content hash, once
     * compacted away, stays known forever (its rows live on inside the
-    * compacted block, so re-admitting it would double-count). */
-  def meta: DataFrame = metaAsOf(Long.MaxValue)
-
-  /** The catalog view AS OF a version: the same add-minus-tombstone
-    * derivation over only the log rows stamped <= asOfVer — SNAPSHOT
-    * READS (time travel). A compaction's drops and adds share one
-    * version, so every snapshot sees either the pre-compaction blocks
-    * or the compacted ones, never a mix. */
-  def metaAsOf(asOfVer: Long): DataFrame = {
-    // served from the collected fingerprint-validated log (r16): the
-    // log is metadata-sized by contract, so the view is a local frame
-    // — zero Spark jobs while the log is unchanged (pre-r16 every call
-    // paid a mergeSchema parquet read + join). Add-dedup keeps the
-    // LOWEST version per (definition, key, hash) — first cataloged —
-    // where the DataFrame dropDuplicates kept an arbitrary one.
-    import spark.implicits._
-    val all = logRows
-    if (all.isEmpty) return spark.emptyDataFrame
-    val rs = all.filter(_.ver <= asOfVer)
+    * compacted block, so re-admitting it would double-count). The meta
+    * table is the single source of truth: a data directory not (yet)
+    * in meta — a write that crashed before its meta append, or a
+    * compaction leftover — is invisible garbage, never a double-count.
+    * Zero Spark jobs while the log is unchanged. `dk` narrows to one
+    * (definition, key). */
+  private def live(asOfVer: Long = Long.MaxValue,
+      dk: Option[(String, String)] = None): Seq[LogRow] = {
+    val rs = logRows.filter(r =>
+      r.ver <= asOfVer && dk.forall(_ == ((r.definition, r.key))))
     val drops = rs.filter(_.op == "drop")
       .map(r => (r.definition, r.key, r.hash)).toSet
     rs.filter(_.op == "add")
@@ -303,70 +245,94 @@ class BlockCatalog(val spark: SparkSession, root: String) {
       .map { case (_, g) => g.minBy(_.ver) }
       .filterNot(r => drops((r.definition, r.key, r.hash)))
       .toSeq.sortBy(r => (r.definition, r.key, r.ver, r.hash))
+  }
+
+  private def liveHashes(definition: String, key: String,
+      asOfVer: Long = Long.MaxValue): Seq[String] =
+    live(asOfVer, Some((definition, key))).map(_.hash)
+
+  /** The live catalog view ([[live]]) as a local frame of (definition,
+    * key, start_ts, end_ts, num_rows, hash). */
+  def meta: DataFrame = metaAsOf(Long.MaxValue)
+
+  /** The catalog view AS OF a version — SNAPSHOT READS (time travel).
+    * A compaction's drops and adds share one version, so every
+    * snapshot sees either the pre-compaction blocks or the compacted
+    * ones, never a mix. */
+  def metaAsOf(asOfVer: Long): DataFrame = {
+    import spark.implicits._
+    if (logRows.isEmpty) return spark.emptyDataFrame
+    live(asOfVer)
       .map(r => (r.definition, r.key, r.startTs, r.endTs, r.numRows, r.hash))
       .toDF("definition", "key", "start_ts", "end_ts", "num_rows", "hash")
   }
 
-  /** True iff the hash was EVER cataloged for (definition, key) — adds
-    * and tombstones alike (tombstoned content already lives inside a
-    * compacted block; re-storing it would duplicate rows). */
-  private def hashExists(definition: String, key: String, hash: String): Boolean =
-    logRows.exists(r =>
-      r.definition == definition && r.key == key && r.hash == hash)
+  /** Store a frame as one block, unless its content is empty or already
+    * cataloged for (definition, key) — adds and tombstones alike
+    * (tombstoned content already lives inside a compacted block;
+    * re-storing it would duplicate rows). Returns the "add" row for the
+    * caller to append at `ver`; the meta log is not touched here.
+    *
+    * ONE job: the frame is written once, partitioned by `day`, to
+    * `_staging/<uuid>` (the leading `_` hides it from partition
+    * discovery), and an [[org.apache.spark.sql.Observation]] on that
+    * write collects the content hash — the order-independent decimal
+    * sum of row xxhash64 over the sorted columns (wrap-free under ANSI;
+    * duplicate-multiset-sensitive, unlike XOR) — and the ts range and
+    * row count. The staging directory is then deleted (empty or known
+    * content) or renamed to `block=<hash>`. A `block=<hash>` already
+    * there is an unlisted crash leftover and is deleted first: Hadoop's
+    * `rename` onto an existing directory moves the source INSIDE it. */
+  private def store(df: DataFrame, definition: String, key: String,
+      tsUs: String, ver: Long): Option[LogRow] = {
+    val obs = org.apache.spark.sql.Observation()
+    val dir = dataPath(definition, key)
+    val staging = new org.apache.hadoop.fs.Path(
+      s"$dir/_staging/${java.util.UUID.randomUUID()}")
+    val cols = df.columns.sorted.map(col).toIndexedSeq
+    df.observe(obs,
+        sum(xxhash64(cols: _*).cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("h"),
+        min(col(tsUs)).as("start_ts"), max(col(tsUs)).as("end_ts"),
+        count(lit(1)).as("num_rows"))
+      .withColumn("day", date_format(timestamp_micros(col(tsUs)), "yyyy-MM-dd"))
+      .write.partitionBy("day").parquet(staging.toString)
+    val m = obs.get
+    val hash = Option(m("h")).map(_.asInstanceOf[java.math.BigDecimal]
+      .toBigInteger.toString(16))
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    hash.filterNot(h => logRows.exists(r =>
+        r.definition == definition && r.key == key && r.hash == h)) match {
+      case None =>
+        fs.delete(staging, true)
+        None
+      case Some(h) =>
+        val block = new org.apache.hadoop.fs.Path(s"$dir/block=$h")
+        fs.delete(block, true)
+        if (!fs.rename(staging, block))
+          throw new java.io.IOException(s"block commit failed: rename $staging -> $block")
+        Some(LogRow(definition, key, h, "add", ver, m("start_ts").asInstanceOf[Long],
+          m("end_ts").asInstanceOf[Long], m("num_rows").asInstanceOf[Long]))
+    }
+  }
 
   /** Store a ts-ordered frame as day-partitioned parquet + one metadata
-    * row; skipped (false) when the identical content is already
-    * cataloged. `tsUs` must be an epoch-micros Long column name.
+    * row; skipped (false) when the frame is empty or the identical
+    * content is already cataloged. `tsUs` must be an epoch-micros Long
+    * column name. The frame's plan runs once.
     *
-    * Crash-safe idempotency: the data lands under the deterministic
-    * partition dir `block=<contentHash>` with overwrite mode, and the
-    * meta row is appended only afterwards. A retry after a crash
-    * between the two writes overwrites the same block dir (no
-    * duplication) and then records the meta row; a retry after both
+    * Crash-safe idempotency: the data is written to a staging directory
+    * and renamed to the deterministic partition dir `block=<hash>`, and
+    * the meta row is appended only afterwards. A crash before the
+    * rename leaves a `_staging` leftover that scans never read and
+    * [[vacuum]] removes; a crash between the rename and the meta append
+    * leaves an unlisted block dir that a retry replaces (no
+    * duplication) before recording the meta row; a retry after both
     * simply hits the hash check. */
-  def write(df: DataFrame, definition: String, key: String, tsUs: String): Boolean = {
-    // ONE aggregation pass computes the content hash AND the catalog
-    // stats — at scale each stored block costs a single read before the
-    // data write, not two (hash job + stats job). Same hash definition
-    // as contentHash (order-independent decimal sum of row xxhash64).
-    val cols = df.columns.sorted.map(col)
-    val agg = df
-      .select(xxhash64(cols.toIndexedSeq: _*)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("h"),
-        col(tsUs).as("t"))
-      .agg(sum(col("h")).as("hs"), min(col("t")).as("start_ts"),
-        max(col("t")).as("end_ts"), count(lit(1)).as("num_rows"))
-      .collect()(0)
-    if (agg.isNullAt(0)) return false // empty frame: nothing to store
-    val hash = agg.getDecimal(0).toBigInteger.toString(16)
-    if (hashExists(definition, key, hash)) return false
-    val withDay = df.withColumn("day",
-      date_format(timestamp_micros(col(tsUs)), "yyyy-MM-dd"))
-    withDay.write.mode("overwrite").partitionBy("day")
-      .parquet(s"${dataPath(definition, key)}/block=$hash")
-    val ver = cachedVersion(definition, key) + 1L
-    val row = LogRow(definition, key, hash, "add", ver,
-      agg.getLong(1), agg.getLong(2), agg.getLong(3))
-    appendMetaRows(Seq(row)) // driver-side commit — no Spark job
-    noteVersion(definition, key, ver)
-    noteAppended(Seq(row))
-    true
-  }
-
-  /** Block hashes the catalog currently lists for (definition, key) —
-    * the set of LIVE blocks. Scans filter on it so the meta table is
-    * the single source of truth: a data directory not (yet) in meta —
-    * a write that crashed before its meta append, or a compaction
-    * leftover — is invisible garbage, never a double-count. */
-  private def liveHashes(definition: String, key: String,
-      asOfVer: Long = Long.MaxValue): Seq[String] = {
-    // same add-minus-tombstone derivation as metaAsOf, over the cached
-    // collected log — zero Spark jobs when the log is unchanged
-    val rs = logRows.filter(r =>
-      r.definition == definition && r.key == key && r.ver <= asOfVer)
-    val drops = rs.filter(_.op == "drop").map(_.hash).toSet
-    rs.filter(_.op == "add").map(_.hash).distinct.filterNot(drops)
-  }
+  def write(df: DataFrame, definition: String, key: String, tsUs: String): Boolean =
+    store(df, definition, key, tsUs, currentVersion(definition, key) + 1L) match {
+      case Some(row) => appendMetaRows(Seq(row)); true
+      case None => false
+    }
 
   /** Full scan of a (definition, key) table (meta-listed blocks only;
     * `block` is a partition column, so the isin filter prunes
@@ -409,41 +375,36 @@ class BlockCatalog(val spark: SparkSession, root: String) {
   }
 
   /** Reclaim data directories no longer live in the CURRENT view
-    * (tombstoned by compaction). After a vacuum, snapshots that
-    * referenced the reclaimed blocks are no longer readable — the
+    * (tombstoned by compaction), and the `_staging` leftovers of
+    * writes that died before their rename. After a vacuum, snapshots
+    * that referenced the reclaimed blocks are no longer readable — the
     * retention trade every compact/vacuum design makes; vacuum when
-    * the reproducibility window has passed. Returns directories
+    * the reproducibility window has passed. Like compaction, run it
+    * from the (definition, key)'s one writer: a concurrent write's
+    * staging directory would be swept too. Returns block directories
     * deleted. */
   def vacuum(definition: String, key: String): Int = {
     val live = liveHashes(definition, key).toSet
-    val dropped = logRows
-      .filter(r => r.definition == definition && r.key == key && r.op == "drop")
-      .map(_.hash).distinct
-      .filterNot(live)
+    val dead = logRows
+      .filter(r => r.definition == definition && r.key == key)
+      .map(_.hash).distinct.filterNot(live)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
-    var n = 0
-    dropped.foreach { h =>
-      val p = new org.apache.hadoop.fs.Path(s"${dataPath(definition, key)}/block=$h")
-      if (fs.exists(p)) { fs.delete(p, true); n += 1 }
-    }
-    n
+    val dir = dataPath(definition, key)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_staging"), true)
+    dead.count(h => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/block=$h"), true))
   }
 
   /** Contiguous covered ranges for a (definition, key): catalog blocks
     * sorted by start_ts merge while the inter-block gap (next start_ts
     * minus running end_ts) is <= maxGapUs; a larger gap starts a new
     * range. Mirrors the reference's gap rule splitting block ranges
-    * (svoe `featurizer/blocks/blocks.py:84-101`, <=1s default). The
-    * collect is catalog metadata (one row per block), not data. */
+    * (svoe `featurizer/blocks/blocks.py:84-101`, <=1s default). Read
+    * from the live view ([[live]]): catalog metadata, not data. */
   def coveredRanges(definition: String, key: String,
       maxGapUs: Long = 1000000L): Seq[(Long, Long)] = {
-    val m = meta
-    if (!m.columns.contains("start_ts")) return Seq.empty
-    val blocks = m.filter(col("definition") === definition && col("key") === key)
-      .select("start_ts", "end_ts")
-      .orderBy(col("start_ts"), col("end_ts"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val blocks = live(dk = Some((definition, key)))
+      .map(r => (r.startTs, r.endTs)).sorted
     blocks.foldLeft(Vector.empty[(Long, Long)]) { case (acc, (s, e)) =>
       acc.lastOption match {
         case Some((rs, re)) if s - re <= maxGapUs =>
@@ -482,52 +443,33 @@ class BlockCatalog(val spark: SparkSession, root: String) {
     * whole step one commit at cluster scale, class scaladoc). */
   def compactSmallBlocks(definition: String, key: String, targetRows: Long,
       tsUs: String = "ts_us"): Int = {
-    val m = meta
-    if (!m.columns.contains("hash")) return 0
-    val blocks = m.filter(col("definition") === definition && col("key") === key)
-      .select("start_ts", "end_ts", "num_rows", "hash")
-      .orderBy(col("start_ts"), col("end_ts"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
+    val blocks = live(dk = Some((definition, key))).sortBy(r => (r.startTs, r.endTs))
     // greedy adjacent grouping to the row target
-    val groups = scala.collection.mutable.ArrayBuffer.empty[Vector[(Long, Long, Long, String)]]
-    var cur = Vector.empty[(Long, Long, Long, String)]
+    val groups = scala.collection.mutable.ArrayBuffer.empty[Vector[LogRow]]
+    var cur = Vector.empty[LogRow]
     var curRows = 0L
     blocks.foreach { b =>
-      cur :+= b; curRows += b._3
+      cur :+= b; curRows += b.numRows
       if (curRows >= targetRows) { groups += cur; cur = Vector.empty; curRows = 0L }
     }
     if (cur.nonEmpty) groups += cur
     val toCompact = groups.filter(_.size > 1)
     if (toCompact.isEmpty) return 0
 
-    val newRows = toCompact.map { grp =>
-      val combined = grp.map(b =>
-          spark.read.parquet(s"${dataPath(definition, key)}/block=${b._4}")
-            .drop("day"))
-        .reduce(_ unionByName _)
-      val hash = contentHash(combined)
-      val withDay = combined.withColumn("day",
-        date_format(timestamp_micros(col(tsUs)), "yyyy-MM-dd"))
-      withDay.write.mode("overwrite").partitionBy("day")
-        .parquet(s"${dataPath(definition, key)}/block=$hash")
-      (definition, key, grp.map(_._1).min, grp.map(_._2).max,
-        grp.map(_._3).sum, hash)
-    }
     // APPEND tombstones for the compacted members + adds for the new
     // blocks — never rewrite the log (see scaladoc: a concurrent
     // writer's append must survive this). ONE version for the whole
     // compaction: snapshots see pre- or post-compaction, never a mix.
     // Superseded data DIRECTORIES stay on disk for snapshot reads
     // ([[scanAsOf]]); [[vacuum]] reclaims them when the
-    // reproducibility window has passed.
-    val ver = cachedVersion(definition, key) + 1L
-    val appended =
-      toCompact.flatten.toSeq.map(b =>
-        LogRow(definition, key, b._4, "drop", ver, b._1, b._2, b._3)) ++
-      newRows.map(t => LogRow(t._1, t._2, t._6, "add", ver, t._3, t._4, t._5))
-    appendMetaRows(appended) // driver-side commit — no Spark job
-    noteVersion(definition, key, ver)
-    noteAppended(appended)
+    // reproducibility window has passed. Each group is one scan of the
+    // table pruned to its members' block directories.
+    val ver = currentVersion(definition, key) + 1L
+    val table = spark.read.parquet(dataPath(definition, key))
+    val added = toCompact.flatMap(grp => store(
+      table.filter(col("block").isin(grp.map(_.hash): _*)).drop("block", "day"),
+      definition, key, tsUs, ver))
+    appendMetaRows(toCompact.flatten.toSeq.map(_.copy(op = "drop", ver = ver)) ++ added)
     toCompact.size
   }
 

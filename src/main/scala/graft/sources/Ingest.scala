@@ -50,8 +50,9 @@ object Ingest {
       tsUs: String,
       rowsPerBlock: Long): Report = {
     val spark = raw.sparkSession
-    // one parse of the raw input: count, content hash, range sampling,
-    // the write itself, and the stats agg all reuse the cached frame
+    // one parse of the raw input: the count, the range sampling and
+    // the catalog write (which collects hash and stats on its one
+    // pass) all reuse the cached frame
     val normalized = normalize(raw)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -23,8 +23,9 @@ import graft.sources.BlockCatalog
   * drain always stops with its last buffer below the target, so
   * `availableNow = true` with `minRowsPerBlock > 0` is rejected. When
   * every row must land, run with minRowsPerBlock=0 (flush per batch,
-  * at-least-once via content-hash idempotency) and compact post hoc
-  * with `BlockCatalog.compactSmallBlocks`.
+  * at-least-once via content-hash idempotency; nothing is persisted,
+  * since the catalog write runs each micro-batch's plan once) and
+  * compact post hoc with `BlockCatalog.compactSmallBlocks`.
   *
   * `start` calls [[StreamingSession.install]] on the frame's session
   * before the query starts. That sets [[LocalCheckpointFileManager]]
@@ -59,14 +60,10 @@ object BlockWriter {
         else Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (minRowsPerBlock <= 0L) {
-          // flush-per-batch path: the catalog write reads the batch
-          // twice (its fused hash+stats aggregation, which also
-          // answers "empty", then the parquet write). The persist makes
-          // the first read fill the cache and the second read it, so a
-          // stateful upstream runs once per micro-batch, not twice.
-          val p = batch.persist()
-          try catalog.write(p, definition, key, tsUs)
-          finally p.unpersist()
+          // flush-per-batch: the catalog write runs the batch's plan
+          // once (hash and stats ride the data write), so a stateful
+          // upstream runs once per micro-batch with nothing persisted
+          catalog.write(batch, definition, key, tsUs)
           ()
         } else if (!batch.isEmpty) {
           val p = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, lit, sum, udf, xxhash64}
+import org.apache.spark.sql.types.DecimalType
 import graft.sources.BlockCatalog
+import graft.streaming.BlockWriter
 
 class BlockCatalogSpec extends AnyFunSuite {
 
@@ -270,5 +273,110 @@ class BlockCatalogSpec extends AnyFunSuite {
       assert(cat.scan("feat", "K", day0, day0 + 9 * 60000000L).count() == 10)
     }
     assert(!cmds.exists(_.startsWith("ls")), cmds.mkString("\n"))
+  }
+
+  test("write runs its input plan once, and so does a flush-per-batch BlockWriter drain") {
+    val acc = spark.sparkContext.longAccumulator("graft_catalog_rows")
+    val bump = udf { (v: Double) => acc.add(1L); v }
+    val cat = new BlockCatalog(spark, Files.createTempDirectory("graft_once").toString)
+    val df = spark.range(40)
+      .select((lit(day0) + col("id") * 1000000L).as("ts_us"),
+        bump(col("id").cast("double")).as("v"))
+    assert(cat.write(df, "feat", "K", "ts_us"))
+    assert(acc.value == 40L, "the written frame's plan ran more than once")
+
+    acc.reset()
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Long, Double)]
+    val q = BlockWriter.start(
+      input.toDS().toDF("ts_us", "v").withColumn("v", bump(col("v"))),
+      cat, "feat", "S", "ts_us", triggerMs = 0L)
+    try {
+      input.addData((0 until 10).map(i => (day0 + i, i.toDouble)))
+      q.processAllAvailable()
+      input.addData((10 until 15).map(i => (day0 + i, i.toDouble)))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(acc.value == 15L, "a micro-batch's plan ran more than once")
+    assert(cat.scanAll("feat", "S").count() == 15L)
+  }
+
+  test("hash continuity: a block directory is named by the decimal sum of row xxhash64") {
+    // catalogs written before the single-pass write dedup against
+    // writes after it only if the hash formula is unchanged
+    val root = Files.createTempDirectory("graft_hash").toString
+    val cat = new BlockCatalog(spark, root)
+    val df = (0 until 30).map(i => (day0 + i * 3600000000L, i.toDouble, s"s$i"))
+      .toDF("ts_us", "v", "name")
+    assert(cat.write(df, "feat", "K", "ts_us"))
+    val h = df.select(xxhash64(df.columns.sorted.map(col).toIndexedSeq: _*)
+        .cast(DecimalType(38, 0)).as("h"))
+      .agg(sum(col("h"))).collect()(0).getDecimal(0).toBigInteger.toString(16)
+    val dirs = new java.io.File(s"$root/feat/K/data").list().filter(_.startsWith("block="))
+    assert(dirs.toSeq == Seq(s"block=$h"))
+    assert(cat.meta.select("hash").as[String].collect().toSeq == Seq(h))
+  }
+
+  test("a _staging leftover is invisible to scans, and vacuum removes it") {
+    val root = Files.createTempDirectory("graft_staging").toString
+    val cat = new BlockCatalog(spark, root)
+    val df = (0 until 20).map(i => (day0 + i * 1000000L, i.toDouble)).toDF("ts_us", "v")
+    assert(cat.write(df, "feat", "K", "ts_us"))
+    // a write that died between its staging write and its rename
+    val staging = new java.io.File(s"$root/feat/K/data/_staging/crashed")
+    df.withColumn("day", lit("2024-01-01"))
+      .write.partitionBy("day").parquet(staging.toString)
+    assert(staging.listFiles().exists(_.getName.startsWith("day=")))
+    assert(cat.scanAll("feat", "K").count() == 20L)
+    assert(cat.vacuum("feat", "K") == 0)
+    assert(!staging.getParentFile.exists())
+    assert(cat.scanAll("feat", "K").count() == 20L)
+  }
+
+  test("re-writing over an unlisted block directory replaces it, with no nesting") {
+    val root = Files.createTempDirectory("graft_nest").toString
+    val cat = new BlockCatalog(spark, root)
+    val df = (0 until 50).map(i => (day0 + i * 3600000000L, i.toDouble)).toDF("ts_us", "v")
+    assert(cat.write(df, "feat", "K", "ts_us"))
+    // lose the meta append: block=<hash> stays on disk, unlisted
+    new scala.reflect.io.Directory(new java.io.File(s"$root/_meta")).deleteRecursively()
+    assert(cat.write(df, "feat", "K", "ts_us"))
+    val data = new java.io.File(s"$root/feat/K/data")
+    val blocks = data.listFiles().filter(_.getName.startsWith("block="))
+    assert(blocks.length == 1)
+    val subdirs = blocks(0).listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq
+    assert(subdirs == Seq("day=2024-01-01", "day=2024-01-02", "day=2024-01-03"), subdirs)
+    assert(cat.scanAll("feat", "K").count() == 50L)
+  }
+
+  test("compaction reads a group in one scan: 2 and 6 members run the same jobs") {
+    def jobsToCompact(members: Int): Int = {
+      val cat = new BlockCatalog(spark, Files.createTempDirectory("graft_onescan").toString)
+      (0 until members).foreach { g =>
+        val b = (0 until 3).map(i => (day0 + (g * 3 + i) * 3600000000L, (g * 3 + i).toDouble))
+        assert(cat.write(b.toDF("ts_us", "v"), "t", "K", "ts_us"))
+      }
+      val group = s"graft_compact_$members"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup(group, group)
+        try assert(cat.compactSmallBlocks("t", "K", targetRows = Long.MaxValue) == 1)
+        finally sc.clearJobGroup()
+        // the listener bus delivers asynchronously; drain it first
+        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      } finally sc.removeSparkListener(listener)
+      assert(cat.scanAll("t", "K").count() == members * 3L)
+      jobs.get
+    }
+    val (two, six) = (jobsToCompact(2), jobsToCompact(6))
+    assert(two == six, s"2 members: $two jobs, 6 members: $six jobs")
   }
 }

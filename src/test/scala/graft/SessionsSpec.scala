@@ -115,6 +115,9 @@ class SessionsSpec extends AnyFunSuite {
     val streaming = sources(Paths.get("graft/streaming/Streaming.scala"))
     assert("writeStream".r.findAllMatchIn(streaming).size == 1,
       "Streaming.scala must drain through its one writeStream")
+    val catalog = sources(Paths.get("graft/sources/BlockCatalog.scala"))
+    assert("xxhash64\\(".r.findAllMatchIn(catalog).size == 1,
+      "BlockCatalog.scala must define the block hash in one place")
   }
 
   /** Public defs of `src/main` that nothing outside their own
