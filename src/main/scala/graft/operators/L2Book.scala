@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
 
 /** L2 order-book snapshot reconstruction (svoe `l2_snapshot_fd.py:21-161`
   * + state machine `l2_snapshot_fd/utils.py:10-89`, A4 — the reference's
@@ -17,12 +16,13 @@ import org.apache.spark.sql.functions.col
   *   - with `samplingUs` set, only the last snapshot per time bucket is
   *     emitted (svoe `sampling='1s'` mode — its fast path).
   *
-  * Execution: secondary sort, not a driver loop — `repartition(key)` +
-  * `sortWithinPartitions(key, ts, seq)` + `mapPartitions` with one
-  * mutable book per key run. Scales to any number of instruments (the
+  * Execution: the book is one [[KeyedFold]] ([[fold]]); its batch
+  * runner is a secondary sort, not a driver loop — `repartition(key)` +
+  * `sortWithinPartitions(key, ts, seq)` + one partition walk with one
+  * mutable book per key. Scales to any number of instruments (the
   * shuffle is one exchange on instrument; state is per-key and bounded
-  * by book depth). The streaming twin runs the same `BookState` inside
-  * `flatMapGroupsWithState` (graft.streaming).
+  * by book depth). The stream runner feeds the same fold from
+  * `flatMapGroupsWithState` (Streaming.l2BookStream).
   */
 object L2Book {
 
@@ -86,6 +86,23 @@ object L2Book {
       }
     }
 
+    /** [snapTs, #bids, (price, size) bits..., #asks, (price, size)
+      * bits...]: the bit-exact state codec. */
+    def encode: Array[Long] = {
+      val out = new Array[Long](3 + 2 * (bids.size + asks.size))
+      out(0) = snapTs
+      var p = 1
+      Seq(bids, asks).foreach { side =>
+        out(p) = side.size; p += 1
+        side.forEach { (price, size) =>
+          out(p) = java.lang.Double.doubleToRawLongBits(price)
+          out(p + 1) = java.lang.Double.doubleToRawLongBits(size)
+          p += 2
+        }
+      }
+      out
+    }
+
     def top(depth: Int): (Seq[Level], Seq[Level]) = {
       import scala.jdk.CollectionConverters._
       (bids.entrySet().iterator().asScala.take(depth)
@@ -95,57 +112,53 @@ object L2Book {
     }
   }
 
+  object BookState {
+    def decode(a: Array[Long], from: Int): BookState = {
+      val book = new BookState
+      book.snapTs = a(from)
+      var p = from + 1
+      Seq(book.bids, book.asks).foreach { side =>
+        val n = a(p).toInt; p += 1
+        (0 until n).foreach { _ =>
+          side.put(java.lang.Double.longBitsToDouble(a(p)),
+            java.lang.Double.longBitsToDouble(a(p + 1)))
+          p += 2
+        }
+      }
+      book
+    }
+  }
+
+  /** The book as a [[KeyedFold]]: rows ordered by (ts_us, seq), one
+    * run per timestamp — or, with `samplingUs`, per sampling bucket —
+    * all of whose updates apply before the run emits one snapshot at its
+    * last timestamp. */
+  def fold(depth: Int, samplingUs: Option[Long]): KeyedFold[Update, Snapshot] =
+    new KeyedFold[Update, Snapshot] {
+      type S = BookState
+      val order: Seq[KeyedFold.Field[Update]] = Seq(
+        KeyedFold.LongField[Update]("ts_us", _.ts_us), KeyedFold.LongField[Update]("seq", _.seq))
+      override def runKey(u: Update): Long = samplingUs match {
+        case Some(w) => Math.floorDiv(u.ts_us, w)
+        case None => u.ts_us
+      }
+      def init(): BookState = new BookState
+      def step(book: BookState, run: scala.collection.IndexedSeq[Update],
+          emit: Snapshot => Unit): Unit = {
+        run.foreach(book.apply)
+        val (b, a) = book.top(depth)
+        emit(Snapshot(run(0).instrument, run.last.ts_us, b, a))
+      }
+      def encode(book: BookState): Array[Long] = book.encode
+      def decode(a: Array[Long], from: Int): BookState = BookState.decode(a, from)
+    }
+
   /** Batch replay: updates (any partitioning) → per-ts (or per-bucket
     * when sampling) top-`depth` snapshots per instrument. */
   def replay(updates: DataFrame, depth: Int, samplingUs: Option[Long] = None)
       : Dataset[Snapshot] = {
-    val spark = updates.sparkSession
-    import spark.implicits._
-    updates
-      .repartition(col("instrument"))
-      .sortWithinPartitions("instrument", "ts_us", "seq")
-      .as[Update]
-      .mapPartitions { iter =>
-        new Iterator[Snapshot] {
-          private val it = iter.buffered
-          private var state: BookState = _
-          private var cur: String = null
-          private var pending: Option[Snapshot] = None
-
-          private def bucket(ts: Long): Long =
-            samplingUs.map(w => Math.floorDiv(ts, w)).getOrElse(ts)
-
-          override def hasNext: Boolean = pending.isDefined || advance()
-
-          private def advance(): Boolean = {
-            while (it.hasNext && pending.isEmpty) {
-              val u = it.head
-              if (cur == null || u.instrument != cur) {
-                cur = u.instrument
-                state = new BookState
-              }
-              // apply all rows of this (instrument, ts)
-              val ts = u.ts_us
-              while (it.hasNext && it.head.instrument == cur && it.head.ts_us == ts)
-                state.apply(it.next())
-              // emit unless the next row falls in the same sampling bucket
-              val more = it.hasNext && it.head.instrument == cur
-              val emit = !more || bucket(it.head.ts_us) != bucket(ts)
-              if (emit) {
-                val (b, a) = state.top(depth)
-                pending = Some(Snapshot(cur, ts, b, a))
-              }
-            }
-            pending.isDefined
-          }
-
-          override def next(): Snapshot = {
-            if (!hasNext) throw new NoSuchElementException
-            val s = pending.get
-            pending = None
-            s
-          }
-        }
-      }
+    import updates.sparkSession.implicits._
+    KeyedFold.runBatch(updates.as[Update], Seq("instrument"),
+      (u: Update) => u.instrument, fold(depth, samplingUs))
   }
 }

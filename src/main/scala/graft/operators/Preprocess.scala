@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField}
 
 /** P4 source preprocessing (svoe `cryptofeed_l2_book_incremental.py:
   * 22-50`, `cryptotick utils.py:6-14`): rename/normalize raw columns
@@ -50,121 +51,72 @@ object Preprocess {
         count(lit(1)).as("n_rows"))
   }
 
-  /** Sliding-window population stddev as a per-key JVM fold: the
-    * declarative range frame (WindowOps.volatility) re-evaluates its
-    * aggregate per row through Spark's window machinery (O(n*w) with a
-    * heavy constant); this computes the same quantity over an explicit
-    * deque in a tight loop after the same single shuffle + sort.
-    * Two-pass (mean, then centered second moment) per emission — the
-    * most numerically stable direct form, so the 4dp-rounded results
-    * agree with the declarative/DuckDB formulations.
+  /** Sliding-window population stddev by the batch runner of
+    * [[KeyedFold.stddevPop]]: the declarative range frame
+    * (WindowOps.volatility) re-evaluates its aggregate per row through
+    * Spark's window machinery (O(n*w) with a heavy constant); the fold
+    * computes the same quantity over an explicit window after the same
+    * single shuffle + sort, two-pass per emission, so the 4dp-rounded
+    * results agree with the declarative/DuckDB formulations.
     *
     * Input must carry a Long `okeyCol` (total order key); the window is
     * `[okey - rangeUnits, okey]`, inclusive, matching rangeBetween.
     */
   def slidingStddevPop(df: DataFrame, okeyCol: String, valueCol: String,
       rangeUnits: Long, by: Seq[String], outCol: String): DataFrame =
-    slidingRangeFold(df, okeyCol, Seq(valueCol), rangeUnits, by, outCol,
-      nullable = false) { vs =>
-      val n = vs(0).size()
-      var sum = 0.0
-      val it1 = vs(0).iterator()
-      while (it1.hasNext) sum += it1.next()
-      val mean = sum / n
-      var m2 = 0.0
-      val it2 = vs(0).iterator()
-      while (it2.hasNext) { val d = it2.next() - mean; m2 += d * d }
-      math.sqrt(m2 / n)
-    }
+    KeyedFold.runFrame(df, by, Seq(StructField(outCol, DoubleType, nullable = false)),
+      KeyedFold.stddevPop(KeyedFold.rowLong(df, okeyCol),
+        KeyedFold.rowDouble(df, valueCol), rangeUnits)(KeyedFold.plus(_, _)))
 
   /** Sliding-window trade-volume imbalance 2*(b-s)/(b+s) (null when
-    * b+s = 0) as the same per-key JVM fold — the scale default for
-    * ev_tvi_24h's range frame. Inputs must be the per-row buy/sell
-    * contributions in exact cents (integer-valued doubles): sums of
-    * integers under 2^53 are exact in any order, so the fold equals the
-    * declarative windowed-sum formulation cell-for-cell. */
+    * b+s = 0) by the batch runner of [[KeyedFold.tvi]] — the scale
+    * default for ev_tvi_24h's range frame. Inputs must be the per-row
+    * buy/sell contributions in exact cents (integer-valued doubles):
+    * sums of integers under 2^53 are exact in any order, so the fold
+    * equals the declarative windowed-sum formulation cell-for-cell. */
   def slidingTvi(df: DataFrame, okeyCol: String, buyCol: String,
       sellCol: String, rangeUnits: Long, by: Seq[String],
       outCol: String): DataFrame =
-    slidingRangeFold(df, okeyCol, Seq(buyCol, sellCol), rangeUnits, by,
-      outCol, nullable = true) { vs =>
-      var b = 0.0
-      val it1 = vs(0).iterator()
-      while (it1.hasNext) b += it1.next()
-      var s = 0.0
-      val it2 = vs(1).iterator()
-      while (it2.hasNext) s += it2.next()
-      if (b + s == 0.0) null else 2.0 * (b - s) / (b + s)
-    }
+    KeyedFold.runFrame(df, by, Seq(StructField(outCol, DoubleType, nullable = true)),
+      KeyedFold.tvi(KeyedFold.rowLong(df, okeyCol), KeyedFold.rowDouble(df, buyCol),
+        KeyedFold.rowDouble(df, sellCol), rangeUnits)(
+        (r, v) => KeyedFold.plus(r, v.map(Double.box).orNull)))
 
   /** INCREMENTAL sliding stddev over cents-quantized values — the
-    * dense-window scale variant. The two-pass fold above re-scans its
-    * window per emission: O(n·w) — fine when windows hold hundreds of
-    * rows, quadratic when a hot key's window density explodes (the
-    * sf10-equivalent probe measured 32s vs sf0.1's 0.55s for
-    * `ev_volatility_24h`: 100x rows in the SAME time span = 100x
-    * denser windows; SCALE.md "window fold density"). This variant
-    * maintains running (n, sum, sum-of-squares) updated as rows enter
-    * and leave the deque — O(1) amortized per row, O(n) total.
+    * dense-window scale variant ([[KeyedFold.stddevCents]]). The
+    * two-pass fold above re-scans its window per emission: O(n·w) —
+    * fine when windows hold hundreds of rows, quadratic when a hot
+    * key's window density explodes (the sf10-equivalent probe measured
+    * 32s vs sf0.1's 0.55s for `ev_volatility_24h`: 100x rows in the
+    * SAME time span = 100x denser windows; SCALE.md "window fold
+    * density"). This variant maintains running (n, sum, sum-of-squares)
+    * — O(1) amortized per row, O(n) total.
     *
     * Exactness: incremental add/REMOVE of raw doubles drifts, so the
     * input is quantized to integer cents (`round(v*100)` — the natural
     * discrete-price semantics); integer-valued-double sums are exact
     * in any order and under removal (below 2^53, i.e. while
-    * window_rows * max_cents^2 < 9e15), so the running sums equal a
-    * from-scratch recompute bit-for-bit, and the only fp steps are the
-    * final divides: stddev = sqrt(sumsq/n - (sum/n)^2) / 100. Output
-    * rounded 4dp like the other genuinely-fp aggregates. */
+    * window_rows * max_cents^2 < 9e15). Output rounded 4dp like the
+    * other genuinely-fp aggregates. `chunkUnits > 0` runs the
+    * time-chunked harness of [[KeyedFold.runFrame]]; `assumeSorted` its
+    * layout elision (PreprocessSpec pins both equal to the sorting
+    * path). */
   def slidingStddevCentsIncremental(df: DataFrame, okeyCol: String,
       centsCol: String, rangeUnits: Long, by: Seq[String],
       outCol: String, chunkUnits: Long = 0L,
       assumeSorted: Boolean = false): DataFrame = {
-    require(!(chunkUnits > 0 && assumeSorted),
-      "chunking re-partitions; it cannot honor an assumeSorted layout")
-    if (chunkUnits > 0)
-      return withChunkSeeds(df, okeyCol, rangeUnits, chunkUnits) {
-        (seeded, by2) => foldStddevSorted(seeded, okeyCol, centsCol,
-          rangeUnits, by2 ++ by, outCol, assumeSorted = false)
-      }
-    foldStddevSorted(df, okeyCol, centsCol, rangeUnits, by, outCol,
-      assumeSorted)
+    val c = df.schema.fieldIndex(centsCol)
+    KeyedFold.runFrame(df, by, Seq(StructField(outCol, DoubleType, nullable = false)),
+      KeyedFold.stddevCents(KeyedFold.rowLong(df, okeyCol), (r: Row) => r.getDouble(c),
+        rangeUnits)(KeyedFold.plus(_, _)),
+      assumeSorted, chunk(okeyCol, rangeUnits, chunkUnits))
   }
 
-  /** TIME-CHUNKED fold harness: parallelism for LOW-CARDINALITY keys.
-    * A plain per-key fold puts each key's whole timeline in one
-    * partition — with 5 event types that is 5 of N cores and one
-    * n*log(n) sort per key (the sf100eq probe's 13.9x/decade row,
-    * SCALE.md). Here the time axis splits into `chunkUnits` slices,
-    * and each (chunk, key) group ALSO reads the preceding
-    * `rangeUnits` of rows as non-emitting SEED rows (the as-of
-    * prev-block-seeding idea applied to sliding windows): every
-    * emitted row still sees its full lookback, so the output is
-    * bit-identical to the unchunked fold, while parallelism becomes
-    * keys x chunks and each sort covers one slice. Read amplification
-    * is bounded by rangeUnits/chunkUnits (= 2x at chunkUnits ==
-    * rangeUnits). Requires okey >= 0 (epoch-derived keys are).
-    * The callback receives the seeded frame and the `__chunk` key to
-    * PREPEND to its own grouping keys. */
-  private def withChunkSeeds(df: DataFrame, okeyCol: String,
-      rangeUnits: Long, chunkUnits: Long)(
-      fold: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
-    require(chunkUnits >= rangeUnits,
-      s"chunk ($chunkUnits) must cover the window lookback ($rangeUnits)")
-    val chunkOf = expr(s"$okeyCol div $chunkUnits") // exact integral div
-    val own = df.withColumn("__chunk", chunkOf)
-      .withColumn("__emit", lit(true))
-    val seeds = df
-      .filter(pmod(col(okeyCol), lit(chunkUnits)) >=
-        lit(chunkUnits - rangeUnits))
-      .withColumn("__chunk", chunkOf + lit(1L))
-      .withColumn("__emit", lit(false))
-    fold(own.unionByName(seeds), Seq("__chunk"))
-      .filter(col("__emit")).drop("__chunk", "__emit")
-  }
+  private def chunk(okeyCol: String, rangeUnits: Long, chunkUnits: Long) =
+    if (chunkUnits > 0) Some((okeyCol, rangeUnits, chunkUnits)) else None
 
-  /** EXACT z-score anomaly flags via the deque fold — the execution
-    * shape of [[slidingStddevCentsIncremental]] under the PURE-INTEGER
-    * decision rule of
+  /** EXACT z-score anomaly flags by the batch runner of
+    * [[KeyedFold.anomaly]], the PURE-INTEGER decision rule of
     * [[graft.operators.WindowOps.anomalyExactFlag]]:
     * (n·x − s)² > z²·(n·ss − s²) over Long cents, running (n, s, ss)
     * maintained as rows enter and leave the window — O(1)/row where
@@ -180,241 +132,27 @@ object Preprocess {
       rangeUnits: Long, by: Seq[String], z: Int,
       chunkUnits: Long = 0L): DataFrame = {
     require(rangeUnits > 0 && z > 0, s"bad anomaly knobs ($rangeUnits, $z)")
-    if (chunkUnits > 0)
-      return withChunkSeeds(df, okeyCol, rangeUnits, chunkUnits) {
-        (seeded, by2) => foldAnomalySorted(seeded, okeyCol, centsCol,
-          rangeUnits, by2 ++ by, z)
-      }
-    foldAnomalySorted(df, okeyCol, centsCol, rangeUnits, by, z)
-  }
-
-  private def foldAnomalySorted(df: DataFrame, okeyCol: String,
-      centsCol: String, rangeUnits: Long, by: Seq[String],
-      z: Int): DataFrame = {
-    val cols = df.columns
-    val okIdx = cols.indexOf(okeyCol)
-    val vIdx = cols.indexOf(centsCol)
-    val byIdx = by.map(c => cols.indexOf(c))
-    val zz = z.toLong * z
-    val sorted = df.repartition(by.map(col): _*)
-      .sortWithinPartitions((by.map(col) :+ col(okeyCol).asc): _*)
-    val schema = sorted.schema
-      .add(org.apache.spark.sql.types.StructField("n",
-        org.apache.spark.sql.types.LongType, nullable = false))
-      .add(org.apache.spark.sql.types.StructField("is_anomaly",
-        org.apache.spark.sql.types.IntegerType, nullable = false))
-    val rdd = sorted.rdd.mapPartitions { iter =>
-      val it = iter.buffered
-      new Iterator[org.apache.spark.sql.Row] {
-        private var curKey: Seq[Any] = null
-        private val oks = new java.util.ArrayDeque[Long]()
-        private val vs = new java.util.ArrayDeque[Long]()
-        private var s = 0L
-        private var ss = 0L
-        private var pending: Iterator[org.apache.spark.sql.Row] = Iterator.empty
-
-        override def hasNext: Boolean = pending.hasNext || it.hasNext
-
-        override def next(): org.apache.spark.sql.Row = {
-          if (!pending.hasNext) {
-            val key = byIdx.map(it.head.get)
-            if (curKey == null || key != curKey) {
-              curKey = key; oks.clear(); vs.clear(); s = 0L; ss = 0L
-            }
-            val ok = it.head.getLong(okIdx)
-            val run = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-            while (it.hasNext && it.head.getLong(okIdx) == ok &&
-                byIdx.map(it.head.get) == key) {
-              val r = it.next()
-              val c = r.getLong(vIdx)
-              oks.addLast(ok); vs.addLast(c)
-              s += c; ss += c * c
-              run += r
-            }
-            while (oks.peekFirst() < ok - rangeUnits) {
-              oks.removeFirst()
-              val c = vs.removeFirst()
-              s -= c; ss -= c * c
-            }
-            val n = vs.size().toLong
-            val sF = s; val ssF = ss
-            pending = run.iterator.map { r =>
-              val c = r.getLong(vIdx)
-              val dev = n * c - sF
-              val flag = if (dev * dev > zz * (n * ssF - sF * sF)) 1 else 0
-              org.apache.spark.sql.Row.fromSeq(r.toSeq :+ n :+ flag)
-            }
-          }
-          pending.next()
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
-
-  /** The partition-local deque fold behind
-    * [[slidingStddevCentsIncremental]]. `assumeSorted = true` is the
-    * ORDER-METADATA CONTRACT: the caller guarantees every `by` key's
-    * rows live wholly inside one partition, sorted by (by..., okey)
-    * ascending — e.g. a per-key merge-read of ts-sorted catalog blocks
-    * (BlockCatalog blocks are written ts-ordered, so concatenating a
-    * key's blocks by start_ts IS the sorted stream) — and the
-    * repartition + in-partition sort are ELIDED entirely; the fold
-    * rides the layout. PreprocessSpec pins equality with the sorting
-    * path. */
-  private def foldStddevSorted(df: DataFrame, okeyCol: String,
-      centsCol: String, rangeUnits: Long, by: Seq[String],
-      outCol: String, assumeSorted: Boolean): DataFrame = {
-    val cols = df.columns
-    val okIdx = cols.indexOf(okeyCol)
-    val vIdx = cols.indexOf(centsCol)
-    val byIdx = by.map(c => cols.indexOf(c))
-    val sorted = if (assumeSorted) df
-    else df.repartition(by.map(col): _*)
-      .sortWithinPartitions((by.map(col) :+ col(okeyCol).asc): _*)
-    val schema = sorted.schema
-      .add(org.apache.spark.sql.types.StructField(outCol,
-        org.apache.spark.sql.types.DoubleType, nullable = false))
-    val rdd = sorted.rdd.mapPartitions { iter =>
-      val it = iter.buffered
-      new Iterator[org.apache.spark.sql.Row] {
-        private var curKey: Seq[Any] = null
-        private val oks = new java.util.ArrayDeque[Long]()
-        private val vs = new java.util.ArrayDeque[Double]()
-        private var s = 0.0   // running sum of cents (exact integers)
-        private var s2 = 0.0  // running sum of squared cents (exact)
-        private var pending: Iterator[org.apache.spark.sql.Row] = Iterator.empty
-
-        override def hasNext: Boolean = pending.hasNext || it.hasNext
-
-        override def next(): org.apache.spark.sql.Row = {
-          if (!pending.hasNext) {
-            val key = byIdx.map(it.head.get)
-            if (curKey == null || key != curKey) {
-              curKey = key; oks.clear(); vs.clear(); s = 0.0; s2 = 0.0
-            }
-            val ok = it.head.getLong(okIdx)
-            val run = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-            while (it.hasNext && it.head.getLong(okIdx) == ok &&
-                byIdx.map(it.head.get) == key) {
-              val r = it.next()
-              val c = r.getDouble(vIdx)
-              oks.addLast(ok); vs.addLast(c)
-              s += c; s2 += c * c
-              run += r
-            }
-            while (oks.peekFirst() < ok - rangeUnits) {
-              oks.removeFirst()
-              val c = vs.removeFirst()
-              s -= c; s2 -= c * c
-            }
-            val n = vs.size()
-            val mean = s / n
-            val varC = math.max(0.0, s2 / n - mean * mean)
-            val out = math.sqrt(varC) / 100.0
-            pending = run.iterator
-              .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ out))
-          }
-          pending.next()
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
-
-  /** Shared engine for the sliding-range folds above: one shuffle on
-    * `by`, in-partition sort by the total order key, then a tight deque
-    * loop evaluating `emit` once per equal-okey run. RANGE frames
-    * include PEER rows (equal order key), so each run is processed as a
-    * unit — every row of the run sees the whole run in its window,
-    * exactly like the SQL frame. O(n·w) worst case like the declarative
-    * frame, but without Spark's per-row window-machinery constant
-    * (~8x, SCALE.md "window fold"). */
-  private def slidingRangeFold(df: DataFrame, okeyCol: String,
-      valueCols: Seq[String], rangeUnits: Long, by: Seq[String],
-      outCol: String, nullable: Boolean)(
-      emit: Array[java.util.ArrayDeque[Double]] => Any): DataFrame = {
-    val cols = df.columns
-    val okIdx = cols.indexOf(okeyCol)
-    val vIdx = valueCols.map(c => cols.indexOf(c)).toArray
-    val byIdx = by.map(c => cols.indexOf(c))
-    val sorted = df.repartition(by.map(col): _*)
-      .sortWithinPartitions((by.map(col) :+ col(okeyCol).asc): _*)
-    val schema = sorted.schema
-      .add(org.apache.spark.sql.types.StructField(outCol,
-        org.apache.spark.sql.types.DoubleType, nullable = nullable))
-    val nVals = vIdx.length
-    val rdd = sorted.rdd.mapPartitions { iter =>
-      val it = iter.buffered
-      new Iterator[org.apache.spark.sql.Row] {
-        private var curKey: Seq[Any] = null
-        private val oks = new java.util.ArrayDeque[Long]()
-        private val vs = Array.fill(nVals)(new java.util.ArrayDeque[Double]())
-        private var pending: Iterator[org.apache.spark.sql.Row] = Iterator.empty
-
-        override def hasNext: Boolean = pending.hasNext || it.hasNext
-
-        override def next(): org.apache.spark.sql.Row = {
-          if (!pending.hasNext) {
-            val key = byIdx.map(it.head.get)
-            if (curKey == null || key != curKey) {
-              curKey = key; oks.clear(); vs.foreach(_.clear())
-            }
-            val ok = it.head.getLong(okIdx)
-            val run = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-            while (it.hasNext && it.head.getLong(okIdx) == ok &&
-                byIdx.map(it.head.get) == key) {
-              val r = it.next()
-              oks.addLast(ok)
-              var i = 0
-              while (i < nVals) { vs(i).addLast(r.getDouble(vIdx(i))); i += 1 }
-              run += r
-            }
-            while (oks.peekFirst() < ok - rangeUnits) {
-              oks.removeFirst()
-              vs.foreach(_.removeFirst())
-            }
-            val out = emit(vs)
-            pending = run.iterator
-              .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ out))
-          }
-          pending.next()
-        }
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val c = df.schema.fieldIndex(centsCol)
+    KeyedFold.runFrame(df, by,
+      Seq(StructField("n", LongType, nullable = false),
+        StructField("is_anomaly", IntegerType, nullable = false)),
+      KeyedFold.anomaly(KeyedFold.rowLong(df, okeyCol), (r: Row) => r.getLong(c),
+        rangeUnits, z)(KeyedFold.plus(_, _, _)),
+      chunk = chunk(okeyCol, rangeUnits, chunkUnits))
   }
 
   /** A6 elapsed-time throttle (svoe `stream_utils.py:12-24`,
-    * `l2_snapshot_fd.py:67-77`): emit a row only if at least `windowUs`
-    * elapsed since the last EMITTED row of its key — path-dependent, so
-    * not a window function: secondary sort + per-key scan (same
-    * execution shape as the L2 book). The reference mixes this with
-    * bucket sampling; bucket sampling (WindowOps.sampleBucket) is our
-    * canonical deterministic variant, this is the faithful stateful one.
+    * `l2_snapshot_fd.py:67-77`) by the batch runner of
+    * [[KeyedFold.throttle]]: emit a row only if at least `windowUs`
+    * elapsed since the last EMITTED row of its key — path-dependent,
+    * so not a window function. `seq` completes the total order: of
+    * rows sharing a ts, the lowest `seq` is the one that can emit. The
+    * reference mixes this with bucket sampling; bucket sampling
+    * (WindowOps.sampleBucket) is our canonical deterministic variant,
+    * this is the faithful stateful one.
     */
   def throttleElapsed(df: DataFrame, tsUs: String, windowUs: Long,
-      by: Seq[String], seq: Option[String] = None): DataFrame = {
-    val cols = df.columns
-    val tsIdx = cols.indexOf(tsUs)
-    require(tsIdx >= 0, s"missing ts column $tsUs")
-    val byIdx = by.map(c => cols.indexOf(c))
-    val order = by.map(col) ++ Seq(col(tsUs).asc) ++ seq.map(col(_).asc)
-    val sorted = df.repartition(by.map(col): _*)
-      .sortWithinPartitions(order: _*)
-    val schema = sorted.schema
-    val rdd = sorted.rdd.mapPartitions { iter =>
-      var curKey: Seq[Any] = null
-      var lastEmit = Long.MinValue
-      iter.filter { row =>
-        val key = byIdx.map(row.get)
-        if (curKey == null || key != curKey) { curKey = key; lastEmit = Long.MinValue }
-        val ts = row.getLong(tsIdx)
-        if (lastEmit == Long.MinValue || ts - lastEmit >= windowUs) {
-          lastEmit = ts; true
-        } else false
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
+      by: Seq[String], seq: String): DataFrame =
+    KeyedFold.runFrame(df, by, Nil, KeyedFold.throttle(
+      KeyedFold.rowLong(df, tsUs), KeyedFold.rowLong(df, seq), windowUs))
 }

@@ -973,7 +973,7 @@ object EventQueries {
          |FROM r JOIN o USING (user_id, rn) WHERE r.emitted""".stripMargin) { (s, dir) =>
       graft.operators.Preprocess.throttleElapsed(
         ev(s, dir).select("event_id", "user_id", "ts_us", "value"),
-        "ts_us", 6 * H, Seq("user_id"), seq = Some("event_id"))
+        "ts_us", 6 * H, Seq("user_id"), seq = "event_id")
     },
 
     // Session windows by inactivity gap (gaps-and-islands; the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
-import graft.operators.L2Book
+import graft.operators.{KeyedFold, L2Book}
 import graft.operators.L2Book.{Snapshot, Update}
 
 /** Kappa parity (SURVEY.md §2.9): the same `DataFrame => DataFrame`
@@ -1223,58 +1223,21 @@ object Streaming {
   case class StddevEvent(key: String, okey: Long, value: Double, stddev: Double)
 
   /** Streaming twin of the sliding-window volatility fold
-    * (Preprocess.slidingStddevPop): the per-key deque lives in
-    * `flatMapGroupsWithState`, so the lookback window spans micro-batch
-    * boundaries. Same emission per event, same two-pass stddev — the
-    * batch≡stream parity pair for A2 (the reference's Kappa promise for
-    * its sliding features). Window = [okey - rangeUnits, okey].
-    *
-    * Ordering contract (same as l2BookStream and the reference §2.9):
-    * events must arrive in okey order ACROSS micro-batches per key
-    * (within a batch they are sorted here). A late event older than the
-    * deque head would silently widen the window — front a watermarked
-    * source or drop late rows upstream when the source can reorder.
+    * (Preprocess.slidingStddevPop): the stream runner of the same
+    * [[KeyedFold.stddevPop]], so the lookback window spans micro-batch
+    * boundaries — the batch≡stream parity pair for A2 (the reference's
+    * Kappa promise for its sliding features). Window = [okey -
+    * rangeUnits, okey]. Events must arrive in okey order ACROSS
+    * micro-batches per key ([[KeyedFold.runStream]]'s contract; a
+    * regressing batch fails the query).
     */
   def slidingStddevStream(ds: Dataset[ValueEvent], rangeUnits: Long)
       : Dataset[StddevEvent] = {
     import ds.sparkSession.implicits._
-    // state as a plain array: kryo round-trips collection types loosely
-    // (ArrayDeque came back as ArrayBuffer), arrays are stable.
-    implicit val stateEnc =
-      org.apache.spark.sql.Encoders.kryo[Array[(Long, Double)]]
-    installed(ds).groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[ValueEvent],
-         state: GroupState[Array[(Long, Double)]]) => {
-          val dq = scala.collection.mutable.ArrayDeque.empty[(Long, Double)]
-          state.getOption.foreach(arr => dq.appendAll(arr))
-          val sorted = rows.toArray.sortBy(_.okey)
-          val out = scala.collection.mutable.ArrayBuffer.empty[StddevEvent]
-          var i = 0
-          while (i < sorted.length) {
-            // equal-okey run = RANGE-frame peers: all enter the window
-            // before any of them emits
-            val ok = sorted(i).okey
-            val start = i
-            while (i < sorted.length && sorted(i).okey == ok) {
-              dq.append((ok, sorted(i).value)); i += 1
-            }
-            while (dq.head._1 < ok - rangeUnits) dq.removeHead()
-            val n = dq.length
-            var sum = 0.0
-            dq.foreach(sum += _._2)
-            val mean = sum / n
-            var m2 = 0.0
-            dq.foreach { case (_, v) => val d = v - mean; m2 += d * d }
-            val sd = math.sqrt(m2 / n)
-            var j = start
-            while (j < i) {
-              out += StddevEvent(key, ok, sorted(j).value, sd); j += 1
-            }
-          }
-          state.update(dq.toArray)
-          out.iterator
-        })
+    KeyedFold.runStream(ds, (e: ValueEvent) => e.key, KeyedFold.stddevPop(
+      KeyedFold.LongField[ValueEvent]("okey", _.okey),
+      KeyedFold.DoubleField[ValueEvent]("value", _.value), rangeUnits)(
+      (e, sd) => StddevEvent(e.key, e.okey, e.value, sd)))
   }
 
   case class CentsEvent(key: String, okey: Long, eventId: Long, cents: Long)
@@ -1284,195 +1247,71 @@ object Streaming {
   /** Streaming twin of the EXACT z-score anomaly flag
     * ([[graft.operators.Preprocess.anomalyExactFold]] /
     * [[graft.operators.WindowOps.anomalyExactFlag]]) — the alert
-    * raised AT INGEST: per-key window deque in fMGWS state (okey,
-    * cents), equal-okey runs are RANGE-frame peers, and the flag is
-    * the same PURE-INTEGER rule (n·x − s)² > z²·(n·ss − s²) — no
-    * float anywhere, so the drained output is bit-equal to the batch
-    * fold PROVIDED batches arrive okey-monotone per key and no
-    * trigger boundary splits an equal-okey run (fMGWS emits on drain
-    * and cannot retro-emit: a run split across micro-batches would
-    * flag its earlier rows with a partial-run n, and an out-of-order
-    * okey would corrupt the deque's eviction order). The okey-monotone
-    * half is ENFORCED at runtime since round 9: the state deque's last
-    * entry IS the key's max seen okey (appends are monotone, evictions
-    * take the head and never the current run), so a batch whose min
-    * okey regresses below it throws IllegalStateException instead of
-    * silently mis-evicting — fail loud, not wrong. The harness's
-    * file sources satisfy the precondition structurally — one sorted
-    * file per drain; a production feed must either carry it (per-key
-    * ordered log, run-aligned triggers) or buffer the tail run in
-    * state until a larger okey arrives. Under the precondition the
-    * batch SQL oracle grades the streaming engine directly. State per
-    * key = the lookback window's rows (16 B each), bounded by
-    * lookback x per-key rate. */
+    * raised AT INGEST by the stream runner of [[KeyedFold.anomaly]]:
+    * the same PURE-INTEGER rule (n·x − s)² > z²·(n·ss − s²), no float
+    * anywhere, so the drained output is bit-equal to the batch fold
+    * PROVIDED batches arrive okey-monotone per key and no trigger
+    * boundary splits an equal-okey run (the runner emits on drain and
+    * cannot retro-emit: a run split across micro-batches would flag its
+    * earlier rows with a partial-run n). The okey-monotone half is
+    * ENFORCED by the runner: a batch whose min okey regresses below the
+    * key's last one throws IllegalStateException instead of silently
+    * mis-evicting. The harness's file sources satisfy the precondition
+    * structurally — one sorted file per drain. State per key = the
+    * lookback window's rows (16 B each), bounded by lookback x per-key
+    * rate. */
   def anomalyExactStream(ds: Dataset[CentsEvent], rangeUnits: Long,
       z: Int): Dataset[AnomalyEvent] = {
     import ds.sparkSession.implicits._
-    // state: packed [okey0, cents0, okey1, cents1, ...] — primitive
-    // Long array (the Kryo-state rule); running (s, ss) re-derive on
-    // state load and update INCREMENTALLY per add/evict (the batch
-    // fold's O(1)/row discipline — a per-run window re-scan is O(w)
-    // and measured 8x/decade on dense probe windows)
-    val stateEnc = org.apache.spark.sql.Encoders.kryo[Array[Long]]
-    val zz = z.toLong * z
-    installed(ds).groupByKey(_.key)
-      .flatMapGroupsWithState[Array[Long], AnomalyEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[CentsEvent],
-         state: GroupState[Array[Long]]) => {
-          val dq = scala.collection.mutable.ArrayDeque.empty[(Long, Long)]
-          var s = 0L
-          var ss = 0L
-          state.getOption.foreach { arr =>
-            var p = 0
-            while (p < arr.length) {
-              val c = arr(p + 1)
-              dq.append((arr(p), c)); s += c; ss += c * c
-              p += 2
-            }
-          }
-          val sorted = rows.toArray.sortBy(r => (r.okey, r.eventId))
-          // runtime guard on the okey-monotone precondition: the deque's
-          // tail okey is the key's max (see scaladoc); a regressing batch
-          // would evict out of order and emit silently-wrong flags
-          if (sorted.nonEmpty && dq.nonEmpty && sorted(0).okey < dq.last._1)
-            throw new IllegalStateException(
-              s"anomalyExactStream: okey regression for key '$key' — batch " +
-              s"min okey ${sorted(0).okey} < state max okey ${dq.last._1}. " +
-              "Batches must arrive okey-monotone per key (ordered log or " +
-              "run-aligned triggers); an out-of-order okey corrupts the " +
-              "window deque's eviction order.")
-          val out = scala.collection.mutable.ArrayBuffer.empty[AnomalyEvent]
-          var i = 0
-          while (i < sorted.length) {
-            val ok = sorted(i).okey
-            val start = i
-            while (i < sorted.length && sorted(i).okey == ok) {
-              val c = sorted(i).cents
-              dq.append((ok, c)); s += c; ss += c * c
-              i += 1
-            }
-            while (dq.head._1 < ok - rangeUnits) {
-              val c = dq.removeHead()._2
-              s -= c; ss -= c * c
-            }
-            val n = dq.length.toLong
-            var j = start
-            while (j < i) {
-              val c = sorted(j).cents
-              val dev = n * c - s
-              val flag = if (dev * dev > zz * (n * ss - s * s)) 1 else 0
-              out += AnomalyEvent(key, ok, sorted(j).eventId, n, flag)
-              j += 1
-            }
-          }
-          val packed = new Array[Long](dq.length * 2)
-          var p = 0
-          dq.foreach { case (ok, c) => packed(p) = ok; packed(p + 1) = c; p += 2 }
-          state.update(packed)
-          out.iterator
-        })(stateEnc, implicitly)
+    KeyedFold.runStream(ds, (e: CentsEvent) => e.key, KeyedFold.anomaly(
+      KeyedFold.LongField[CentsEvent]("okey", _.okey), (e: CentsEvent) => e.cents,
+      rangeUnits, z)((e, n, flag) => AnomalyEvent(e.key, e.okey, e.eventId, n, flag)))
   }
 
   case class ThrottleEvent(key: String, tsUs: Long, seq: Long, value: Double)
 
   /** Streaming twin of the elapsed-time throttle
-    * (Preprocess.throttleElapsed): per-key last-emit timestamp lives in
-    * `mapGroupsWithState`-style keyed state so the suppression window
-    * spans micro-batch boundaries — emit only rows >= windowUs after
-    * the key's previously EMITTED row. Same ordering contract as the
-    * other stateful twins (okey order across batches per key; within a
-    * batch rows are sorted here). */
+    * (Preprocess.throttleElapsed): the stream runner of the same
+    * [[KeyedFold.throttle]], so the suppression window spans
+    * micro-batch boundaries — emit only rows >= windowUs after the
+    * key's previously EMITTED row. */
   def throttleElapsedStream(ds: Dataset[ThrottleEvent], windowUs: Long)
       : Dataset[ThrottleEvent] = {
     import ds.sparkSession.implicits._
-    installed(ds).groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: String, rows: Iterator[ThrottleEvent],
-         state: GroupState[Long]) => {
-          var lastEmit = state.getOption.getOrElse(Long.MinValue)
-          val out = rows.toArray.sortBy(r => (r.tsUs, r.seq)).iterator.filter { r =>
-            if (lastEmit == Long.MinValue || r.tsUs - lastEmit >= windowUs) {
-              lastEmit = r.tsUs; true
-            } else false
-          }.toArray
-          state.update(lastEmit)
-          out.iterator
-        })
+    KeyedFold.runStream(ds, (e: ThrottleEvent) => e.key, KeyedFold.throttle(
+      KeyedFold.LongField[ThrottleEvent]("tsUs", _.tsUs),
+      KeyedFold.LongField[ThrottleEvent]("seq", _.seq), windowUs))
   }
 
   case class SidedEvent(key: String, okey: Long, notional: Double, isBuy: Boolean)
   case class TviEvent(key: String, okey: Long, tvi: Option[Double])
 
-  /** Streaming twin of the TVI sliding fold (WindowOps.tvi, A3):
-    * per-key lookback deque of sided notionals in
-    * flatMapGroupsWithState, emitting 2(b-s)/(b+s) per event; None when
-    * no buy/sell notional is in the window. */
+  /** Streaming twin of the TVI sliding fold (Preprocess.slidingTvi,
+    * WindowOps.tvi, A3): the stream runner of [[KeyedFold.tvi]] over
+    * sided notionals, emitting 2(b-s)/(b+s) per event; None when no
+    * buy/sell notional is in the window. */
   def slidingTviStream(ds: Dataset[SidedEvent], rangeUnits: Long)
       : Dataset[TviEvent] = {
     import ds.sparkSession.implicits._
-    implicit val stateEnc =
-      org.apache.spark.sql.Encoders.kryo[Array[(Long, Double, Boolean)]]
-    installed(ds).groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (key: String, rows: Iterator[SidedEvent],
-         state: GroupState[Array[(Long, Double, Boolean)]]) => {
-          val dq = scala.collection.mutable.ArrayDeque.empty[(Long, Double, Boolean)]
-          state.getOption.foreach(arr => dq.appendAll(arr))
-          val sorted = rows.toArray.sortBy(_.okey)
-          val out = scala.collection.mutable.ArrayBuffer.empty[TviEvent]
-          var i = 0
-          while (i < sorted.length) {
-            val ok = sorted(i).okey
-            val start = i
-            while (i < sorted.length && sorted(i).okey == ok) {
-              dq.append((ok, sorted(i).notional, sorted(i).isBuy)); i += 1
-            }
-            while (dq.head._1 < ok - rangeUnits) dq.removeHead()
-            var b = 0.0
-            var s = 0.0
-            dq.foreach { case (_, n, buy) => if (buy) b += n else s += n }
-            val tvi = if (b + s == 0.0) None else Some(2.0 * (b - s) / (b + s))
-            var j = start
-            while (j < i) { out += TviEvent(key, ok, tvi); j += 1 }
-          }
-          state.update(dq.toArray)
-          out.iterator
-        })
+    KeyedFold.runStream(ds, (e: SidedEvent) => e.key, KeyedFold.tvi(
+      KeyedFold.LongField[SidedEvent]("okey", _.okey),
+      KeyedFold.DoubleField[SidedEvent]("buy", e => if (e.isBuy) e.notional else 0.0),
+      KeyedFold.DoubleField[SidedEvent]("sell", e => if (e.isBuy) 0.0 else e.notional),
+      rangeUnits)((e, v) => TviEvent(e.key, e.okey, v)))
   }
 
-  /** Streaming L2 book: the batch `BookState` fold inside
-    * `flatMapGroupsWithState` — per-instrument state survives across
-    * micro-batches (checkpointable), events sorted within each batch
-    * (cross-batch order = source order, the reference's own contract).
-    * A same-ts update run split across two micro-batches emits a
-    * partial snapshot at the first batch's end and the complete one in
-    * the next — consumers needing one-snapshot-per-ts should keep the
-    * last row per (instrument, ts_us), or the source should deliver
-    * same-ts runs atomically (as the reference's emitter does).
+  /** Streaming L2 book: the stream runner of [[L2Book.fold]] —
+    * per-instrument state survives across micro-batches
+    * (checkpointable), cross-batch order = source order (the
+    * reference's own contract). A same-ts update run split across two
+    * micro-batches emits a partial snapshot at the first batch's end
+    * and the complete one in the next — consumers needing
+    * one-snapshot-per-ts should keep the last row per (instrument,
+    * ts_us), or the source should deliver same-ts runs atomically (as
+    * the reference's emitter does).
     */
   def l2BookStream(updates: Dataset[Update], depth: Int): Dataset[Snapshot] = {
     import updates.sparkSession.implicits._
-    implicit val stateEnc = org.apache.spark.sql.Encoders.kryo[L2Book.BookState]
-    installed(updates)
-      .groupByKey(_.instrument)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (instrument: String, rows: Iterator[Update],
-         state: GroupState[L2Book.BookState]) => {
-          val book = state.getOption.getOrElse(new L2Book.BookState)
-          val sorted = rows.toArray.sortBy(u => (u.ts_us, u.seq))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
-          var i = 0
-          while (i < sorted.length) {
-            val ts = sorted(i).ts_us
-            while (i < sorted.length && sorted(i).ts_us == ts) {
-              book.apply(sorted(i)); i += 1
-            }
-            val (b, a) = book.top(depth)
-            out += Snapshot(instrument, ts, b, a)
-          }
-          state.update(book)
-          out.iterator
-        })
+    KeyedFold.runStream(updates, (u: Update) => u.instrument, L2Book.fold(depth, None))
   }
 }

@@ -30,10 +30,31 @@ class PreprocessSpec extends AnyFunSuite {
       ("u", 0L, 1), ("u", 50L, 2), ("u", 100L, 3), ("u", 149L, 4),
       ("u", 260L, 5), ("v", 10L, 6), ("v", 20L, 7)
     ).toDF("k", "ts_us", "id")
-    val out = Preprocess.throttleElapsed(df, "ts_us", 100L, Seq("k"), Some("id"))
+    val out = Preprocess.throttleElapsed(df, "ts_us", 100L, Seq("k"), "id")
       .orderBy("k", "ts_us").collect().map(_.getInt(2))
     // u: 0 emit, 50 skip, 100 emit, 149 skip, 260 emit; v: 10 emit, 20 skip
     assert(out.toSeq == Seq(1, 3, 5, 6))
+  }
+
+  test("throttleElapsed: of rows sharing a ts the lowest seq emits, under 1, 3, 7 and 13 partitions") {
+    // planted ties: four rows at each ts, their seqs shuffled so the
+    // lowest is neither first nor last in input order
+    val rnd = new scala.util.Random(7)
+    val rows = for {
+      k <- Seq("u", "v", "w")
+      t <- Seq(0L, 40L, 100L, 130L, 250L)
+      s <- rnd.shuffle(Seq(1L, 2L, 3L, 4L))
+    } yield (k, t, t * 10 + s + k.head * 10000L)
+    val df = rows.toDF("k", "ts_us", "seq")
+    // window 100: 0 emits, 40 waits, 100 emits, 130 waits, 250 emits
+    val want = (for (k <- Seq("u", "v", "w"); t <- Seq(0L, 100L, 250L))
+      yield (k, t, t * 10 + 1L + k.head * 10000L)).toSet
+    Seq(1, 3, 7, 13).foreach { p =>
+      val got = Preprocess.throttleElapsed(df.repartition(p), "ts_us", 100L,
+          Seq("k"), "seq")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == want, s"$p partitions")
+    }
   }
 
   test("slidingStddevPop: equal-okey peers share one full-run window") {

@@ -135,6 +135,8 @@ class SessionsSpec extends AnyFunSuite {
     "tsViolationsBySeq" -> "svoe df_utils.py:93-94 ordering check",
     "windowedAgg" -> "the Kappa parity example: one per-event fold, batch and stream",
     "registerQueryViews" -> "SQL entry point",
+    "entry" -> "the flagship FeatureLabelSet query of the driver contract",
+    "buildPlan" -> "config front door: FeaturizerConfig to FeatureLabelSet",
     // reference twins that specs compare the query path against
     "tviSided" -> "declarative twin of Preprocess.slidingTvi",
     "anomalyExactFlag" -> "exact twin of the sliding anomaly flag",
@@ -142,6 +144,15 @@ class SessionsSpec extends AnyFunSuite {
     "simhashPairs" -> "join-form twin of simhashPairsBucketed and the streams",
     "bpeMergeLoopNaive" -> "naive twin of bpeMergeLoop",
     "lshBucket" -> "per-plane twin of the native graft_srp")
+
+  /** The objects whose `main` is an entry point, each with the reason
+    * it stays. Any other `main` is a scratch probe and fails the lint. */
+  private val entryPoints = Map(
+    "Bench" -> "the benchmark main: one JSON line of query timings",
+    "Verify" -> "the correctness dump graded against the DuckDB oracles",
+    "Explains" -> "writes EXPLAINS.md, the plan evidence",
+    "PlanDump" -> "dumps formatted plans of named queries for plan reviews",
+    "DrainProfile" -> "prints the progress of every streaming query a drain starts")
 
   /** `text` with its comments blanked, newlines kept, so line numbers
     * hold; string and char literals are copied as they are. Block
@@ -196,26 +207,34 @@ class SessionsSpec extends AnyFunSuite {
     assert(main.nonEmpty && bench.nonEmpty, "run from the project root")
     // a member of a top-level object or class (two-space indent);
     // `private[pkg]` is visible to specs, so it counts as public here
-    val topLevel = """^(?:(?:private(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s""".r
+    val topLevel = """^(?:(?:private(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s+(\w+)""".r
     val memberDef = """^  (?:(?:final|implicit|lazy|@\w+|private\[\w+\]|protected\[\w+\])\s+)*def\s+([A-Za-z_]\w*)""".r
     val found = for {
       (file, text) <- main.toSeq
       lines = text.split("\n", -1).toIndexedSeq
-      kinds = lines.scanLeft(Option.empty[String]) { (k, l) =>
-        topLevel.findPrefixMatchOf(l).map(_.group(1)).orElse(k)
+      owners = lines.scanLeft(Option.empty[(String, String)]) { (k, l) =>
+        topLevel.findPrefixMatchOf(l).map(m => (m.group(1), m.group(2))).orElse(k)
       }.tail
       (line, idx) <- lines.zipWithIndex
-      if kinds(idx).exists(k => k == "object" || k == "class")
+      (kind, owner) <- owners(idx).toSeq
+      if kind == "object" || kind == "class"
       name <- memberDef.findPrefixMatchOf(line).map(_.group(1))
-      if name != "main" && name != "apply"
+      if name != "apply"
       word = ("(?<![A-Za-z0-9_])" + java.util.regex.Pattern.quote(name) +
         "(?![A-Za-z0-9_])").r
       rest = (lines.take(idx) ++ lines.drop(idx + 1)).mkString("\n")
       others = main.collect { case (f, t) if f != file => t } ++ bench
-      if word.findFirstIn(rest).isEmpty &&
-        others.forall(t => word.findFirstIn(t).isEmpty)
-    } yield name
-    val names = found.toSet
+      // every `main` names the others, so a main counts as called only
+      // through the entry-point list
+      if name == "main" || (word.findFirstIn(rest).isEmpty &&
+        others.forall(t => word.findFirstIn(t).isEmpty))
+    } yield if (name == "main") s"$owner.main" else name
+    val mains = found.filter(_.endsWith(".main")).map(_.stripSuffix(".main")).toSet
+    assert(mains -- entryPoints.keySet == Set.empty, s"`main` outside the entry" +
+      s" points: ${mains -- entryPoints.keySet}; delete it, or list the object with a reason")
+    assert(entryPoints.keySet -- mains == Set.empty, s"listed entry points with" +
+      s" no main: ${entryPoints.keySet -- mains}; drop them from the list")
+    val names = found.filterNot(_.endsWith(".main")).toSet
     val unlisted = names -- uncalled.keySet
     val stale = uncalled.keySet -- names
     assert(unlisted.isEmpty, s"public defs with no caller: $unlisted;" +

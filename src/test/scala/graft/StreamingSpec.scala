@@ -881,7 +881,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val batch = graft.operators.Preprocess.throttleElapsed(
         events.toDF("key", "tsUs", "seq", "value"), "tsUs", 6 * H,
-        Seq("key"), seq = Some("seq"))
+        Seq("key"), seq = "seq")
       .collect().map(_.getLong(2)).toSet
 
     val input = MemoryStream[Streaming.ThrottleEvent]
