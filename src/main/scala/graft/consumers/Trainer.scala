@@ -2,6 +2,7 @@ package graft.consumers
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Minimal trainer + model-backed inference hookup for the
   * FeatureLabelSet (svoe `trainer/trainer_manager.py:52-208` fits
@@ -204,9 +205,9 @@ object Trainer {
   //
   // Determinism rules (the cramerMicroWeights3 discipline, tree
   // edition):
-  //  - features and label must be INTEGER-VALUED (asserted in the
-  //    level-0 aggregation pass, zero extra scans); label >= 0 so that
-  //    integer division is floor == trunc in both engines;
+  //  - features and label must be INTEGER-VALUED (asserted on the
+  //    collected tuple keys and label counts, zero extra scans); label
+  //    >= 0 so that integer division is floor == trunc in both engines;
   //  - node prediction = integer-truncated mean, pred_micros =
   //    (sum_y * 1e6) // n;
   //  - split score = SSE_L + SSE_R where a group's SSE uses the
@@ -220,15 +221,22 @@ object Trainer {
   //    minus its max (left: f <= v, right: f > v — both nonempty by
   //    construction); a node with no candidate becomes a leaf early.
   //
-  // Scale shape (the XGBoost histogram approach): one distributed
-  // groupBy (node, featureIdx, value) pass PER LEVEL — map-side
-  // combinable, result bounded by nodes x features x distinct values,
-  // collected to the driver for the prefix-sum scan and exact BigInt
-  // argmin. maxDepth scans of the input total; persist the frame
-  // upstream if it is not a cheap re-read. CONTINUOUS features must be
-  // pre-bucketized by the caller (floor to a grid) — the same cap
-  // discipline as the BPE merge tables; `maxAggRows` guards the
-  // collect loudly.
+  // Scale shape (the XGBoost histogram approach, to its fixed point):
+  // the rows sharing a feature tuple fall into the same node at every
+  // level and get the same prediction in every round, so ONE
+  // distributed groupBy over the feature tuple (count, label sum, sum
+  // of squares, min — map-side combinable) is a sufficient statistic
+  // for the whole fit. It is collected to the driver, and every level's
+  // (node, featureIdx, value) histogram, every boosting round's shifted
+  // residual and every valid-split SSE follow from it in exact integer
+  // arithmetic: ONE corpus pass per fit, whatever the depth, rounds or
+  // candidates. `maxAggRows` bounds the tuples collected; an input with
+  // more falls back to one distributed groupBy (node, featureIdx,
+  // value) pass per level over the persisted input, its result bounded
+  // by nodes x features x distinct values and guarded by the same
+  // `maxAggRows`. CONTINUOUS features must be pre-bucketized by the
+  // caller (floor to a grid) — the same cap discipline as the BPE merge
+  // tables.
   // ------------------------------------------------------------------
 
   /** One fitted tree node; heap numbering (root 1, children 2n/2n+1).
@@ -248,32 +256,45 @@ object Trainer {
 
     private val fIdx: Map[String, Int] = featureCols.zipWithIndex.toMap
 
-    def predictMicros(features: Array[Double]): Long = {
+    /** The node `features` reach: the first leaf on their path, or the
+      * first node the tree does not hold yet (a partial fit's frontier). */
+    private[consumers] def reach(features: Array[Double]): Long = {
       var id = 1L
-      var row = nodes(id)
-      while (!row.isLeaf) {
-        id = if (features(fIdx(row.feature.get)) <= row.threshold.get.toDouble)
+      var row = nodes.get(id)
+      while (row.exists(!_.isLeaf)) {
+        val r = row.get
+        id = if (features(fIdx(r.feature.get)) <= r.threshold.get.toDouble)
           id * 2 else id * 2 + 1
-        row = nodes(id)
+        row = nodes.get(id)
       }
-      row.predMicros
+      id
     }
+
+    def predictMicros(features: Array[Double]): Long =
+      nodes(reach(features)).predMicros
 
     def predict(features: Array[Double]): Double =
       predictMicros(features) / 1e6
 
-    /** The tree as ONE nested CASE expression over the input columns —
-      * the distributed scorer: codegen'd, zero shuffle, depth
-      * comparisons per row. Returns pred_micros (LongType). */
-    def predictColumn: Column = {
-      def expr(id: Long): Column = {
-        val row = nodes(id)
-        if (row.isLeaf) lit(row.predMicros)
-        else when(col(row.feature.get) <= lit(row.threshold.get),
-          expr(id * 2)).otherwise(expr(id * 2 + 1))
+    /** [[reach]] as ONE nested CASE expression over the input columns,
+      * each reached node replaced by `at(node)` — codegen'd, zero
+      * shuffle, depth comparisons per row. */
+    private def caseColumn(at: Long => Column): Column = {
+      def go(id: Long): Column = nodes.get(id) match {
+        case Some(r) if !r.isLeaf =>
+          when(col(r.feature.get) <= lit(r.threshold.get), go(id * 2))
+            .otherwise(go(id * 2 + 1))
+        case _ => at(id)
       }
-      expr(1L)
+      go(1L)
     }
+
+    /** The distributed scorer: pred_micros (LongType). */
+    def predictColumn: Column = caseColumn(id => lit(nodes(id).predMicros))
+
+    /** The reached node id per row ([[reach]]) — a partial fit's
+      * assignment of rows to its frontier. */
+    private[consumers] def reachColumn: Column = caseColumn(lit(_))
 
     /** Leaf value in the LABEL'S OWN integer scale — floor mean
       * `sum_y / n` (both nonneg under the fit contract, so `/` = floor
@@ -287,15 +308,7 @@ object Trainer {
 
     /** The tree as ONE nested CASE over the input columns, leaves in
       * unit scale ([[leafUnit]]) — the distributed boosting scorer. */
-    def leafUnitColumn: Column = {
-      def go(id: Long): Column = {
-        val row = nodes(id)
-        if (row.isLeaf) lit(leafUnit(id))
-        else when(col(row.feature.get) <= lit(row.threshold.get),
-          go(id * 2)).otherwise(go(id * 2 + 1))
-      }
-      go(1L)
-    }
+    def leafUnitColumn: Column = caseColumn(id => lit(leafUnit(id)))
 
     /** The fit as a frame — the graded/registry surface: one row per
       * node, all-integer columns (ml_tree_fit's oracle shape). */
@@ -329,123 +342,80 @@ object Trainer {
     syy - 2 * m * sy + m * m * c
   }
 
-  /** Fit the exact tree — see the block comment above for semantics
-    * and scale shape. `maxDepth` split levels; leaves at depth <=
-    * maxDepth. */
-  def fitTree(df: DataFrame, featureCols: Seq[String], labelCol: String,
-      maxDepth: Int, maxAggRows: Int = 1 << 22): TreeModel =
-    fitTreeMin(df, featureCols, labelCol, maxDepth, maxAggRows)._1
+  /** `v` as a Long; out of range throws, as Spark's ANSI long sums do. */
+  private def exactLong(v: BigInt): Long = {
+    if (!v.isValidLong) throw new ArithmeticException(s"long overflow: $v")
+    v.toLong
+  }
 
-  /** [[fitTree]] plus, at zero extra scans, `min(label - leafUnit)`
-    * over the fitted assignment — the NEXT boosting round's shift
-    * offset ([[fitBoosted]]'s per-round `min(resid)` aggregation,
-    * folded into the fit's own histogram passes; r16 optimization,
-    * guide §1.2/2.4 — one fewer corpus pass per round, exactly equal
-    * because a global min is the min of per-leaf mins).
+  /** A nullable aggregate (a sum or min over no rows) with a default. */
+  private def longOr(r: Row, i: Int, dflt: Long): Long =
+    if (r.isNullAt(i)) dflt else r.getLong(i)
+
+  /** One level-histogram row: the training rows of `node` whose feature
+    * `fi` equals `v`, with their count, label sum, label sum of squares
+    * and label min. */
+  private final case class Bin(node: Long, fi: Int, v: Long, c: Long,
+      sy: Long, syy: Long, mn: Long)
+
+  /** The split search, shared by both histogram sources: grow the
+    * exact tree level by level, `level(frontier, partial)` returning the
+    * histogram of the frontier's rows under the tree fixed so far;
+    * `root` is the whole training set as one bin (read only when
+    * maxDepth = 0). Per frontier node, a prefix scan over each
+    * feature's sorted values scores every candidate, the argmin in
+    * (sse, featureIdx, threshold) order splits it, and a node without a
+    * candidate becomes a leaf early.
     *
-    * The fit itself runs `maxDepth` histogram passes, not
-    * `maxDepth + 1`: the last level's leaf stats (n, sum, sumsq, min)
-    * are DERIVED on the driver from the parent level's histogram —
-    * the rows of a child node are exactly the parent's (feature*,
-    * value) histogram rows on the chosen side of the threshold, so
-    * the child's aggregates are partial sums the prefix scan already
-    * walks. Bit-identical node rows (same integer sums, same tie
-    * order), one fewer distributed pass per tree. */
-  private[graft] def fitTreeMin(df: DataFrame, featureCols: Seq[String],
-      labelCol: String, maxDepth: Int,
-      maxAggRows: Int = 1 << 22): (TreeModel, Long) = {
-    require(featureCols.nonEmpty && maxDepth >= 0,
-      s"bad tree spec ($featureCols, depth $maxDepth)")
+    * The last level's leaf stats (n, sum, sumsq, min) are DERIVED from
+    * the parent level's histogram — the rows of a child node are
+    * exactly the parent's (feature*, value) rows on its side of the
+    * threshold — so `maxDepth` levels are read, not `maxDepth + 1`.
+    * Also returns `min(label - leafUnit)` over the fitted assignment:
+    * the NEXT boosting round's shift offset ([[fitBoosted]]), exactly
+    * equal because a global min is the min of per-leaf mins. */
+  private def growTree(featureCols: Seq[String], maxDepth: Int,
+      root: () => Bin,
+      level: (Set[Long], TreeModel) => Seq[Bin]): (TreeModel, Long) = {
     val k = featureCols.size
-    val feats = featureCols.map(c => col(c).cast("double").as(c))
-    val yc = col(labelCol).cast("double")
-    // integer/nonneg contract, asserted inside level 0's aggregation:
-    // any null/NaN/fractional feature, or null/NaN/fractional/negative
-    // label, trips the flag. Evaluated on the STACKED rows — every
-    // feature value flows through __v, so checking (__v, __y) covers
-    // all features without re-projecting them past the generator.
-    val badExpr =
-      col("__v").isNull || isnan(col("__v")) || col("__v") =!= floor(col("__v")) ||
-        col("__y").isNull || isnan(col("__y")) ||
-        col("__y") =!= floor(col("__y")) || col("__y") < 0
-    val base = df.select((feats :+ yc.as("__y")): _*)
-    val stackExpr = org.apache.spark.sql.functions.expr(
-      s"stack($k, ${featureCols.zipWithIndex
-        .map { case (c, i) => s"$i, `$c`" }.mkString(", ")}) AS (__fi, __v)")
-
     var nodes = Map.empty[Long, TreeNodeRow]
-    // per-leaf min(__y), filled as leaves are fixed — early leaves from
+    // per-leaf min label, filled as leaves are fixed — early leaves from
     // their own histogram slice, last-level children from the parent's
-    val leafMin = scala.collection.mutable.Map.empty[Long, Long]
-
-    if (maxDepth == 0) {
-      // leaf-only tree: one stats pass (no candidate histogram needed)
-      val r = base.agg(count(lit(1)).as("c"),
-        sum(col("__y").cast("long")).as("sy"),
-        sum(col("__y").cast("long") * col("__y").cast("long")).as("syy"),
-        min(col("__y").cast("long")).as("mn")).collect()(0)
-      require(!r.isNullAt(0) && r.getLong(0) > 0, "fitTree over an empty frame")
-      val (c, sy, syy) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      nodes += 1L -> TreeNodeRow(1L, 0, c, sy, intSse(c, sy, syy).toLong,
-        None, None)
-      leafMin(1L) = r.getLong(3)
+    val leafMin = mutable.Map.empty[Long, Long]
+    def leaf(id: Long, depth: Int, c: Long, sy: BigInt, syy: BigInt,
+        mn: Long): Unit = {
+      nodes += id -> TreeNodeRow(id, depth, c, sy.toLong,
+        intSse(c, sy, syy).toLong, None, None)
+      leafMin(id) = mn
     }
-
+    if (maxDepth == 0) {
+      val r = root()
+      leaf(1L, 0, r.c, r.sy, r.syy, r.mn)
+    }
     var frontier: Set[Long] = if (maxDepth == 0) Set.empty else Set(1L)
-    var assign: Column = lit(1L)
     var depth = 0
     while (depth < maxDepth && frontier.nonEmpty) {
       val lastLevel = depth == maxDepth - 1
-      val withBad = depth == 0
-      val aggCols = Seq(count(lit(1)).as("c"),
-        sum(col("__y").cast("long")).as("sy"),
-        sum(col("__y").cast("long") * col("__y").cast("long")).as("syy"),
-        min(col("__y").cast("long")).as("mn")) ++
-        (if (withBad) Seq(max(badExpr.cast("int")).as("bad")) else Nil)
-      val agg = base
-        .select(assign.as("__node"), col("__y"), stackExpr)
-        .filter(col("__node").isInCollection(frontier))
-        .groupBy(col("__node"), col("__fi"),
-          col("__v").cast("long").as("__v"))
-        .agg(aggCols.head, aggCols.tail: _*)
-        .collect()
-      require(agg.length <= maxAggRows,
-        s"tree histogram has ${agg.length} (node, feature, value) rows " +
-          s"> maxAggRows=$maxAggRows — pre-bucketize continuous features")
-      if (withBad)
-        require(!agg.exists(r => r.getInt(r.fieldIndex("bad")) > 0),
-          "fitTree needs integer-valued features and a nonnegative " +
-            "integer-valued label (the exact-oracle contract)")
-      // driver: per (node, fi) prefix scan over sorted values
-      // tuple: (node, fi, v, c, sy, syy, mn)
-      val byNode = agg.map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
-        .groupBy(_._1)
-      require(depth > 0 || byNode.nonEmpty, "fitTree over an empty frame")
-      val nextFrontier = scala.collection.mutable.Set.empty[Long]
+      val byNode = level(frontier, TreeModel(featureCols, nodes)).groupBy(_.node)
+      val next = mutable.Set.empty[Long]
       // children of a split are nonempty by construction, so every
-      // frontier node has histogram rows
+      // frontier node has bins, for every feature
       frontier.foreach { id =>
-        val grp = byNode(id)
-        val f0 = grp.filter(_._2 == 0)
-        val c = f0.map(_._4).sum
-        val sy = f0.map(t => BigInt(t._5)).sum
-        val syy = f0.map(t => BigInt(t._6)).sum
-        val mn = f0.map(_._7).min
+        val byFi = byNode(id).groupBy(_.fi).map { case (fi, bs) => fi -> bs.sortBy(_.v) }
+        val f0 = byFi(0)
+        val c = f0.map(_.c).sum
+        val sy = f0.map(b => BigInt(b.sy)).sum
+        val syy = f0.map(b => BigInt(b.syy)).sum
         var best: Option[(BigInt, Int, Long)] = None
         (0 until k).foreach { fi =>
           var cl = 0L
           var syl = BigInt(0)
           var syyl = BigInt(0)
-          val vals = grp.filter(_._2 == fi).sortBy(_._3)
-          vals.dropRight(1).foreach { case (_, _, v, vc, vsy, vsyy, _) =>
-            cl += vc; syl += vsy; syyl += vsyy
-            val sc = intSse(cl, syl, syyl) +
-              intSse(c - cl, sy - syl, syy - syyl)
-            val cand = (sc, fi, v)
-            if (best.isEmpty ||
-                Ordering[(BigInt, Int, Long)].lt(cand, best.get))
-              best = Some(cand)
+          byFi(fi).dropRight(1).foreach { b =>
+            cl += b.c; syl += b.sy; syyl += b.syy
+            val cand = (intSse(cl, syl, syyl) + intSse(c - cl, sy - syl, syy - syyl),
+              fi, b.v)
+            if (best.forall(Ordering[(BigInt, Int, Long)].lt(cand, _))) best = Some(cand)
           }
         }
         best match {
@@ -453,54 +423,260 @@ object Trainer {
             nodes += id -> TreeNodeRow(id, depth, c, sy.toLong,
               intSse(c, sy, syy).toLong, Some(featureCols(fi)), Some(v))
             if (lastLevel) {
-              // the children are depth-maxDepth leaves: their stats are
-              // partial sums of THIS histogram's (fi, v) rows — no
-              // final leaf-stats pass needed
-              val fvals = grp.filter(_._2 == fi).sortBy(_._3)
-              val lrows = fvals.filter(_._3 <= v)
-              val cL = lrows.map(_._4).sum
-              val syL = lrows.map(t => BigInt(t._5)).sum
-              val syyL = lrows.map(t => BigInt(t._6)).sum
-              val mnL = lrows.map(_._7).min
-              val rrows = fvals.filter(_._3 > v)
-              val cR = c - cL
-              val syR = sy - syL
-              val syyR = syy - syyL
-              val mnR = rrows.map(_._7).min
-              nodes += (id * 2) -> TreeNodeRow(id * 2, depth + 1, cL,
-                syL.toLong, intSse(cL, syL, syyL).toLong, None, None)
-              leafMin(id * 2) = mnL
-              nodes += (id * 2 + 1) -> TreeNodeRow(id * 2 + 1, depth + 1, cR,
-                syR.toLong, intSse(cR, syR, syyR).toLong, None, None)
-              leafMin(id * 2 + 1) = mnR
+              val (l, r) = byFi(fi).partition(_.v <= v)
+              val cL = l.map(_.c).sum
+              val syL = l.map(b => BigInt(b.sy)).sum
+              val syyL = l.map(b => BigInt(b.syy)).sum
+              leaf(id * 2, depth + 1, cL, syL, syyL, l.map(_.mn).min)
+              leaf(id * 2 + 1, depth + 1, c - cL, sy - syL, syy - syyL, r.map(_.mn).min)
             } else {
-              nextFrontier += id * 2
-              nextFrontier += id * 2 + 1
+              next += id * 2
+              next += id * 2 + 1
             }
           case None => // single-valued on every feature: early leaf
-            nodes += id -> TreeNodeRow(id, depth, c, sy.toLong,
-              intSse(c, sy, syy).toLong, None, None)
-            leafMin(id) = mn
+            leaf(id, depth, c, sy, syy, f0.map(_.mn).min)
         }
       }
-      frontier = nextFrontier.toSet
-      // extend the assignment walk with this level's splits
-      val partial = TreeModel(featureCols, nodes)
-      def assignExpr(id: Long, d: Int): Column =
-        partial.nodes.get(id) match {
-          case Some(r) if !r.isLeaf =>
-            when(col(r.feature.get) <= lit(r.threshold.get),
-              assignExpr(id * 2, d + 1)).otherwise(assignExpr(id * 2 + 1, d + 1))
-          case _ => lit(id)
-        }
-      assign = assignExpr(1L, 0)
+      frontier = next.toSet
       depth += 1
     }
     val model = TreeModel(featureCols, nodes)
-    // min over rows of (__y - leafUnit(leaf(x))) = min over leaves of
-    // (min __y in leaf - leafUnit) — the next round's exact offset
-    val nextMin = leafMin.map { case (id, m) => m - model.leafUnit(id) }.min
-    (model, nextMin)
+    (model, leafMin.map { case (id, m) => m - model.leafUnit(id) }.min)
+  }
+
+  /** What a fit checks its contract on, over the TRAIN rows: the row
+    * count, the sum, sum of squares and min of the non-null labels,
+    * whether any label is null, NaN or fractional, and whether any
+    * feature is (only when the fit splits on features); plus the valid
+    * split's row count. */
+  private final case class Summary(n: Long, sy: Long, syy: Long, mn: Long,
+      labelBad: Boolean, featBad: Boolean, nValid: Long)
+
+  /** The rows of one fit, behind one of two histogram sources. */
+  private sealed trait FitSource {
+    def summary: Summary
+    /** One exact tree fitted to the shifted train residual
+      * `y - shift(x) - off`, and the next round's offset. */
+    def fitRound(shift: BoostedModel, off: Long, maxDepth: Int): (TreeModel, Long)
+    /** Each model's integer SSE over the valid split's non-null labels. */
+    def validSse(models: Seq[BoostedModel]): Seq[Long]
+  }
+
+  /** The label as a Long, null where it is null, NaN or fractional —
+    * rows a fit's count sees but its label sums do not, so a count
+    * mismatch is the contract's label flag. */
+  private def labelLong(y: Column): Column = {
+    val d = y.cast("double")
+    when(!isnan(d) && d === floor(d), y.cast("long"))
+  }
+
+  /** One joint-histogram row: the input rows sharing feature vector `x`
+    * (null read as NaN: both take a split's right branch, as in the CASE
+    * scorers) and the split flags, with their row count, non-null label
+    * count, label sum, sum of squares and min. */
+  private final class Tup(val x: Array[Double], val tr: Boolean, val va: Boolean,
+      val c: Long, val cy: Long, val sy: Long, val syy: Long, val mn: Long)
+
+  /** The local source: the collected joint histogram (its `x` empty
+    * when no tree splits, so the feature check passes). A tuple's rows
+    * share a node at every level and a prediction `q` in every round, so
+    * its shifted-residual stats are exact integer identities of its own
+    * — Σ(y−q) = Σy − c·q, Σ(y−q)² = Σy² − 2q·Σy + c·q², min(y−q) =
+    * min y − q — and every level's histogram is a driver-side group-by
+    * of the tuples reaching the frontier. */
+  private final class TupleSource(tuples: Array[Tup], featureCols: Seq[String])
+      extends FitSource {
+    private val train = tuples.filter(_.tr)
+    private val valid = tuples.filter(_.va)
+
+    val summary: Summary = Summary(train.map(_.c).sum,
+      exactLong(train.map(t => BigInt(t.sy)).sum),
+      exactLong(train.map(t => BigInt(t.syy)).sum),
+      train.map(_.mn).foldLeft(Long.MaxValue)(math.min),
+      train.exists(t => t.cy < t.c),
+      train.exists(_.x.exists(v => v.isNaN || v != math.floor(v))),
+      valid.map(_.c).sum)
+
+    def fitRound(shift: BoostedModel, off: Long, maxDepth: Int): (TreeModel, Long) = {
+      val m = train.length
+      val sb = new Array[Long](m)
+      val sbb = new Array[Long](m)
+      val mb = new Array[Long](m)
+      var i = 0
+      while (i < m) {
+        val t = train(i)
+        val q = BigInt(shift.predictUnits(t.x)) + off
+        sb(i) = exactLong(BigInt(t.sy) - q * t.c)
+        sbb(i) = exactLong(BigInt(t.syy) - q * t.sy * 2 + q * q * t.c)
+        mb(i) = exactLong(BigInt(t.mn) - q)
+        i += 1
+      }
+      val k = featureCols.size
+      growTree(featureCols, maxDepth,
+        () => Bin(1L, 0, 0L, train.map(_.c).sum, exactLong(sb.map(BigInt(_)).sum),
+          exactLong(sbb.map(BigInt(_)).sum), mb.min),
+        (frontier, partial) => {
+          val acc = mutable.HashMap.empty[(Long, Int, Long), Array[Long]]
+          var i = 0
+          while (i < m) {
+            val x = train(i).x
+            val node = partial.reach(x)
+            if (frontier(node)) {
+              var fi = 0
+              while (fi < k) {
+                val a = acc.getOrElseUpdate((node, fi, x(fi).toLong),
+                  Array(0L, 0L, 0L, Long.MaxValue))
+                a(0) += train(i).c
+                a(1) = Math.addExact(a(1), sb(i))
+                a(2) = Math.addExact(a(2), sbb(i))
+                a(3) = math.min(a(3), mb(i))
+                fi += 1
+              }
+            }
+            i += 1
+          }
+          acc.iterator.map { case ((node, fi, v), a) =>
+            Bin(node, fi, v, a(0), a(1), a(2), a(3))
+          }.toSeq
+        })
+    }
+
+    def validSse(models: Seq[BoostedModel]): Seq[Long] = models.map { mdl =>
+      exactLong(valid.iterator.map { t =>
+        val p = BigInt(mdl.predictUnits(t.x))
+        BigInt(t.syy) - p * t.sy * 2 + p * p * t.cy
+      }.sum)
+    }
+  }
+
+  /** The distributed source, for an input whose joint histogram exceeds
+    * `maxAggRows`: the input persisted for the fit, one stats pass, then
+    * one groupBy (node, featureIdx, value) pass per tree level and one
+    * pass per valid-split scoring. */
+  private final class FrameSource(df: DataFrame, featureCols: Seq[String],
+      y: Column, tr: Column, va: Column, keyFeatures: Boolean,
+      maxAggRows: Int) extends FitSource {
+    private val frame = df.select((featureCols.map(c => col(c).cast("double").as(c)) :+
+        labelLong(y).as("__y") :+ tr.as("__tr") :+ va.as("__va")): _*)
+      .filter(col("__tr") || col("__va"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    private val train = frame.filter(col("__tr"))
+
+    lazy val summary: Summary = {
+      val ty = when(col("__tr"), col("__y"))
+      val bad = if (!keyFeatures) lit(false) else featureCols.map { c =>
+        val f = col(c)
+        f.isNull || isnan(f) || f =!= floor(f)
+      }.reduce(_ || _)
+      val r = frame.agg(count(when(col("__tr"), lit(1))), count(ty), sum(ty),
+        sum(ty * ty), min(ty), max((col("__tr") && bad).cast("int")),
+        count(when(col("__va"), lit(1)))).collect()(0)
+      Summary(r.getLong(0), longOr(r, 2, 0L), longOr(r, 3, 0L),
+        longOr(r, 4, Long.MaxValue),
+        r.getLong(1) < r.getLong(0), !r.isNullAt(5) && r.getInt(5) > 0,
+        r.getLong(6))
+    }
+
+    def fitRound(shift: BoostedModel, off: Long, maxDepth: Int): (TreeModel, Long) = {
+      val b = col("__y") - shift.predictColumn - lit(off)
+      growTree(featureCols, maxDepth,
+        () => {
+          val r = train.agg(count(lit(1)), sum(b), sum(b * b), min(b)).collect()(0)
+          Bin(1L, 0, 0L, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        },
+        (frontier, partial) => {
+          val k = featureCols.size
+          val stack = expr(s"stack($k, ${featureCols.zipWithIndex
+            .map { case (c, i) => s"$i, `$c`" }.mkString(", ")}) AS (__fi, __v)")
+          val agg = train.select(partial.reachColumn.as("__node"), b.as("__b"), stack)
+            .filter(col("__node").isInCollection(frontier))
+            .groupBy(col("__node"), col("__fi"), col("__v").cast("long").as("__v"))
+            .agg(count(lit(1)), sum("__b"), sum(col("__b") * col("__b")), min("__b"))
+            .collect()
+          require(agg.length <= maxAggRows,
+            s"tree histogram has ${agg.length} (node, feature, value) rows " +
+              s"> maxAggRows=$maxAggRows — pre-bucketize continuous features")
+          agg.toSeq.map(r => Bin(r.getLong(0), r.getInt(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
+        })
+    }
+
+    def validSse(models: Seq[BoostedModel]): Seq[Long] =
+      if (models.isEmpty) Nil
+      else {
+        // each model's squared-residual sum is a sibling aggregate over
+        // its own nested-CASE column: k models, one pass
+        val aggs = models.map { m =>
+          val d = col("__y") - m.predictColumn
+          sum(d * d)
+        }
+        val r = frame.filter(col("__va")).agg(aggs.head, aggs.tail: _*).collect()(0)
+        models.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
+      }
+
+    def close(): Unit = { frame.unpersist(); () }
+  }
+
+  /** Run `fit` over the rows of `df` where `tr` (train) or `va` (valid)
+    * holds, label `y`. One distributed pass aggregates the JOINT
+    * histogram — per distinct (features, tr, va): count, non-null label
+    * count, label sum, sum of squares, min — and collects at most
+    * `maxAggRows + 1` of its rows. Within `maxAggRows` the fit runs on
+    * the driver ([[TupleSource]]); past it, on the persisted input
+    * ([[FrameSource]]). `keyFeatures = false` (every tree of depth 0)
+    * groups by the split flags alone. */
+  private def withSource[T](df: DataFrame, featureCols: Seq[String], y: Column,
+      tr: Column, va: Column, keyFeatures: Boolean, maxAggRows: Int)(
+      fit: FitSource => T): T = {
+    val keys = if (keyFeatures) featureCols else Nil
+    val rows = df.select((keys.map(c => col(c).cast("double").as(c)) :+
+        labelLong(y).as("__y") :+ tr.as("__tr") :+ va.as("__va")): _*)
+      .filter(col("__tr") || col("__va"))
+      .groupBy((keys :+ "__tr" :+ "__va").map(col): _*)
+      .agg(count(lit(1)), count("__y"), sum("__y"), sum(col("__y") * col("__y")),
+        min("__y"))
+      .limit(maxAggRows + 1).collect()
+    if (rows.length <= maxAggRows) {
+      val k = keys.size
+      fit(new TupleSource(rows.map { r =>
+        new Tup(Array.tabulate(k)(i => if (r.isNullAt(i)) Double.NaN else r.getDouble(i)),
+          r.getBoolean(k), r.getBoolean(k + 1), r.getLong(k + 2), r.getLong(k + 3),
+          longOr(r, k + 4, 0L), longOr(r, k + 5, 0L), longOr(r, k + 6, Long.MaxValue))
+      }, featureCols))
+    } else {
+      val src = new FrameSource(df, featureCols, y, tr, va, keyFeatures, maxAggRows)
+      try fit(src) finally src.close()
+    }
+  }
+
+  private def requireExact(s: Summary): Unit =
+    require(!s.labelBad && !s.featBad && s.mn >= 0,
+      "fitTree needs integer-valued features and a nonnegative " +
+        "integer-valued label (the exact-oracle contract)")
+
+  private def requireValid(who: String, s: Summary, isValidCol: String): Unit =
+    require(s.nValid > 0,
+      s"$who needs a nonempty valid split: no row has $isValidCol set")
+
+  /** The label-only model: what a single tree's label is shifted by. */
+  private def noShift(featureCols: Seq[String]): BoostedModel =
+    BoostedModel(featureCols, 0L, 0L, 0L, 0L, Vector.empty)
+
+  /** Fit the exact tree — see the block comment above for semantics
+    * and scale shape: one corpus pass (the joint histogram), every
+    * level on the driver. `maxDepth` split levels; leaves at depth <=
+    * maxDepth. */
+  def fitTree(df: DataFrame, featureCols: Seq[String], labelCol: String,
+      maxDepth: Int, maxAggRows: Int = 1 << 22): TreeModel = {
+    require(featureCols.nonEmpty && maxDepth >= 0,
+      s"bad tree spec ($featureCols, depth $maxDepth)")
+    withSource(df, featureCols, col(labelCol).cast("double"), lit(true), lit(false),
+        maxDepth > 0, maxAggRows) { src =>
+      val s = src.summary
+      require(s.n > 0, "fitTree over an empty frame")
+      requireExact(s)
+      src.fitRound(noShift(featureCols), 0L, maxDepth)._1
+    }
   }
 
   /** The EXACT boosted ensemble — gradient boosting with squared loss
@@ -522,22 +698,10 @@ object Trainer {
       baseN: Long, baseSumY: Long, baseSse: Long,
       rounds: Seq[(TreeModel, Long)]) extends Model {
 
-    private val fIdx: Map[String, Int] = featureCols.zipWithIndex.toMap
-
-    def predictUnits(features: Array[Double]): Long = {
-      var p = base
-      rounds.foreach { case (t, off) =>
-        var id = 1L
-        var row = t.nodes(id)
-        while (!row.isLeaf) {
-          id = if (features(fIdx(row.feature.get)) <= row.threshold.get.toDouble)
-            id * 2 else id * 2 + 1
-          row = t.nodes(id)
-        }
-        p += t.leafUnit(id) + off
+    def predictUnits(features: Array[Double]): Long =
+      rounds.foldLeft(base) { case (p, (t, off)) =>
+        p + t.leafUnit(t.reach(features)) + off
       }
-      p
-    }
 
     def predict(features: Array[Double]): Double =
       predictUnits(features).toDouble
@@ -594,46 +758,51 @@ object Trainer {
 
   /** Fit the exact boosted ensemble — see [[BoostedModel]]. The label
     * must be nonneg integer-valued (the fitTree contract; asserted).
-    * `rounds` trees of `maxDepth` split levels each; `1 + rounds *
-    * maxDepth` corpus aggregation passes total (r16: the per-round
-    * `min(resid)` pass is free — round 1's offset is `min(__y) - base`
-    * from the base aggregation, later rounds' offsets ride the
-    * previous fit's histogram via [[fitTreeMin]]; and each tree is
-    * `maxDepth` passes, not `maxDepth + 1` — same scaladoc). The input
-    * is persisted here for the duration of the fit. */
+    * `rounds` trees of `maxDepth` split levels each, all from ONE
+    * corpus pass: the joint histogram's per-tuple stats shift exactly
+    * by each round's per-tuple prediction, round 1's offset is
+    * `min(y) - base` and later rounds' offsets ride the previous tree's
+    * leaf mins. Past `maxAggRows` tuples the input is persisted for the
+    * fit: a stats pass, then `rounds * maxDepth` level passes. */
   def fitBoosted(df: DataFrame, featureCols: Seq[String], labelCol: String,
-      rounds: Int, maxDepth: Int, maxAggRows: Int = 1 << 22): BoostedModel = {
+      rounds: Int, maxDepth: Int, maxAggRows: Int = 1 << 22): BoostedModel =
+    withSource(df, featureCols, col(labelCol).cast("long"), lit(true), lit(false),
+        maxDepth > 0, maxAggRows) { src =>
+      val s = src.summary
+      requireBoostable(s)
+      requireExact(s)
+      boost(src, featureCols, s, rounds, maxDepth)
+    }
+
+  private def requireBoostable(s: Summary): Unit = {
+    require(s.n > 0, "fitBoosted over an empty frame")
+    require(s.mn >= 0,
+      "fitBoosted needs a nonnegative integer label (the exact contract)")
+  }
+
+  /** The round-0 model: the train split's integer floor mean. */
+  private def baseModel(featureCols: Seq[String], s: Summary): BoostedModel =
+    BoostedModel(featureCols, s.sy / s.n, s.n, s.sy,
+      intSse(s.n, BigInt(s.sy), BigInt(s.syy)).toLong, Vector.empty)
+
+  /** One boosting round on top of `m`, whose next offset is `off`:
+    * (the extended model, the round after's offset). The next residual
+    * is this round's shifted label minus leafUnit (the offsets cancel),
+    * so the fit's per-leaf mins are the next offset. */
+  private def boostRound(src: FitSource, m: BoostedModel, off: Long,
+      maxDepth: Int): (BoostedModel, Long) = {
+    val (t, nextMin) = src.fitRound(m, off, maxDepth)
+    (m.copy(rounds = m.rounds :+ ((t, off))), nextMin)
+  }
+
+  private def boost(src: FitSource, featureCols: Seq[String], s: Summary,
+      rounds: Int, maxDepth: Int): BoostedModel = {
     require(rounds >= 1, s"fitBoosted needs >= 1 round, got $rounds")
-    val feats = featureCols.map(c => col(c).cast("double").as(c))
-    val base0 = df.select((feats :+ col(labelCol).cast("long").as("__y")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val a = base0.agg(count(lit(1)).as("n"), sum("__y").as("sy"),
-          sum(col("__y") * col("__y")).as("syy"), min("__y").as("mn"))
-        .collect()(0)
-      require(!a.isNullAt(0) && a.getLong(0) > 0, "fitBoosted over an empty frame")
-      val (n, sy, syy) = (a.getLong(0), a.getLong(1), a.getLong(2))
-      require(a.getLong(3) >= 0,
-        "fitBoosted needs a nonnegative integer label (the exact contract)")
-      val base = sy / n // nonneg: trunc == floor == DuckDB //
-      var fitted = Vector.empty[(TreeModel, Long)]
-      var predCol: Column = lit(base)
-      // min(__y - base) = min(__y) - base: round 1's offset needs no pass
-      var off = a.getLong(3) - base
-      (1 to rounds).foreach { _ =>
-        val resid = col("__y") - predCol
-        val shifted = base0.withColumn("__b", resid - lit(off))
-        val (t, nextMin) =
-          fitTreeMin(shifted, featureCols, "__b", maxDepth, maxAggRows)
-        fitted :+= ((t, off))
-        predCol = predCol + t.leafUnitColumn + lit(off)
-        // next resid = __b - leafUnit (the offsets cancel), so the fit's
-        // per-leaf mins already hold the next round's exact offset
-        off = nextMin
-      }
-      BoostedModel(featureCols, base, n, sy, intSse(n, BigInt(sy),
-        BigInt(syy)).toLong, fitted)
-    } finally { base0.unpersist(); () }
+    val base = baseModel(featureCols, s)
+    // min(y - base) = min(y) - base: round 1's offset needs no pass
+    (1 to rounds).foldLeft((base, s.mn - base.base)) { case ((m, off), _) =>
+      boostRound(src, m, off, maxDepth)
+    }._1
   }
 
   // ------------------------------------------------------------------
@@ -679,51 +848,50 @@ object Trainer {
     }
 
   /** Run the tuner: fit one exact ensemble per sampled candidate on
-    * the rows where `isTrainCol`, score ALL candidates' integer valid
-    * SSE in ONE pass over the rows where `isValidCol` (each model's
-    * prediction is a sibling CASE column), elect argmin (sse, trial).
-    * Returns (best model, the full trial frame — what the reference's
-    * MLflow callback logs per trial). Only the exact surface is
-    * supported: metric 'sse_valid', mode 'min' (use fitGBT + your own
-    * loop for float metrics). */
+    * the rows where `isTrainCol`, score every candidate's integer valid
+    * SSE over the rows where `isValidCol`, elect argmin (sse, trial).
+    * One corpus pass serves every candidate: the joint histogram also
+    * groups by the two split flags, and each valid SSE is computed from
+    * the valid-split tuples on the driver. Past `maxAggRows` tuples the
+    * input is persisted, each distinct depth costs `rounds * depth`
+    * passes and one pass scores every candidate. The valid split must
+    * be nonempty. Returns (best model, the full trial frame — what the
+    * reference's MLflow callback logs per trial). Only the exact
+    * surface is supported: metric 'sse_valid', mode 'min' (use fitGBT +
+    * your own loop for float metrics). */
   def tune(df: DataFrame, featureCols: Seq[String], labelCol: String,
-      isTrainCol: String, isValidCol: String,
-      spec: TunerSpec): (BoostedModel, Seq[Trial]) = {
+      isTrainCol: String, isValidCol: String, spec: TunerSpec,
+      maxAggRows: Int = 1 << 22): (BoostedModel, Seq[Trial]) = {
     require(spec.metric == "sse_valid" && spec.mode == "min",
       s"exact tuner supports (sse_valid, min) only, got " +
         s"(${spec.metric}, ${spec.mode})")
-    val train = df.filter(col(isTrainCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val cands = sampleCandidates(spec)
+    withSource(df, featureCols, col(labelCol).cast("long"),
+        coalesce(col(isTrainCol), lit(false)), coalesce(col(isValidCol), lit(false)),
+        cands.exists(_._3 > 0), maxAggRows) { src =>
+      val s = src.summary
+      requireBoostable(s)
+      requireExact(s)
+      requireValid("tune", s, isValidCol)
       // SHARED-PREFIX FITS (r16): the exact fit is deterministic and
       // prefix-stable — round g's tree depends only on rounds < g and
       // maxDepth, never on the rounds knob — so candidates sharing a
-      // maxDepth share the whole tree sequence. One fitBoosted per
-      // DISTINCT depth at that depth's max rounds, each candidate a
-      // rounds-prefix slice: identical models (same integer arithmetic,
-      // same argmins), fewer corpus passes when the sampler collides
-      // on depth (the graded spec's 3 trials hit 2 distinct depths).
-      val cands = sampleCandidates(spec)
+      // maxDepth share the whole tree sequence. One fit per DISTINCT
+      // depth at that depth's max rounds, each candidate a rounds-prefix
+      // slice: identical models (same integer arithmetic, same argmins).
       val fullByDepth = cands.groupBy(_._3).map { case (d, cs) =>
-        d -> fitBoosted(train, featureCols, labelCol, cs.map(_._2).max, d)
+        d -> boost(src, featureCols, s, cs.map(_._2).max, d)
       }
       val models = cands.map { case (i, r, d) =>
         val full = fullByDepth(d)
         (i, r, d, full.copy(rounds = full.rounds.take(r)))
       }
-      val aggs = models.map { case (i, _, _, m) =>
-        val dlt = col(labelCol).cast("long") - m.predictColumn
-        sum(dlt * dlt).as(s"sse$i")
-      } :+ count(lit(1)).as("n")
-      val row = df.filter(col(isValidCol))
-        .agg(aggs.head, aggs.tail: _*).collect()(0)
-      val trials = models.map { case (i, r, d, _) =>
-        Trial(i, r, d, row.getAs[Long]("n"), row.getAs[Long](s"sse$i"),
-          isBest = false)
+      val trials = models.zip(src.validSse(models.map(_._4))).map {
+        case ((i, r, d, _), sse) => Trial(i, r, d, s.nValid, sse, isBest = false)
       }
       val best = trials.minBy(t => (t.sseValid, t.trial)).trial
       (models(best)._4, trials.map(t => t.copy(isBest = t.trial == best)))
-    } finally { train.unpersist(); () }
+    }
   }
 
   /** One point of an early-stopping / holdout metric series. */
@@ -749,65 +917,50 @@ object Trainer {
 
   /** [[fitBoosted]] with XGBoost's early-stopping semantics: fit
     * round by round on the rows where `isTrainCol`, compute the
-    * integer valid SSE after each round (rows where `isValidCol`),
-    * STOP once `patience` consecutive rounds fail to improve the
-    * running best, and return the BEST round's prefix ensemble plus
-    * the metric series up to the stop (what the reference's per-round
-    * eval callback logs). The decision is inherently sequential — one
-    * valid-split aggregation per fitted round; the series, the stop,
-    * and the kept prefix are all exactly replayable
+    * integer valid SSE after each round (rows where `isValidCol`,
+    * required nonempty), STOP once `patience` consecutive rounds fail
+    * to improve the running best, and return the BEST round's prefix
+    * ensemble plus the metric series up to the stop (what the
+    * reference's per-round eval callback logs). The decision is
+    * sequential, but the data is not: one corpus pass (the joint
+    * histogram, split flags included) serves every round and every
+    * valid SSE. Past `maxAggRows` tuples the input is persisted and
+    * each round costs `maxDepth + 1` passes. The series, the stop, and
+    * the kept prefix are all exactly replayable
     * (tools/design_earlystop.py). */
   def fitBoostedEarlyStop(df: DataFrame, featureCols: Seq[String],
       labelCol: String, isTrainCol: String, isValidCol: String,
       maxRounds: Int, maxDepth: Int, patience: Int = 1,
       maxAggRows: Int = 1 << 22): (BoostedModel, Seq[RoundMetric]) = {
     require(maxRounds >= 1, s"need >= 1 round, got $maxRounds")
-    val feats = featureCols.map(c => col(c).cast("double").as(c))
-    val all = df.select((feats :+ col(labelCol).cast("long").as("__y") :+
-        col(isTrainCol).as("__tr") :+ col(isValidCol).as("__va")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val train = all.filter(col("__tr"))
-      val a = train.agg(count(lit(1)).as("n"), sum("__y").as("sy"),
-          sum(col("__y") * col("__y")).as("syy"), min("__y").as("mn"))
-        .collect()(0)
-      require(!a.isNullAt(0) && a.getLong(0) > 0,
-        "fitBoostedEarlyStop over an empty train split")
-      require(a.getLong(3) >= 0,
-        "fitBoostedEarlyStop needs a nonnegative integer label")
-      val (n, sy, syy) = (a.getLong(0), a.getLong(1), a.getLong(2))
-      var model = BoostedModel(featureCols, sy / n, n, sy,
-        intSse(n, BigInt(sy), BigInt(syy)).toLong, Vector.empty)
-      def validSse(m: BoostedModel): (Long, Long) = {
-        val d = col("__y") - m.predictColumn
-        val r = all.filter(col("__va"))
-          .agg(count(lit(1)).as("nv"), sum(d * d).as("sse")).collect()(0)
-        (r.getLong(0), r.getLong(1))
-      }
-      var series = Vector(validSse(model))
+    withSource(df, featureCols, col(labelCol).cast("long"),
+        coalesce(col(isTrainCol), lit(false)), coalesce(col(isValidCol), lit(false)),
+        maxDepth > 0, maxAggRows) { src =>
+      val s = src.summary
+      require(s.n > 0, "fitBoostedEarlyStop over an empty train split")
+      require(s.mn >= 0, "fitBoostedEarlyStop needs a nonnegative integer label")
+      requireValid("fitBoostedEarlyStop", s, isValidCol)
+      requireExact(s)
+      var model = baseModel(featureCols, s)
+      var series = src.validSse(Seq(model)).toVector
       var stopped = false
       var r = 1
-      // min(__y - base) over TRAIN = mn - base (r16: the per-round
-      // min pass rides the base agg / the previous fit's histogram,
-      // exactly as in fitBoosted)
-      var off = a.getLong(3) - model.base
+      // min(y - base) over TRAIN = min(y) - base
+      var off = s.mn - model.base
       while (r <= maxRounds && !stopped) {
-        val resid = col("__y") - model.predictColumn
-        val (t, nextMin) = fitTreeMin(
-          train.withColumn("__b", resid - lit(off)),
-          featureCols, "__b", maxDepth, maxAggRows)
-        model = model.copy(rounds = model.rounds :+ ((t, off)))
-        off = nextMin
-        series :+= validSse(model)
-        val (_, best) = earlyStopRound(series.map(_._2), patience)
+        val (next, nextOff) = boostRound(src, model, off, maxDepth)
+        model = next
+        off = nextOff
+        series ++= src.validSse(Seq(model))
+        val (_, best) = earlyStopRound(series, patience)
         if (series.size - 1 - best >= patience) stopped = true
         r += 1
       }
-      val (stop, best) = earlyStopRound(series.map(_._2), patience)
+      val (stop, best) = earlyStopRound(series, patience)
       val metrics = (0 to stop).map(k =>
-        RoundMetric(k, series(k)._1, series(k)._2, isBest = k == best))
+        RoundMetric(k, s.nValid, series(k), isBest = k == best))
       (model.copy(rounds = model.rounds.take(best)), metrics)
-    } finally { all.unpersist(); () }
+    }
   }
 
   /** The full-strength nonlinear leg: MLlib gradient-boosted trees

@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.{AsofJoin, WindowOps}
+import graft.operators.{AsofJoin, Preprocess, WindowOps}
 
 /** Built-in feature definitions binding the operator library into the
   * declarative forest (the reference's `features/definitions` catalog
@@ -27,21 +27,43 @@ object BuiltinDefs {
     WindowOps.orderKey(col(params("ts")),
       col(params.getOrElse("seq", params("ts"))))
 
-  /** A2: sliding population stddev of `value` over `lookback_us`.
+  /** A sliding feature's node: the key, `ts` (and `seq`) columns plus
+    * the fold's `inputs` and the order key `__okey`, run through
+    * `fold(frame, keyNames, rangeUnits)` — a [[graft.operators.KeyedFold]]
+    * batch runner over the `lookback_us` RANGE window of
+    * [[WindowOps.sliding]] — and cut back to key, ts, seq and `out`. A
+    * config without `by` runs as one key through a constant key column
+    * (an empty `repartition()` would round-robin the rows). The fold
+    * sums each window once per run in a primitive loop, where Spark's
+    * sliding RANGE frame re-aggregates the whole frame for every row
+    * through its window machinery (O(n·w) with a heavy constant). */
+  private def slidingNode(df: DataFrame, params: Map[String, String],
+      inputs: Seq[Column], out: String)(
+      fold: (DataFrame, Seq[String], Long) => DataFrame): DataFrame = {
+    val seqCol = params.get("seq").filterNot(_ == params("ts")).map(col).toSeq
+    val keep = byCols(params) ++ (col(params("ts")) +: seqCol)
+    val (key, keyCol) =
+      if (byNames(params).nonEmpty) (byNames(params), Nil)
+      else (Seq("__key"), Seq(lit(0).as("__key")))
+    fold(df.select((keep ++ keyCol ++ inputs :+ okeyOf(params).as("__okey")): _*),
+        key, params("lookback_us").toLong * 1000L)
+      .select((keep :+ col(out)): _*)
+  }
+
+  /** A2: sliding population stddev of `value` over `lookback_us`
+    * ([[WindowOps.volatility]]'s semantics, null values included).
     * The `seq` order key passes through the output so a downstream PIT
     * join can break equal-ts ties deterministically (pandas merge_asof
     * takes the last sorted right row; without the key, `last()` over
     * tie=0 rows would be partition-order-dependent). */
   object VolatilityDef extends FeatureDef {
     val name = "volatility"
-    def transform(deps: Seq[DataFrame], params: Map[String, String]): DataFrame = {
-      val df = deps.head
-      val okey = okeyOf(params)
-      val seqCol = params.get("seq").filterNot(_ == params("ts")).map(col).toSeq
-      df.select((byCols(params) ++ (col(params("ts")) +: seqCol) :+
-        WindowOps.volatility(col(params("value")), byCols(params), okey,
-          params("lookback_us").toLong).as("volatility")): _*)
-    }
+    def transform(deps: Seq[DataFrame], params: Map[String, String]): DataFrame =
+      slidingNode(deps.head, params,
+          Seq(col(params("value")).cast("double").as("__v")), "volatility") {
+        (in, key, units) =>
+          Preprocess.slidingStddevPop(in, "__okey", "__v", units, key, "volatility")
+      }
   }
 
   /** A1: OHLCV per tumbling `window_us` bucket. */
@@ -110,17 +132,22 @@ object BuiltinDefs {
 
   /** A3 as a forest node (svoe `tvi/trade_volume_imb_fd`): sliding
     * trade-volume imbalance of `notional` keyed by the boolean
-    * `is_buy` column over `lookback_us`. */
+    * `is_buy` column over `lookback_us` ([[WindowOps.tvi]]'s
+    * semantics). A row with a null notional or a null `is_buy` adds 0
+    * to both sides, which equals the window's null-skipping sums: a
+    * side sums to null only when every row is null on it, and then the
+    * other side sums to 0, so both forms give null. */
   object TviDef extends FeatureDef {
     val name = "tvi"
     def transform(deps: Seq[DataFrame], params: Map[String, String]): DataFrame = {
-      val df = deps.head
-      val okey = okeyOf(params)
-      val seqCol = params.get("seq").filterNot(_ == params("ts")).map(col).toSeq
-      df.select((byCols(params) ++ (col(params("ts")) +: seqCol) :+
-        graft.operators.WindowOps.tvi(col(params("notional")),
-          col(params("is_buy")), byCols(params), okey,
-          params("lookback_us").toLong).as("tvi")): _*)
+      val notional = col(params("notional")).cast("double")
+      val isBuy = col(params("is_buy"))
+      slidingNode(deps.head, params,
+          Seq(coalesce(when(isBuy, notional), lit(0.0)).as("__buy"),
+            coalesce(when(!isBuy, notional), lit(0.0)).as("__sell")), "tvi") {
+        (in, key, units) =>
+          Preprocess.slidingTvi(in, "__okey", "__buy", "__sell", units, key, "tvi")
+      }
     }
   }
 

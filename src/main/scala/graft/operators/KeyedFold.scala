@@ -244,6 +244,8 @@ object KeyedFold {
       }
       w
     }
+    /** Whether `r` enters the window; a row left out still emits. */
+    protected def holds(r: I): Boolean = true
     /** Fill entry `at` (after its okey) from `r`; update the sums. */
     protected def add(w: Window, at: Int, r: I): Unit
     /** Undo [[add]] of the evicted entry at `at` in the sums. */
@@ -253,8 +255,10 @@ object KeyedFold {
 
     final def step(w: Window, run: IndexedSeq[I], emit: O => Unit): Unit = {
       val ok = okey.get(run(0))
-      run.foreach { r => val at = w.slot(); w.data(at) = ok; add(w, at, r) }
-      while (w.headOkey < ok - rangeUnits) remove(w, w.evict())
+      run.foreach { r =>
+        if (holds(r)) { val at = w.slot(); w.data(at) = ok; add(w, at, r) }
+      }
+      while (w.size > 0 && w.headOkey < ok - rangeUnits) remove(w, w.evict())
       emitRun(w, run, emit)
     }
   }
@@ -265,11 +269,15 @@ object KeyedFold {
   /** Sliding population stddev, two-pass per emission (mean, then the
     * centered second moment) over the window in order — the most
     * numerically stable direct form. Ordered by (okey, value), so
-    * peers sum in one order under any partitioning. */
+    * peers sum in one order under any partitioning. A row whose value
+    * `isNull` stays out of every window but still emits, and an empty
+    * window emits None: `stddev_pop`'s null semantics. */
   def stddevPop[I, O](okey: LongField[I], value: DoubleField[I],
-      rangeUnits: Long)(out: (I, Double) => O): KeyedFold[I, O] =
+      rangeUnits: Long, isNull: I => Boolean = (_: I) => false)(
+      out: (I, Option[Double]) => O): KeyedFold[I, O] =
     new RangeFold[I, O](okey, rangeUnits, 2, 0) {
       val order: Seq[Field[I]] = Seq(okey, value)
+      override protected def holds(r: I): Boolean = !isNull(r)
       protected def add(w: Window, at: Int, r: I): Unit =
         w.data(at + 1) = bits(value.get(r))
       protected def emitRun(w: Window, run: IndexedSeq[I], emit: O => Unit): Unit = {
@@ -281,7 +289,7 @@ object KeyedFold {
         var m2 = 0.0
         e = 0
         while (e < n) { val d = dbl(w.data(w.at(e) + 1)) - mean; m2 += d * d; e += 1 }
-        val sd = math.sqrt(m2 / n)
+        val sd = if (n == 0) None else Some(math.sqrt(m2 / n))
         run.foreach(r => emit(out(r, sd)))
       }
     }

@@ -60,13 +60,18 @@ object Preprocess {
     * results agree with the declarative/DuckDB formulations.
     *
     * Input must carry a Long `okeyCol` (total order key); the window is
-    * `[okey - rangeUnits, okey]`, inclusive, matching rangeBetween.
+    * `[okey - rangeUnits, okey]`, inclusive, matching rangeBetween. A
+    * null value stays out of the windows but its row still emits; an
+    * empty window emits null — `stddev_pop` over the range frame.
     */
   def slidingStddevPop(df: DataFrame, okeyCol: String, valueCol: String,
-      rangeUnits: Long, by: Seq[String], outCol: String): DataFrame =
-    KeyedFold.runFrame(df, by, Seq(StructField(outCol, DoubleType, nullable = false)),
+      rangeUnits: Long, by: Seq[String], outCol: String): DataFrame = {
+    val v = df.schema.fieldIndex(valueCol)
+    KeyedFold.runFrame(df, by, Seq(StructField(outCol, DoubleType, nullable = true)),
       KeyedFold.stddevPop(KeyedFold.rowLong(df, okeyCol),
-        KeyedFold.rowDouble(df, valueCol), rangeUnits)(KeyedFold.plus(_, _)))
+        KeyedFold.rowDouble(df, valueCol), rangeUnits, (r: Row) => r.isNullAt(v))(
+        (r, sd) => KeyedFold.plus(r, sd.map(Double.box).orNull)))
+  }
 
   /** Sliding-window trade-volume imbalance 2*(b-s)/(b+s) (null when
     * b+s = 0) by the batch runner of [[KeyedFold.tvi]] — the scale

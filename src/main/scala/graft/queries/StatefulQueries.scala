@@ -573,9 +573,9 @@ object StatefulQueries {
     * session-scoped model memo let every timed bench run skip the fit
     * it claims to measure (the warm-up pass paid it once; ml_boost_fit
     * then "cost" 0.02 s). Every query that consumes the fit pays its
-    * own `1 + R*D` aggregation passes — the honest measurement; the
-    * fit itself was made cheaper instead (fitTreeMin's fused offsets
-    * and derived leaf stats). */
+    * own corpus pass — the honest measurement; the fit itself was made
+    * cheaper instead: one joint-histogram pass per fit, every level and
+    * round on the driver (Trainer's "Scale shape" block). */
   private def fittedBoost(s: org.apache.spark.sql.SparkSession,
       dir: String): graft.consumers.Trainer.BoostedModel =
     graft.consumers.Trainer.fitBoosted(treeBase(s, dir),
@@ -586,8 +586,8 @@ object StatefulQueries {
     // The nonlinear trainer leg (r16, r15 verdict #1): Trainer.fitTree's
     // full fit — every split decision, node stat, and leaf prediction —
     // hash-compared against the unrolled greedy replay. The distributed
-    // work (one histogram pass per level) and the driver argmin are
-    // both under the gate.
+    // work (one joint-histogram pass) and the driver's level-by-level
+    // argmin are both under the gate.
     "ml_tree_fit" -> QueryDef(TREE_FIT_SQL) { (s, dir) =>
       graft.consumers.Trainer
         .fitTree(treeBase(s, dir), Seq("f1", "f2"), "y", maxDepth = TREE_D)
@@ -654,8 +654,9 @@ object StatefulQueries {
     // reference-shaped YAML config (TrainerConfig/TunerConfig) parsed
     // by ConfigParser.parseTrainerYaml, candidates sampled
     // deterministically from its randint param space, one exact
-    // ensemble fit per candidate on the train split, ALL candidates'
-    // integer valid-SSE scored in one pass, winner = argmin
+    // ensemble fit per candidate on the train split and every
+    // candidate's integer valid-SSE, all from ONE corpus pass (the
+    // joint histogram keyed by the split flags), winner = argmin
     // (sse, trial). The oracle replays every trial's full boost chain
     // (prefixed CTE families) + the ranked election.
     "ml_tuner_best" -> QueryDef(TUNER_SQL) { (s, dir) =>

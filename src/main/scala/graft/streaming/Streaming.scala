@@ -1237,7 +1237,8 @@ object Streaming {
     KeyedFold.runStream(ds, (e: ValueEvent) => e.key, KeyedFold.stddevPop(
       KeyedFold.LongField[ValueEvent]("okey", _.okey),
       KeyedFold.DoubleField[ValueEvent]("value", _.value), rangeUnits)(
-      (e, sd) => StddevEvent(e.key, e.okey, e.value, sd)))
+      // an event's own value is always in its window: never None
+      (e, sd) => StddevEvent(e.key, e.okey, e.value, sd.get)))
   }
 
   case class CentsEvent(key: String, okey: Long, eventId: Long, cents: Long)
