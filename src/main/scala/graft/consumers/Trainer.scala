@@ -1,8 +1,10 @@
 package graft.consumers
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** Minimal trainer + model-backed inference hookup for the
   * FeatureLabelSet (svoe `trainer/trainer_manager.py:52-208` fits
@@ -226,17 +228,18 @@ object Trainer {
   // level and get the same prediction in every round, so ONE
   // distributed groupBy over the feature tuple (count, label sum, sum
   // of squares, min — map-side combinable) is a sufficient statistic
-  // for the whole fit. It is collected to the driver, and every level's
-  // (node, featureIdx, value) histogram, every boosting round's shifted
-  // residual and every valid-split SSE follow from it in exact integer
-  // arithmetic: ONE corpus pass per fit, whatever the depth, rounds or
-  // candidates. `maxAggRows` bounds the tuples collected; an input with
-  // more falls back to one distributed groupBy (node, featureIdx,
-  // value) pass per level over the persisted input, its result bounded
-  // by nodes x features x distinct values and guarded by the same
-  // `maxAggRows`. CONTINUOUS features must be pre-bucketized by the
-  // caller (floor to a grid) — the same cap discipline as the BPE merge
-  // tables.
+  // for the whole fit, and every level's (node, featureIdx, value)
+  // histogram, every boosting round's shifted residual and every
+  // valid-split SSE follow from it in exact integer arithmetic. One
+  // kernel per statistic runs over those tuples wherever they live:
+  // within `maxAggRows` tuples they are collected and the fit runs on
+  // the driver (ONE corpus pass per fit, whatever the depth, rounds or
+  // candidates); past it the aggregated tuple frame stays persisted on
+  // the executors and each summary, level and valid step is one pass
+  // over it, merged by treeReduce. A level holds at most features x
+  // `maxAggRows` bins, a bound the driver side never reaches; past it
+  // CONTINUOUS features must be pre-bucketized by the caller (floor to
+  // a grid) — the same cap discipline as the BPE merge tables.
   // ------------------------------------------------------------------
 
   /** One fitted tree node; heap numbering (root 1, children 2n/2n+1).
@@ -291,10 +294,6 @@ object Trainer {
 
     /** The distributed scorer: pred_micros (LongType). */
     def predictColumn: Column = caseColumn(id => lit(nodes(id).predMicros))
-
-    /** The reached node id per row ([[reach]]) — a partial fit's
-      * assignment of rows to its frontier. */
-    private[consumers] def reachColumn: Column = caseColumn(lit(_))
 
     /** Leaf value in the LABEL'S OWN integer scale — floor mean
       * `sum_y / n` (both nonneg under the fit contract, so `/` = floor
@@ -356,16 +355,19 @@ object Trainer {
     * `fi` equals `v`, with their count, label sum, label sum of squares
     * and label min. */
   private final case class Bin(node: Long, fi: Int, v: Long, c: Long,
-      sy: Long, syy: Long, mn: Long)
+      sy: Long, syy: Long, mn: Long) {
+    def +(o: Bin): Bin = copy(c = c + o.c, sy = Math.addExact(sy, o.sy),
+      syy = Math.addExact(syy, o.syy), mn = math.min(mn, o.mn))
+  }
 
-  /** The split search, shared by both histogram sources: grow the
-    * exact tree level by level, `level(frontier, partial)` returning the
-    * histogram of the frontier's rows under the tree fixed so far;
-    * `root` is the whole training set as one bin (read only when
-    * maxDepth = 0). Per frontier node, a prefix scan over each
-    * feature's sorted values scores every candidate, the argmin in
-    * (sse, featureIdx, threshold) order splits it, and a node without a
-    * candidate becomes a leaf early.
+  /** The split search: grow the exact tree level by level,
+    * `level(frontier, partial)` returning the histogram of the
+    * frontier's rows under the tree fixed so far; `root` is the whole
+    * training set as one bin (read only when maxDepth = 0). Per
+    * frontier node, a prefix scan over each feature's sorted values
+    * scores every candidate, the argmin in (sse, featureIdx, threshold)
+    * order splits it, and a node without a candidate becomes a leaf
+    * early.
     *
     * The last level's leaf stats (n, sum, sumsq, min) are DERIVED from
     * the parent level's histogram — the rows of a child node are
@@ -450,16 +452,10 @@ object Trainer {
     * feature is (only when the fit splits on features); plus the valid
     * split's row count. */
   private final case class Summary(n: Long, sy: Long, syy: Long, mn: Long,
-      labelBad: Boolean, featBad: Boolean, nValid: Long)
-
-  /** The rows of one fit, behind one of two histogram sources. */
-  private sealed trait FitSource {
-    def summary: Summary
-    /** One exact tree fitted to the shifted train residual
-      * `y - shift(x) - off`, and the next round's offset. */
-    def fitRound(shift: BoostedModel, off: Long, maxDepth: Int): (TreeModel, Long)
-    /** Each model's integer SSE over the valid split's non-null labels. */
-    def validSse(models: Seq[BoostedModel]): Seq[Long]
+      labelBad: Boolean, featBad: Boolean, nValid: Long) {
+    def +(o: Summary): Summary = Summary(n + o.n, Math.addExact(sy, o.sy),
+      Math.addExact(syy, o.syy), math.min(mn, o.mn), labelBad || o.labelBad,
+      featBad || o.featBad, nValid + o.nValid)
   }
 
   /** The label as a Long, null where it is null, NaN or fractional —
@@ -472,181 +468,148 @@ object Trainer {
 
   /** One joint-histogram row: the input rows sharing feature vector `x`
     * (null read as NaN: both take a split's right branch, as in the CASE
-    * scorers) and the split flags, with their row count, non-null label
-    * count, label sum, sum of squares and min. */
-  private final class Tup(val x: Array[Double], val tr: Boolean, val va: Boolean,
-      val c: Long, val cy: Long, val sy: Long, val syy: Long, val mn: Long)
+    * scorers; empty when no tree splits, so the feature check passes)
+    * and the split flags, with their row count, non-null label count,
+    * label sum, sum of squares and min. */
+  private final case class Tup(x: Array[Double], tr: Boolean, va: Boolean,
+      c: Long, cy: Long, sy: Long, syy: Long, mn: Long)
 
-  /** The local source: the collected joint histogram (its `x` empty
-    * when no tree splits, so the feature check passes). A tuple's rows
-    * share a node at every level and a prediction `q` in every round, so
-    * its shifted-residual stats are exact integer identities of its own
-    * — Σ(y−q) = Σy − c·q, Σ(y−q)² = Σy² − 2q·Σy + c·q², min(y−q) =
-    * min y − q — and every level's histogram is a driver-side group-by
-    * of the tuples reaching the frontier. */
-  private final class TupleSource(tuples: Array[Tup], featureCols: Seq[String])
-      extends FitSource {
-    private val train = tuples.filter(_.tr)
-    private val valid = tuples.filter(_.va)
+  private type Bins = mutable.HashMap[(Long, Int, Long), Bin]
 
-    val summary: Summary = Summary(train.map(_.c).sum,
-      exactLong(train.map(t => BigInt(t.sy)).sum),
-      exactLong(train.map(t => BigInt(t.syy)).sum),
-      train.map(_.mn).foldLeft(Long.MaxValue)(math.min),
-      train.exists(t => t.cy < t.c),
-      train.exists(_.x.exists(v => v.isNaN || v != math.floor(v))),
-      valid.map(_.c).sum)
-
-    def fitRound(shift: BoostedModel, off: Long, maxDepth: Int): (TreeModel, Long) = {
-      val m = train.length
-      val sb = new Array[Long](m)
-      val sbb = new Array[Long](m)
-      val mb = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        val t = train(i)
-        val q = BigInt(shift.predictUnits(t.x)) + off
-        sb(i) = exactLong(BigInt(t.sy) - q * t.c)
-        sbb(i) = exactLong(BigInt(t.syy) - q * t.sy * 2 + q * q * t.c)
-        mb(i) = exactLong(BigInt(t.mn) - q)
-        i += 1
-      }
-      val k = featureCols.size
-      growTree(featureCols, maxDepth,
-        () => Bin(1L, 0, 0L, train.map(_.c).sum, exactLong(sb.map(BigInt(_)).sum),
-          exactLong(sbb.map(BigInt(_)).sum), mb.min),
-        (frontier, partial) => {
-          val acc = mutable.HashMap.empty[(Long, Int, Long), Array[Long]]
-          var i = 0
-          while (i < m) {
-            val x = train(i).x
-            val node = partial.reach(x)
-            if (frontier(node)) {
-              var fi = 0
-              while (fi < k) {
-                val a = acc.getOrElseUpdate((node, fi, x(fi).toLong),
-                  Array(0L, 0L, 0L, Long.MaxValue))
-                a(0) += train(i).c
-                a(1) = Math.addExact(a(1), sb(i))
-                a(2) = Math.addExact(a(2), sbb(i))
-                a(3) = math.min(a(3), mb(i))
-                fi += 1
-              }
-            }
-            i += 1
-          }
-          acc.iterator.map { case ((node, fi, v), a) =>
-            Bin(node, fi, v, a(0), a(1), a(2), a(3))
-          }.toSeq
-        })
-    }
-
-    def validSse(models: Seq[BoostedModel]): Seq[Long] = models.map { mdl =>
-      exactLong(valid.iterator.map { t =>
-        val p = BigInt(mdl.predictUnits(t.x))
-        BigInt(t.syy) - p * t.sy * 2 + p * p * t.cy
-      }.sum)
+  /** The joint-histogram tuples of one fit, wherever they live: collected
+    * on the driver, or persisted per partition of the aggregated frame. */
+  private final class Tuples(at: Either[Array[Tup], RDD[Tup]]) {
+    /** `f` over every tuple: once over the collected array, or once per
+      * partition with the results merged by `treeReduce`. */
+    def fold[A: ClassTag](f: Iterator[Tup] => A)(merge: (A, A) => A): A = at match {
+      case Left(ts) => f(ts.iterator)
+      case Right(ts) => ts.mapPartitions(it => Iterator.single(f(it))).treeReduce(merge)
     }
   }
 
-  /** The distributed source, for an input whose joint histogram exceeds
-    * `maxAggRows`: the input persisted for the fit, one stats pass, then
-    * one groupBy (node, featureIdx, value) pass per tree level and one
-    * pass per valid-split scoring. */
-  private final class FrameSource(df: DataFrame, featureCols: Seq[String],
-      y: Column, tr: Column, va: Column, keyFeatures: Boolean,
-      maxAggRows: Int) extends FitSource {
-    private val frame = df.select((featureCols.map(c => col(c).cast("double").as(c)) :+
-        labelLong(y).as("__y") :+ tr.as("__tr") :+ va.as("__va")): _*)
-      .filter(col("__tr") || col("__va"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    private val train = frame.filter(col("__tr"))
+  /** The fit's statistics, each one kernel over a run of tuples with its
+    * merge. A tuple's rows share a node at every level and a prediction
+    * `q` in every round, so its shifted-residual stats are exact integer
+    * identities of its own — Σ(y−q) = Σy − c·q, Σ(y−q)² = Σy² − 2q·Σy +
+    * c·q², min(y−q) = min y − q. The distributed fold ships these
+    * functions to the executors, so they are built here, not in
+    * `Trainer`. */
+  private object Kernel extends Serializable {
+    def tup(k: Int): Row => Tup = r =>
+      Tup(Array.tabulate(k)(i => if (r.isNullAt(i)) Double.NaN else r.getDouble(i)),
+        r.getBoolean(k), r.getBoolean(k + 1), r.getLong(k + 2), r.getLong(k + 3),
+        longOr(r, k + 4, 0L), longOr(r, k + 5, 0L), longOr(r, k + 6, Long.MaxValue))
 
-    lazy val summary: Summary = {
-      val ty = when(col("__tr"), col("__y"))
-      val bad = if (!keyFeatures) lit(false) else featureCols.map { c =>
-        val f = col(c)
-        f.isNull || isnan(f) || f =!= floor(f)
-      }.reduce(_ || _)
-      val r = frame.agg(count(when(col("__tr"), lit(1))), count(ty), sum(ty),
-        sum(ty * ty), min(ty), max((col("__tr") && bad).cast("int")),
-        count(when(col("__va"), lit(1)))).collect()(0)
-      Summary(r.getLong(0), longOr(r, 2, 0L), longOr(r, 3, 0L),
-        longOr(r, 4, Long.MaxValue),
-        r.getLong(1) < r.getLong(0), !r.isNullAt(5) && r.getInt(5) > 0,
-        r.getLong(6))
-    }
+    private val noRows = Summary(0L, 0L, 0L, Long.MaxValue, false, false, 0L)
 
-    def fitRound(shift: BoostedModel, off: Long, maxDepth: Int): (TreeModel, Long) = {
-      val b = col("__y") - shift.predictColumn - lit(off)
-      growTree(featureCols, maxDepth,
-        () => {
-          val r = train.agg(count(lit(1)), sum(b), sum(b * b), min(b)).collect()(0)
-          Bin(1L, 0, 0L, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-        },
-        (frontier, partial) => {
-          val k = featureCols.size
-          val stack = expr(s"stack($k, ${featureCols.zipWithIndex
-            .map { case (c, i) => s"$i, `$c`" }.mkString(", ")}) AS (__fi, __v)")
-          val agg = train.select(partial.reachColumn.as("__node"), b.as("__b"), stack)
-            .filter(col("__node").isInCollection(frontier))
-            .groupBy(col("__node"), col("__fi"), col("__v").cast("long").as("__v"))
-            .agg(count(lit(1)), sum("__b"), sum(col("__b") * col("__b")), min("__b"))
-            .collect()
-          require(agg.length <= maxAggRows,
-            s"tree histogram has ${agg.length} (node, feature, value) rows " +
-              s"> maxAggRows=$maxAggRows — pre-bucketize continuous features")
-          agg.toSeq.map(r => Bin(r.getLong(0), r.getInt(1), r.getLong(2),
-            r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
-        })
-    }
+    def summary(ts: Iterator[Tup]): Summary = ts.map { t =>
+      val nValid = if (t.va) t.c else 0L
+      if (t.tr) Summary(t.c, t.sy, t.syy, t.mn, t.cy < t.c,
+        t.x.exists(v => v.isNaN || v != math.floor(v)), nValid)
+      else noRows.copy(nValid = nValid)
+    }.foldLeft(noRows)(_ + _)
 
-    def validSse(models: Seq[BoostedModel]): Seq[Long] =
-      if (models.isEmpty) Nil
-      else {
-        // each model's squared-residual sum is a sibling aggregate over
-        // its own nested-CASE column: k models, one pass
-        val aggs = models.map { m =>
-          val d = col("__y") - m.predictColumn
-          sum(d * d)
+    /** The train tuples' residual `y - shift(x) - off`, binned: by
+      * (node, featureIdx, value) over the frontier nodes of `level`'s
+      * partial tree, or all in one root bin when `level` is empty. */
+    def bins(shift: BoostedModel, off: Long,
+        level: Option[(Set[Long], TreeModel)]): Iterator[Tup] => Bins = ts => {
+      val acc: Bins = mutable.HashMap.empty
+      ts.filter(_.tr).foreach { t =>
+        val keys = level match {
+          case None => Seq((1L, 0, 0L))
+          case Some((frontier, partial)) =>
+            val node = partial.reach(t.x)
+            if (frontier(node)) t.x.indices.map(fi => (node, fi, t.x(fi).toLong)) else Nil
         }
-        val r = frame.filter(col("__va")).agg(aggs.head, aggs.tail: _*).collect()(0)
-        models.indices.map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
+        if (keys.nonEmpty) {
+          val q = BigInt(shift.predictUnits(t.x)) + off
+          val sb = exactLong(BigInt(t.sy) - q * t.c)
+          val sbb = exactLong(BigInt(t.syy) - q * t.sy * 2 + q * q * t.c)
+          val mb = exactLong(BigInt(t.mn) - q)
+          keys.foreach { case (node, fi, v) => add(acc, Bin(node, fi, v, t.c, sb, sbb, mb)) }
+        }
       }
+      acc
+    }
 
-    def close(): Unit = { frame.unpersist(); () }
+    private def add(acc: Bins, b: Bin): Unit = {
+      val key = (b.node, b.fi, b.v)
+      acc(key) = acc.get(key).fold(b)(_ + b)
+    }
+
+    val mergeBins: (Bins, Bins) => Bins = (a, b) => { b.values.foreach(add(a, _)); a }
+
+    /** Each model's squared residual over the valid tuples' non-null
+      * labels: Σ(y−p)² = Σy² − 2p·Σy + cy·p². */
+    def validSse(models: Seq[BoostedModel]): Iterator[Tup] => Array[BigInt] = ts => {
+      val acc = Array.fill(models.size)(BigInt(0))
+      ts.filter(_.va).foreach { t =>
+        models.indices.foreach { i =>
+          val p = BigInt(models(i).predictUnits(t.x))
+          acc(i) += BigInt(t.syy) - p * t.sy * 2 + p * p * t.cy
+        }
+      }
+      acc
+    }
+  }
+
+  /** The rows of one fit as its joint-histogram [[Tuples]], and the fit
+    * logic over them, once: the contract summary, each round's root bin
+    * and level bins, and the valid SSEs are each one [[Kernel]] fold. A
+    * level may hold at most `featureCols.size x maxAggRows` bins: the
+    * collected tuples never reach it (each train tuple adds one bin per
+    * feature), the distributed ones are refused past it. */
+  private final class FitSource(tuples: Tuples, featureCols: Seq[String],
+      maxAggRows: Int) {
+    val summary: Summary = tuples.fold(Kernel.summary)(_ + _)
+
+    /** One exact tree fitted to the shifted train residual
+      * `y - shift(x) - off`, and the next round's offset. */
+    def fitRound(shift: BoostedModel, off: Long, maxDepth: Int): (TreeModel, Long) =
+      growTree(featureCols, maxDepth,
+        () => tuples.fold(Kernel.bins(shift, off, None))(Kernel.mergeBins).values.head,
+        (frontier, partial) => {
+          val bins = tuples.fold(Kernel.bins(shift, off, Some((frontier, partial))))(
+            Kernel.mergeBins)
+          require(bins.size <= featureCols.size.toLong * maxAggRows,
+            s"tree level has ${bins.size} (node, feature, value) bins > " +
+              s"${featureCols.size} features x maxAggRows=$maxAggRows — " +
+              "pre-bucketize continuous features")
+          bins.values.toSeq
+        })
+
+    /** Each model's integer SSE over the valid split's non-null labels. */
+    def validSse(models: Seq[BoostedModel]): Seq[Long] =
+      tuples.fold(Kernel.validSse(models))((a, b) => a.zip(b).map { case (x, y) => x + y })
+        .toSeq.map(exactLong)
   }
 
   /** Run `fit` over the rows of `df` where `tr` (train) or `va` (valid)
     * holds, label `y`. One distributed pass aggregates the JOINT
     * histogram — per distinct (features, tr, va): count, non-null label
     * count, label sum, sum of squares, min — and collects at most
-    * `maxAggRows + 1` of its rows. Within `maxAggRows` the fit runs on
-    * the driver ([[TupleSource]]); past it, on the persisted input
-    * ([[FrameSource]]). `keyFeatures = false` (every tree of depth 0)
-    * groups by the split flags alone. */
+    * `maxAggRows + 1` of its rows. Within `maxAggRows` the fit folds the
+    * collected tuples on the driver; past it, the tuples persisted on the
+    * executors. `keyFeatures = false` (every tree of depth 0) groups by
+    * the split flags alone. */
   private def withSource[T](df: DataFrame, featureCols: Seq[String], y: Column,
       tr: Column, va: Column, keyFeatures: Boolean, maxAggRows: Int)(
       fit: FitSource => T): T = {
     val keys = if (keyFeatures) featureCols else Nil
-    val rows = df.select((keys.map(c => col(c).cast("double").as(c)) :+
+    val hist = df.select((keys.map(c => col(c).cast("double").as(c)) :+
         labelLong(y).as("__y") :+ tr.as("__tr") :+ va.as("__va")): _*)
       .filter(col("__tr") || col("__va"))
       .groupBy((keys :+ "__tr" :+ "__va").map(col): _*)
       .agg(count(lit(1)), count("__y"), sum("__y"), sum(col("__y") * col("__y")),
         min("__y"))
-      .limit(maxAggRows + 1).collect()
-    if (rows.length <= maxAggRows) {
-      val k = keys.size
-      fit(new TupleSource(rows.map { r =>
-        new Tup(Array.tabulate(k)(i => if (r.isNullAt(i)) Double.NaN else r.getDouble(i)),
-          r.getBoolean(k), r.getBoolean(k + 1), r.getLong(k + 2), r.getLong(k + 3),
-          longOr(r, k + 4, 0L), longOr(r, k + 5, 0L), longOr(r, k + 6, Long.MaxValue))
-      }, featureCols))
-    } else {
-      val src = new FrameSource(df, featureCols, y, tr, va, keyFeatures, maxAggRows)
-      try fit(src) finally src.close()
-    }
+    val rows = hist.limit(maxAggRows + 1).collect()
+    val tuples =
+      if (rows.length <= maxAggRows) Left(rows.map(Kernel.tup(keys.size)))
+      else Right(hist.rdd.map(Kernel.tup(keys.size))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try fit(new FitSource(new Tuples(tuples), featureCols, maxAggRows))
+    finally tuples.foreach(_.unpersist())
   }
 
   private def requireExact(s: Summary): Unit =
@@ -762,8 +725,9 @@ object Trainer {
     * corpus pass: the joint histogram's per-tuple stats shift exactly
     * by each round's per-tuple prediction, round 1's offset is
     * `min(y) - base` and later rounds' offsets ride the previous tree's
-    * leaf mins. Past `maxAggRows` tuples the input is persisted for the
-    * fit: a stats pass, then `rounds * maxDepth` level passes. */
+    * leaf mins. Past `maxAggRows` tuples they stay persisted on the
+    * executors: one tuple-frame pass for the summary, then one per
+    * level of each round, `rounds * maxDepth` in all. */
   def fitBoosted(df: DataFrame, featureCols: Seq[String], labelCol: String,
       rounds: Int, maxDepth: Int, maxAggRows: Int = 1 << 22): BoostedModel =
     withSource(df, featureCols, col(labelCol).cast("long"), lit(true), lit(false),
@@ -852,9 +816,10 @@ object Trainer {
     * SSE over the rows where `isValidCol`, elect argmin (sse, trial).
     * One corpus pass serves every candidate: the joint histogram also
     * groups by the two split flags, and each valid SSE is computed from
-    * the valid-split tuples on the driver. Past `maxAggRows` tuples the
-    * input is persisted, each distinct depth costs `rounds * depth`
-    * passes and one pass scores every candidate. The valid split must
+    * the valid-split tuples. Past `maxAggRows` tuples they stay persisted
+    * on the executors: one tuple-frame pass for the summary, one per
+    * level of each distinct depth's fit, and one that scores every
+    * candidate. The valid split must
     * be nonempty. Returns (best model, the full trial frame — what the
     * reference's MLflow callback logs per trial). Only the exact
     * surface is supported: metric 'sse_valid', mode 'min' (use fitGBT +
@@ -924,8 +889,9 @@ object Trainer {
     * reference's per-round eval callback logs). The decision is
     * sequential, but the data is not: one corpus pass (the joint
     * histogram, split flags included) serves every round and every
-    * valid SSE. Past `maxAggRows` tuples the input is persisted and
-    * each round costs `maxDepth + 1` passes. The series, the stop, and
+    * valid SSE. Past `maxAggRows` tuples they stay persisted on the
+    * executors: one tuple-frame pass for the summary and one per valid
+    * step, and each round one per level. The series, the stop, and
     * the kept prefix are all exactly replayable
     * (tools/design_earlystop.py). */
   def fitBoostedEarlyStop(df: DataFrame, featureCols: Seq[String],

@@ -65,8 +65,7 @@ object Forest {
     */
   def build(
       roots: Seq[Feature],
-      sources: Map[String, DataFrame],
-      persistShared: Boolean = true): Map[Feature, DataFrame] = {
+      sources: Map[String, DataFrame]): Map[Feature, DataFrame] = {
     val fanout = scala.collection.mutable.Map.empty[String, Int]
     def countFanout(f: Feature): Unit = {
       fanout(f.key) = fanout.getOrElse(f.key, 0) + 1
@@ -82,7 +81,7 @@ object Forest {
             throw new IllegalArgumentException(s"unbound source: $n"))
         case d => d.transform(f.deps.map(buildNode), f.params)
       }
-      if (persistShared && fanout(f.key) > 1 && !f.defn.isInstanceOf[SourceDef])
+      if (fanout(f.key) > 1 && !f.defn.isInstanceOf[SourceDef])
         df.persist(StorageLevel.MEMORY_AND_DISK)
       else df
     })

@@ -164,8 +164,10 @@ object AsofJoin {
       df.withColumn(s"__v$i", last(col(s"__f$i"), ignoreNulls = true).over(w))
     }
 
+    // `by` straight from the window's partition key, so the output keeps
+    // its hash partitioning on `by`
     val outCols =
-      labelCols.map(c => col("__lrow").getField(c).as(c)) ++
+      labelCols.map(c => if (by.contains(c)) col(c) else col("__lrow").getField(c).as(c)) ++
         features.zipWithIndex.flatMap { case ((name, fdf), i) =>
           val p = if (name.isEmpty) "" else s"${name}_"
           valColsOf(fdf).map(c => col(s"__v$i").getField(c).as(s"$p$c"))
@@ -382,7 +384,9 @@ object AsofJoin {
     * ts' <= ts + delta, i.e. backward as-of at the shifted probe), with
     * the trailing `delta` of each key's range dropped (no complete future
     * exists there). `tsCol` must be epoch-micros-scaled Long (any fixed
-    * unit works as long as deltaUs matches).
+    * unit works as long as deltaUs matches). It is [[pointInTimeJoin]]
+    * with `df` at the probe as the label and `df` as the one feature,
+    * so it shares that join's tie rule and duplicate-column check.
     */
   def lookaheadShift(
       df: DataFrame,
@@ -391,32 +395,11 @@ object AsofJoin {
       by: Seq[String] = Nil,
       labelPrefix: String = "label",
       tieBreak: Option[String] = None): DataFrame = {
-    val probes = df.withColumn(TS, col(tsCol) + lit(deltaUs))
-    val base = df.withColumn(TS, col(tsCol))
-    // Reuse the union+window machinery with probe rows as the "label".
-    val valCols = df.columns.filterNot(c => c == tsCol || by.contains(c))
-    val tie = "__asof_tie"
-    val tieCol = tieBreak.map(t => col(t).cast("long")).getOrElse(lit(0L))
-    val lTag = probes.select(
-      (by.map(col) :+ col(TS) :+ lit(Long.MaxValue).as(tie) :+
-        struct(df.columns.toIndexedSeq.map(col): _*).as("__lrow") :+ lit(1).as(SIDE)): _*)
-    val rTag = base.select(
-      (by.map(col) :+ col(TS) :+ tieCol.as(tie) :+
-        struct(valCols.toIndexedSeq.map(col): _*).as("__f0") :+ lit(0).as(SIDE)): _*)
-    val unioned = lTag.unionByName(rTag, allowMissingColumns = true)
-    val w = Window
-      .partitionBy(by.map(col): _*)
-      .orderBy(col(TS).asc, col(SIDE).asc, col(tie).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wAll = Window.partitionBy(by.map(col): _*)
-    val filled = unioned
-      .withColumn("__v0", last(col("__f0"), ignoreNulls = true).over(w))
-      .filter(col(SIDE) === 1)
-      .withColumn("__maxts", max(col("__lrow").getField(tsCol)).over(wAll))
-      .filter(col("__lrow").getField(tsCol) <= col("__maxts") - lit(deltaUs))
-    val outCols =
-      df.columns.toSeq.map(c => col("__lrow").getField(c).as(c)) ++
-        valCols.map(c => col("__v0").getField(c).as(s"${labelPrefix}_$c"))
-    filled.select(outCols: _*)
+    val probe = "__asof_probe"
+    pointInTimeJoin(df.withColumn(probe, col(tsCol) + lit(deltaUs)),
+        Seq((labelPrefix, df.withColumnRenamed(tsCol, probe))), probe, by, tieBreak)
+      .withColumn("__maxts", max(col(tsCol)).over(Window.partitionBy(by.map(col): _*)))
+      .filter(col(tsCol) <= col("__maxts") - lit(deltaUs))
+      .drop("__maxts", probe)
   }
 }

@@ -51,6 +51,36 @@ class AsofPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("lookaheadShift with tieBreak == replay, whatever the partitioning (4 seeds)") {
+    import spark.implicits._
+    val delta = 20L
+    for (seed <- 301 to 304) {
+      val rnd = new scala.util.Random(seed)
+      // ts on a 10us grid of 25 points, so keys hold many equal-ts rows
+      // and probes (ts + 20) land exactly on them; ids are unique
+      val rows = (0 until 240).map(i =>
+        (s"k${rnd.nextInt(3)}", rnd.nextLong(25L) * 10, i.toLong, rnd.nextLong(1000L)))
+      // the latest row at or before the probe, the largest id among
+      // equal ts; each key's trailing delta dropped
+      val want = rows.groupBy(_._1).values.toSeq.flatMap { rs =>
+        val maxTs = rs.map(_._2).max
+        rs.filter(_._2 <= maxTs - delta).map { case (k, ts, id, v) =>
+          val hit = rs.filter(_._2 <= ts + delta).maxBy(r => (r._2, r._3))
+          (k, ts, id, v, hit._3, hit._4)
+        }
+      }.sorted
+      val df = rows.toDF("k", "ts_us", "id", "v")
+      Seq(1, 3, 7, 13).foreach { n =>
+        val out = AsofJoin.lookaheadShift(df.repartition(n), "ts_us", delta, Seq("k"),
+          tieBreak = Some("id"))
+        assert(out.columns.toSeq == Seq("k", "ts_us", "id", "v", "label_id", "label_v"))
+        val got = out.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), r.getLong(5))).toSeq.sorted
+        assert(got == want, s"seed=$seed, $n partitions")
+      }
+    }
+  }
+
   test("salted asof == asofJoin on skewed keys (6 seeds x 3 bucket sizes)") {
     import spark.implicits._
     for (seed <- 201 to 206) {

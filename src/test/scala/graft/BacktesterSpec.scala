@@ -58,6 +58,31 @@ class BacktesterSpec extends AnyFunSuite {
     }
   }
 
+  test("keyed trade log == a (ts, seq)-ordered replay per key, whatever the partitioning") {
+    import spark.implicits._
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      // 40 ts values over 600 rows: every key holds runs of equal-ts
+      // rows, told apart only by seq
+      val rows = (0 until 600).map(i => (s"k${rnd.nextInt(4)}", rnd.nextLong(40L),
+        i.toLong, 100.0 + rnd.nextInt(10), (rnd.nextInt(3) - 1).toDouble))
+      val want = rows.groupBy(_._1).toSeq.flatMap { case (k, rs) =>
+        val sim = new Backtester.Simulator(0.0, 0.001)
+        rs.sortBy(r => (r._2, r._3)).flatMap { case (_, ts, seq, price, target) =>
+          sim.step(ts, price, target).map(t => Backtester.TradeRow(k, ts, seq, t.qty,
+            price, t.commission, sim.cash, sim.position))
+        }
+      }.sortBy(t => (t.instrument, t.ts_us, t.seq))
+      val fls = rows.toDF("instrument", "ts_us", "seq", "price", "target")
+      Seq(1, 3, 7, 13).foreach { n =>
+        val got = Backtester.runKeyedTrades(fls.repartition(n), "instrument", "ts_us",
+            "seq", "price", "target")
+          .as[Backtester.TradeRow].collect().toSeq.sortBy(t => (t.instrument, t.ts_us, t.seq))
+        assert(got == want, s"seed=$seed, $n partitions")
+      }
+    }
+  }
+
   test("fitLinear recovers exact coefficients on a linear target") {
     val spark0 = spark
     import spark0.implicits._

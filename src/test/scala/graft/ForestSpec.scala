@@ -35,10 +35,13 @@ class ForestSpec extends AnyFunSuite {
     val r1 = Feature(CountingDef, Map("p" -> "2"), Seq(shared))
     val r2 = Feature(CountingDef, Map("p" -> "3"), Seq(shared))
     val df = Seq((1L, 2.0)).toDF("ts_us", "v")
-    val out = Forest.build(Seq(r1, r2), Map("s" -> df), persistShared = false)
+    val out = Forest.build(Seq(r1, r2), Map("s" -> df))
     assert(out.size == 2)
     // shared built once + two roots = 3 transform calls, not 4
     assert(CountingDef.calls == 3)
+    // the shared node is `df` itself (CountingDef passes its dep through),
+    // persisted by the build
+    df.unpersist()
   }
 
   test("feature-store memoization: second build loads, doesn't recompute") {

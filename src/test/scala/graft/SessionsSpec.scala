@@ -118,6 +118,14 @@ class SessionsSpec extends AnyFunSuite {
     val catalog = sources(Paths.get("graft/sources/BlockCatalog.scala"))
     assert("xxhash64\\(".r.findAllMatchIn(catalog).size == 1,
       "BlockCatalog.scala must define the block hash in one place")
+    // the exact trainer builds every level histogram in its one tuple
+    // kernel: no Column-expression level pass, one growTree call site
+    val trainer = sources(Paths.get("graft/consumers/Trainer.scala"))
+    Seq("stack(", "reachColumn").foreach { s =>
+      assert(!trainer.contains(s), s"Trainer.scala builds a level outside its kernel: `$s`")
+    }
+    assert("growTree\\(".r.findAllMatchIn(trainer).size == 2,
+      "Trainer.scala must define growTree once and call it from one place")
   }
 
   /** Public defs of `src/main` that nothing outside their own

@@ -5,21 +5,24 @@ import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.consumers.Trainer
-import graft.consumers.Trainer.{ParamRange, TunerSpec}
+import graft.consumers.Trainer.{BoostedModel, ParamRange, TreeModel, TreeNodeRow, TunerSpec}
 
 /** One generated training row: four integer features (f4 constant), a
   * nonnegative integer label and the train / valid split flags. */
 case class TrainRow(f1: Long, f2: Long, f3: Long, f4: Long, y: Long,
     isTrain: Boolean, isValid: Boolean)
 
-/** The exact fits from the joint histogram (one corpus pass, every
-  * level and round on the driver) against the per-level distributed
-  * passes, reached by forcing `maxAggRows` one below the tuple count:
-  * equal models and graded frames, byte for byte, under 1, 3 and 7
-  * input partitions, at depths 0 to 4 and 1 to 3 rounds. Generated
-  * frames repeat tuples (features drawn from six values), hold a
-  * constant feature, and plant a block of rows sharing one tuple whose
-  * labels stand apart, so trees split it off into an early leaf. */
+/** The exact fits folded over the collected joint histogram (on the
+  * driver) against the same kernels folded per partition of the
+  * persisted tuples (on the executors), reached by forcing `maxAggRows`
+  * one below the tuple count: equal models and graded frames, byte for
+  * byte, under 1, 3 and 7 input partitions, at depths 0 to 4 and 1 to 3
+  * rounds. Since both folds share their kernels, `fitTree` and
+  * `fitBoosted` are also checked against [[RowReplay]], which sums over
+  * rows, not tuples. Generated frames repeat tuples (features drawn
+  * from six values), hold a constant feature, and plant a block of rows
+  * sharing one tuple whose labels stand apart, so trees split it off
+  * into an early leaf. */
 class TrainerPropertySpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
@@ -65,8 +68,8 @@ class TrainerPropertySpec extends AnyFunSuite {
     rows.toDF()
   }
 
-  /** One below the joint histogram's tuple count: forces the per-level
-    * source. Depth-0 fits group by the split flags alone. */
+  /** One below the joint histogram's tuple count: forces the
+    * distributed fold. Depth-0 fits group by the split flags alone. */
   private def perLevel(rows: Seq[TrainRow], keyFeatures: Boolean,
       flags: Boolean): Int = {
     val read = if (flags) rows.filter(r => r.isTrain || r.isValid) else rows
@@ -134,6 +137,46 @@ class TrainerPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("fitTree and fitBoosted equal the row-level replay") {
+    check("rowReplay") { case (rows, _, rounds) =>
+      val df = frame(rows).repartition(3)
+      val xy = rows.map(r => (Array(r.f1, r.f2, r.f3, r.f4), r.y))
+      for {
+        depth <- 0 to 4
+        tree = RowReplay.tree(xy, Feats, depth)
+        boosted = RowReplay.boosted(xy, Feats, rounds, depth)
+        maxAggRows <- Seq(1 << 22, perLevel(rows, depth > 0, flags = false))
+      } {
+        val t = Trainer.fitTree(df, Feats, "y", depth, maxAggRows)
+        assert(t == tree, s"fitTree depth $depth, maxAggRows $maxAggRows")
+        assert(rowsOf(t.treeFrame(spark)) == rowsOf(tree.treeFrame(spark)))
+        val b = Trainer.fitBoosted(df, Feats, "y", rounds, depth, maxAggRows)
+        assert(b == boosted, s"fitBoosted depth $depth, $rounds rounds, maxAggRows $maxAggRows")
+        assert(rowsOf(b.boostFrame(spark)) == rowsOf(boosted.boostFrame(spark)))
+      }
+    }
+  }
+
+  test("a level holds at most features x maxAggRows bins") {
+    val spark0 = spark
+    import spark0.implicits._
+    val y = (i: Int) => (i * 37L) % 101
+    // 200 distinct tuples, each feature 200 values: the root level
+    // alone has 2 x 200 bins
+    val raw = (0 until 200).map(i => (i.toLong, i.toLong, y(i))).toDF("f1", "f2", "y")
+    val e = intercept[IllegalArgumentException] {
+      Trainer.fitTree(raw, Seq("f1", "f2"), "y", 2, maxAggRows = 150)
+    }
+    assert(e.getMessage == "requirement failed: tree level has 400 (node, feature, " +
+      "value) bins > 2 features x maxAggRows=150 — pre-bucketize continuous features")
+    // bucketized to 100 and 101 values, still 200 distinct tuples: past
+    // maxAggRows, so the fit folds on the executors, within the bound
+    val bucketed = (0 until 200).map(i => (i / 2L, (i + 1) / 2L, y(i)))
+      .toDF("f1", "f2", "y")
+    assert(Trainer.fitTree(bucketed, Seq("f1", "f2"), "y", 2, maxAggRows = 150) ==
+      Trainer.fitTree(bucketed, Seq("f1", "f2"), "y", 2))
+  }
+
   /** The four fits over `df`, each at `maxAggRows`, as their error
     * messages. */
   private def errors(df: DataFrame, maxAggRows: Int): Seq[String] = {
@@ -166,7 +209,7 @@ class TrainerPropertySpec extends AnyFunSuite {
       "null label" -> (rows(1.0, None), Seq.fill(4)(exact)))
     faults.foreach { case (fault, (df, want)) =>
       assert(errors(df, 1 << 22) == want, fault)
-      assert(errors(df, 0) == want, s"$fault, per-level source")
+      assert(errors(df, 0) == want, s"$fault, distributed fold")
     }
   }
 
@@ -190,5 +233,73 @@ class TrainerPropertySpec extends AnyFunSuite {
       assert(e.getMessage == "requirement failed: " +
         "fitBoostedEarlyStop needs a nonempty valid split: no row has va set")
     }
+  }
+}
+
+/** Plain-Scala replay of the exact fits over ROWS (the rules of
+  * tools/design_tree.py and tools/design_boost.py): every node's count,
+  * label sum and sum of squares are summed over its own rows, every
+  * candidate split partitions those rows, and each boosting round refits
+  * the shifted residual of every row. No tuple, histogram or prefix scan. */
+object RowReplay {
+  type XY = (Array[Long], Long)
+
+  private def sse(rows: Seq[XY]): BigInt = {
+    val sy = rows.map(r => BigInt(r._2)).sum
+    val m = sy / rows.size
+    rows.map(r => (BigInt(r._2) - m).pow(2)).sum
+  }
+
+  /** The greedy tree: per node, the least (sse_L + sse_R, featureIdx,
+    * threshold) over every feature value below the node's max on that
+    * feature; no candidate, or depth `maxDepth`, makes a leaf. */
+  def tree(rows: Seq[XY], feats: Seq[String], maxDepth: Int): TreeModel = {
+    def grow(id: Long, depth: Int, rs: Seq[XY]): Seq[TreeNodeRow] = {
+      val cands = if (depth == maxDepth) Nil else for {
+        fi <- feats.indices
+        v <- rs.map(_._1(fi)).distinct.sorted.init
+      } yield {
+        val (l, r) = rs.partition(_._1(fi) <= v)
+        (sse(l) + sse(r), fi, v)
+      }
+      val sy = rs.map(_._2).sum
+      val own = TreeNodeRow(id, depth, rs.size.toLong, sy, sse(rs).toLong, None, None)
+      if (cands.isEmpty) Seq(own)
+      else {
+        val (_, fi, v) = cands.min
+        val (l, r) = rs.partition(_._1(fi) <= v)
+        own.copy(feature = Some(feats(fi)), threshold = Some(v)) +:
+          (grow(id * 2, depth + 1, l) ++ grow(id * 2 + 1, depth + 1, r))
+      }
+    }
+    TreeModel(feats, grow(1L, 0, rows).map(n => n.node -> n).toMap)
+  }
+
+  /** The leaf's floor mean in the label's scale for `x`. */
+  private def leafUnit(t: TreeModel, feats: Seq[String], x: Array[Long]): Long = {
+    var n = t.nodes(1L)
+    while (!n.isLeaf) {
+      val id = if (x(feats.indexOf(n.feature.get)) <= n.threshold.get) n.node * 2
+        else n.node * 2 + 1
+      n = t.nodes(id)
+    }
+    n.sumY / n.n
+  }
+
+  /** Base = floor mean; each round fits the tree to `y - pred - off`,
+    * off the least residual, and adds its leaf's floor mean plus off. */
+  def boosted(rows: Seq[XY], feats: Seq[String], rounds: Int,
+      maxDepth: Int): BoostedModel = {
+    val sy = rows.map(_._2).sum
+    val base = sy / rows.size
+    var preds = rows.map(_ => base)
+    val trees = (1 to rounds).map { _ =>
+      val resid = rows.zip(preds).map { case (r, p) => r._2 - p }
+      val off = resid.min
+      val t = tree(rows.zip(resid).map { case (r, e) => (r._1, e - off) }, feats, maxDepth)
+      preds = rows.zip(preds).map { case (r, p) => p + leafUnit(t, feats, r._1) + off }
+      (t, off)
+    }
+    BoostedModel(feats, base, rows.size.toLong, sy, sse(rows).toLong, trees)
   }
 }
