@@ -660,7 +660,6 @@ object DocQueries {
         Streaming.shingleOwnerStream(Streaming.documentsStream(s, dir),
           col("text"), col("doc_id"), 3),
         rocksdbState = true, // per-distinct-shingle state: corpus-sized
-        noDataBatch = false, // complete snapshot: last data batch is final
         // shard count derived from input size (corpusStateShards
         // scaladoc): no-op at scale, 8 shards at bench SF
         statePartitions = Streaming.corpusStateShards(s,
@@ -844,7 +843,6 @@ object DocQueries {
           Streaming.documentsStream(s, dir),
           col("text"), col("doc_id"), col("n_chars")),
         rocksdbState = true, // digest-cardinality state: corpus-sized
-        noDataBatch = false, // complete snapshot: last data batch is final
         statePartitions = Streaming.corpusStateShards(s,
           s"$dir/documents.parquet"))
     },
@@ -873,7 +871,6 @@ object DocQueries {
         Streaming.exactDedupKeepListStream(stream,
           col("text"), col("doc_id"), col("n_chars")),
         rocksdbState = true, // digest-cardinality state: corpus-sized
-        noDataBatch = false, // complete snapshot: last data batch is final
         statePartitions = Streaming.corpusStateShards(s, s"$tmp/raw"))
     },
 
@@ -904,7 +901,6 @@ object DocQueries {
           Streaming.documentsStream(s, dir),
           col("text"), col("doc_id"), size = 20),
         rocksdbState = true, // passage-cardinality state: corpus-sized
-        noDataBatch = false, // complete snapshot: last data batch is final
         statePartitions = Streaming.corpusStateShards(s,
           s"$dir/documents.parquet"))
     },
@@ -935,9 +931,8 @@ object DocQueries {
           bands = 16, estThreshold = 0.6, watermarkDelayMs = 31536000000L,
           baseHash = Dedup.Md5Prefix)
         Streaming.collapseNearDupVerdicts(
-            Streaming.runAvailableNow(verdicts.toDF(), outputMode = "append",
+            Streaming.runAvailableNow(verdicts.toDF(),
               rocksdbState = true, // band-bucket state: corpus-sized
-              noDataBatch = false, // fMGWS timeout only evicts
               statePartitions = Streaming.corpusStateShards(s,
                 s"$dir/documents.parquet")))
           .select(col("docId").as("doc_id"), col("dup_of"))
@@ -961,9 +956,8 @@ object DocQueries {
         val verdicts = Streaming.simhashDedupStream(docs, maxDist = 6,
           watermarkDelayMs = 31536000000L, baseHash = Dedup.Md5Prefix)
         Streaming.collapseNearDupVerdicts(
-            Streaming.runAvailableNow(verdicts.toDF(), outputMode = "append",
+            Streaming.runAvailableNow(verdicts.toDF(),
               rocksdbState = true, // band-bucket state: corpus-sized
-              noDataBatch = false, // fMGWS timeout only evicts
               statePartitions = Streaming.corpusStateShards(s,
                 s"$dir/documents.parquet")))
           .select(col("docId").as("doc_id"), col("dup_of"))
@@ -1216,7 +1210,6 @@ object DocQueries {
         // positional markers make it corpus-linear outright) — the
         // corpus-cardinality rule routes it through RocksDB
         rocksdbState = true,
-        noDataBatch = false, // complete snapshot: last data batch is final
         statePartitions = Streaming.corpusStateShards(s,
           s"$dir/documents.parquet"))
       counts.orderBy(col("cnt").desc, col("word").asc).limit(20)
@@ -1894,7 +1887,6 @@ object DocQueries {
         Streaming.unpackTopCap(Streaming.runAvailableNow(
           Streaming.sourceCapStream(scored, col("source"), col("q_dm"),
             col("doc_id"), cap = 40),
-          noDataBatch = false, // complete snapshot
           // state is one packed cap-array per SOURCE (a handful of
           // domains): metadata-sized, key-bound rule
           statePartitions = Some(8)))
@@ -2443,7 +2435,6 @@ object DocQueries {
               .filter(substring(md5(col("text")), 1, 6) >= bound),
             col("text")),
           rocksdbState = true, // word state grows with the corpus
-          noDataBatch = false, // complete snapshot
           statePartitions = Streaming.corpusStateShards(s,
             s"$dir/documents.parquet"))
         .withColumnRenamed("cnt", "c_new")
@@ -2479,7 +2470,6 @@ object DocQueries {
         Streaming.boilerplateDfStream(Streaming.documentsStream(s, dir),
           col("text"), col("doc_id"), size = 10, minDf = 3),
         rocksdbState = true, // state is passage-cardinality: corpus-sized
-        noDataBatch = false, // complete snapshot
         statePartitions = Streaming.corpusStateShards(s,
           s"$dir/documents.parquet"))
       Dedup.boilerplateStripAgainst(Tables.documents(s, dir), col("text"),
@@ -2523,9 +2513,7 @@ object DocQueries {
         TA.modelApplyWeights(
           TA.modelFeatures(Streaming.documentsStream(s, dir), col("text"),
             col("doc_id"), (col("lang") === "en").cast("long"), bound),
-          w, 500000L),
-        outputMode = "append",
-        noDataBatch = false) // stateless scoring map
+          w, 500000L))
     },
 
     // HTML -> text extraction (trafilatura-lite): each doc is wrapped
@@ -2654,7 +2642,6 @@ object DocQueries {
           col("__g"),
           -expr("CAST(conv(substring(md5(text), 1, 12), 16, 10) AS BIGINT)"),
           col("doc_id"), cap = 50),
-        noDataBatch = false, // complete snapshot
         // ONE group key ("all"): metadata-sized state, key-bound rule
         statePartitions = Some(8))
       Streaming.unpackTopCap(drained)

@@ -300,13 +300,12 @@ object EventQueries {
     // oracle: the SAME SQL as ev_ohlcv_1h, so batch == stream is a
     // driver-checked identity, not a spec claim.
     "ev_ohlcv_stream" -> QueryDef(OHLCV_SQL) { (s, dir) =>
-      // noDataBatch off: complete-mode snapshot — the last data batch
-      // already wrote the full state. statePartitions from the state's
-      // own cardinality class: one row per (type, hour bucket) —
-      // metadata-sized at any corpus scale (ohlcvStream scaladoc).
+      // statePartitions from the state's own cardinality class: one
+      // row per (type, hour bucket) — metadata-sized at any corpus
+      // scale (ohlcvStream scaladoc).
       Streaming.runAvailableNow(
         Streaming.ohlcvStream(Streaming.eventsStream(s, dir), H),
-        noDataBatch = false, statePartitions = Some(8))
+        statePartitions = Some(8))
     },
 
     // STREAM-STREAM interval join (J4's event-time range half): each
@@ -336,18 +335,12 @@ object EventQueries {
           col("ts_us"), col("value").as("c_value"))
       val joined = Streaming.intervalJoinStream(purchases, clicks,
         "user_id", "ts_us", 21600000000L, "12 hours")
-      // noDataBatch off: INNER stream-stream join emits on arrival
-      // only — the engine's watermark-commit batch is a pure state
-      // EVICTION scan (profiled as expensive as the data batch: the
-      // join's four per-shard stores reload, scan and rewrite), and
-      // eviction right before drain termination buys nothing.
       Streaming.runAvailableNow(joined.select(
         col("user_id"), col("p_id"), col("c_id"),
         unix_micros(col("l_ts")).as("p_ts_us"),
         unix_micros(col("r_ts")).as("c_ts_us"),
         round(col("p_value") * 100).cast("long").as("p_cents"),
         round(col("c_value") * 100).cast("long").as("c_cents")),
-        "append", noDataBatch = false,
         // user-keyed join state is corpus-cardinality: shard count
         // derived from input size (corpusStateShards scaladoc)
         statePartitions = Streaming.corpusStateShards(s,
@@ -475,13 +468,11 @@ object EventQueries {
           col("event_id").as("eventId"),
           round(col("value") * 100).cast("long").as("cents"))
         .as[Streaming.CentsEvent]
-      // noDataBatch off: fMGWS emits per arrival, timeout only evicts.
       // statePartitions = |event types| bound: the per-key fold caps
       // usable parallelism at 5 keys whatever the shard count.
       Streaming.runAvailableNow(
           Streaming.anomalyExactStream(src, D * 1000L, z = 3)
             .toDF(),
-          outputMode = "append", noDataBatch = false,
           statePartitions = Some(8))
         .select(col("eventId").as("event_id"), col("key").as("event_type"),
           col("n"), col("isAnomaly").as("is_anomaly"))
@@ -798,10 +789,8 @@ object EventQueries {
             expr("ts div 1000").as("tsUs"), col("event_id").as("seq"),
             col("value"))
           .as[Streaming.ThrottleEvent]
-        // noDataBatch off: fMGWS emits per arrival (NoTimeout state)
         Streaming.runAvailableNow(
             Streaming.throttleElapsedStream(src, 6 * H).toDF(),
-            outputMode = "append", noDataBatch = false,
             statePartitions = Streaming.corpusStateShards(s,
               s"$dir/events.parquet"))
           .select(col("key").cast("long").as("user_id"),
@@ -827,11 +816,9 @@ object EventQueries {
               .as("okey"),
             col("value"))
           .as[Streaming.ValueEvent]
-        // noDataBatch off: fMGWS emits per arrival (NoTimeout state);
         // statePartitions = |event types| bound (5-key fold)
         Streaming.runAvailableNow(
             Streaming.slidingStddevStream(src, D * 1000L).toDF(),
-            outputMode = "append", noDataBatch = false,
             statePartitions = Some(8))
           .select(col("key").as("event_type"), col("okey"), col("value"),
             round(col("stddev"), 4).as("volatility"))
@@ -861,14 +848,13 @@ object EventQueries {
         // closures (EventReplayProvider.inferSchema scaladoc)
         .option("columns", "event_id,event_type,value")
         .load()
-      // noDataBatch off: complete-mode snapshot (no watermark at all).
       // statePartitions from state cardinality: one row per event type.
       Streaming.runAvailableNow(
         stream.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"),
             (sum(round(col("value") * 100)) / 100).as("sum_value"),
             max(col("event_id")).as("max_id")),
-        noDataBatch = false, statePartitions = Some(8))
+        statePartitions = Some(8))
     },
 
     // J6 combine_latest, driver-visible: the keyed fMGWS state operator
@@ -898,12 +884,9 @@ object EventQueries {
             col("event_id").as("ts_us"),
             col("event_type").as("feature"), col("value"))
           .as[Streaming.FeatureEvent]
-        // noDataBatch off: fMGWS emits per arrival (NoTimeout state);
         // user-keyed state is corpus-cardinality: shard count derived
         // from input size (corpusStateShards scaladoc)
-        Streaming.runAvailableNow(
-            Streaming.combineLatest(src).toDF(), outputMode = "append",
-            noDataBatch = false,
+        Streaming.runAvailableNow(Streaming.combineLatest(src).toDF(),
             statePartitions = Streaming.corpusStateShards(s,
               s"$dir/events.parquet"))
           .select(col("key").cast("long").as("user_id"),

@@ -1966,9 +1966,8 @@ object MultimodalQueries {
         val verdicts = Streaming.hashDedupStream(hashes, maxDist = 3,
           watermarkDelayMs = 31536000000L)
         Streaming.collapseNearDupVerdicts(
-            Streaming.runAvailableNow(verdicts.toDF(), outputMode = "append",
+            Streaming.runAvailableNow(verdicts.toDF(),
               rocksdbState = true, // band-bucket state: corpus-sized
-              noDataBatch = false, // fMGWS timeout only evicts
               statePartitions = Streaming.corpusStateShards(s,
                 s"$dir/documents.parquet")))
           .select(col("docId").as("doc_id"), col("dup_of"))
@@ -2028,9 +2027,8 @@ object MultimodalQueries {
         val verdicts = Streaming.hashDedupStream(hashes, maxDist = 3,
           watermarkDelayMs = 31536000000L)
         Streaming.collapseNearDupVerdicts(
-            Streaming.runAvailableNow(verdicts.toDF(), outputMode = "append",
+            Streaming.runAvailableNow(verdicts.toDF(),
               rocksdbState = true, // band-bucket state: corpus-sized
-              noDataBatch = false, // fMGWS timeout only evicts
               statePartitions = Streaming.corpusStateShards(s,
                 s"$dir/documents.parquet")))
           .select(col("docId").as("doc_id"), col("dup_of"))
@@ -2183,9 +2181,7 @@ object MultimodalQueries {
         Streaming.collapseVideoDupVerdicts(
           Streaming.runAvailableNow(
             verdicts.toDF("docId", "tsUs", "bidx", "matched"),
-            outputMode = "append",
             rocksdbState = true, // band-bucket state: corpus-sized
-            noDataBatch = false, // fMGWS timeout only evicts
             statePartitions = Streaming.corpusStateShards(s,
               s"$dir/documents.parquet")))
     },

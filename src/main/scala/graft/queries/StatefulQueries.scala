@@ -738,9 +738,7 @@ object StatefulQueries {
       val model = fittedBoost(s, dir)
       val scored = treeCols(graft.streaming.Streaming.eventsStream(s, dir))
         .withColumn("pred", model.predictColumn)
-      // noDataBatch off: stateless scoring map — nothing to finalize
-      graft.streaming.Streaming.runAvailableNow(scored,
-          outputMode = "append", noDataBatch = false)
+      graft.streaming.Streaming.runAvailableNow(scored)
         .groupBy("pred")
         .agg(count(lit(1)).as("n"), sum("y").as("sum_y"))
     },
@@ -782,9 +780,7 @@ object StatefulQueries {
         .asInstanceOf[graft.consumers.Trainer.BoostedModel]
       val scored = treeCols(graft.streaming.Streaming.eventsStream(s, dir))
         .withColumn("pred", loaded.predictColumn)
-      // noDataBatch off: stateless scoring map — nothing to finalize
-      graft.streaming.Streaming.runAvailableNow(scored,
-          outputMode = "append", noDataBatch = false)
+      graft.streaming.Streaming.runAvailableNow(scored)
         .groupBy("pred")
         .agg(count(lit(1)).as("n"), sum("y").as("sum_y"))
     },
@@ -979,12 +975,11 @@ object StatefulQueries {
           round(col("value")).as("price"),
           (lit(1.0) + col("event_id") % 5).as("size"))
         .as[L2Book.Update]
-      // noDataBatch off: fMGWS emits per arrival; statePartitions =
-      // |instruments| bound (the per-instrument book fold caps usable
-      // parallelism at the instrument count whatever the shard count)
+      // statePartitions = |instruments| bound (the per-instrument book
+      // fold caps usable parallelism at the instrument count whatever
+      // the shard count)
       val sink = graft.streaming.Streaming.runAvailableNow(
         graft.streaming.Streaming.l2BookStream(updates, depth = 5).toDF(),
-        outputMode = "append", noDataBatch = false,
         statePartitions = Some(8))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("instrument"), (col("ts_us") / H).cast("long"))

@@ -12,20 +12,14 @@ import graft.sources.BlockCatalog
   * delivery safe (replayed batches are skipped), replacing the
   * reference's hash-exists check at store time.
   *
-  * `minRowsPerBlock` is the size-based compaction policy (reference
-  * `memory_based_compactor.py:11-51`, row-count proxy for its memory
-  * target): micro-batches are persisted and buffered until the target
-  * is reached, then flushed as ONE compacted block — small triggers no
-  * longer mean small files. DURABILITY CAVEAT: offsets commit when
-  * foreachBatch returns, so rows buffered below the target are LOST if
-  * the query stops before the next flush — the same at-most-once
-  * window as the reference's in-memory compactor. An AvailableNow
-  * drain always stops with its last buffer below the target, so
-  * `availableNow = true` with `minRowsPerBlock > 0` is rejected. When
-  * every row must land, run with minRowsPerBlock=0 (flush per batch,
-  * at-least-once via content-hash idempotency; nothing is persisted,
-  * since the catalog write runs each micro-batch's plan once) and
-  * compact post hoc with `BlockCatalog.compactSmallBlocks`.
+  * Every micro-batch flushes as its own block: the catalog write runs
+  * the batch's plan once (hash and stats ride the data write), so a
+  * stateful upstream runs once per micro-batch with nothing persisted,
+  * and every row lands before its offsets commit. The reference's
+  * size-based compaction (`memory_based_compactor.py:11-51`) buffers
+  * in memory and loses the buffer when the process stops; here it is
+  * post hoc instead: `BlockCatalog.compactSmallBlocks` merges the small
+  * blocks afterwards.
   *
   * `start` calls [[StreamingSession.install]] on the frame's session
   * before the query starts. That sets [[LocalCheckpointFileManager]]
@@ -44,38 +38,14 @@ object BlockWriter {
   def start(df: DataFrame, catalog: BlockCatalog, definition: String,
       key: String, tsUs: String, triggerMs: Long = 5000L,
       checkpoint: Option[String] = None,
-      minRowsPerBlock: Long = 0L,
       availableNow: Boolean = false): StreamingQuery = {
-    require(!(availableNow && minRowsPerBlock > 0L),
-      "BlockWriter.start: availableNow = true with minRowsPerBlock > 0 " +
-      "would drop the last buffered rows when the drain stops; use " +
-      "minRowsPerBlock = 0 and compact afterwards with " +
-      "BlockCatalog.compactSmallBlocks")
     StreamingSession.install(df.sparkSession)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var buffered = 0L
     val base = df.writeStream
-      .outputMode("append")
       .trigger(if (availableNow) Trigger.AvailableNow()
         else Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (minRowsPerBlock <= 0L) {
-          // flush-per-batch: the catalog write runs the batch's plan
-          // once (hash and stats ride the data write), so a stateful
-          // upstream runs once per micro-batch with nothing persisted
-          catalog.write(batch, definition, key, tsUs)
-          ()
-        } else if (!batch.isEmpty) {
-          val p = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          buffered += p.count() // materializes the persist
-          buf += p
-          if (buffered >= minRowsPerBlock) {
-            catalog.write(buf.reduce(_ unionByName _), definition, key, tsUs)
-            buf.foreach(_.unpersist())
-            buf.clear()
-            buffered = 0L
-          }
-        }
+        catalog.write(batch, definition, key, tsUs)
+        ()
       }
     checkpoint.fold(base)(cp => base.option("checkpointLocation", cp)).start()
   }

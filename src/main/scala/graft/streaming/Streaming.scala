@@ -433,39 +433,45 @@ object Streaming {
   /** Drain a streaming frame with `Trigger.AvailableNow` and return
     * the result as a batch frame — the harness that puts the STREAMING
     * engine (state store included) under a batch-oracle compare.
-    * `complete` mode returns the final aggregate; `append` the union
-    * of emitted rows.
     *
-    * The drain is a foreachBatch parquet write (overwrite per batch in
-    * complete mode — the last batch IS the final aggregate; append
-    * accumulates), read back after termination: fully DISTRIBUTED, so
-    * the result never funnels through the driver. The earlier memory
-    * sink collected every batch's complete output to the driver and
-    * died on `spark.driver.maxResultSize` at the sf100eq probe's 15M
-    * distinct passages — the harness was the bottleneck, not the
-    * stateful agg (SCALE.md third-decade rule, driver edition:
-    * consumer surfaces must scale too). Production streams write
-    * through foreachBatch to the block sink ([[BlockWriter]]) — same
-    * shape as this drain. */
-  def runAvailableNow(df: DataFrame, outputMode: String = "complete",
-      rocksdbState: Boolean = false,
-      // noDataBatch = false SKIPS the engine's watermark-commit batch
-      // (spark.sql.streaming.noDataMicroBatches.enabled) for THIS
-      // drain. Every no-data batch pays the full per-trigger machinery
-      // (state reload + commit on every shard, a foreachBatch job) —
-      // measured as expensive as a data batch on the stream-stream
-      // join (its eviction scans the whole state) — and it can only
-      // change the DRAINED RESULT for an append-mode WATERMARKED
-      // AGGREGATION (window/session finalization fires on watermark
-      // advance: skipping it loses the final windows — keep the
-      // default there). Evict-only operators (this file's fMGWS
-      // timeout branches emit nothing), inner stream-stream joins
-      // (emit on arrival), dropDuplicates*, stateless maps, and
-      // complete-mode snapshots (the last data batch already wrote
-      // the full state) are result-identical with it off — each
-      // graded call site opting out is pinned by the driver's exact
-      // oracle compare. Default keeps the engine behavior.
-      noDataBatch: Boolean = true,
+    * The drain is a foreachBatch parquet write, read back after
+    * termination: fully DISTRIBUTED, so the result never funnels
+    * through the driver. The earlier memory sink collected every
+    * batch's complete output to the driver and died on
+    * `spark.driver.maxResultSize` at the sf100eq probe's 15M distinct
+    * passages — the harness was the bottleneck, not the stateful agg
+    * (SCALE.md third-decade rule, driver edition: consumer surfaces
+    * must scale too). Production streams write through foreachBatch
+    * to the block sink ([[BlockWriter]]) — same shape as this drain.
+    *
+    * Two settings follow from `df`'s analyzed plan, so no caller
+    * passes them:
+    *  - OUTPUT MODE: `complete` when the plan holds a streaming
+    *    aggregate (each batch overwrites the output, and the last one
+    *    IS the final aggregate), `append` otherwise (the output
+    *    accumulates every batch's rows). Spark's unsupported-operation
+    *    check rejects a wrong mode at start, so a plan this rule
+    *    misreads fails loudly instead of draining a different result.
+    *  - NO-DATA BATCH: the engine's watermark-commit batch
+    *    (`spark.sql.streaming.noDataMicroBatches.enabled`) runs only
+    *    when the plan holds a stream-stream join that is not inner,
+    *    whose unmatched rows are emitted only when the watermark
+    *    advances. Every other plan emits nothing in it: an inner join
+    *    emits on arrival, a complete-mode snapshot is already whole
+    *    after the last data batch, and stateless maps and deduplication
+    *    finalize nothing. Yet each such batch pays a full trigger
+    *    (state reload and commit on every shard, a foreachBatch job),
+    *    measured as expensive as a data batch on the stream-stream
+    *    join, so those drains skip it.
+    *
+    * CONTRACT: a `flatMapGroupsWithState` whose timeout branch EMITS
+    * rows is outside this rule (it would need the no-data batch to
+    * fire its last timeouts). Every fMGWS this engine defines either
+    * runs with `NoTimeout` or only evicts state on timeout.
+    *
+    * `rocksdbState` and `statePartitions` are documented where the
+    * drain applies them ([[drainConfs]]). */
+  def runAvailableNow(df: DataFrame, rocksdbState: Boolean = false,
       // statePartitions: state-shard count for THIS drain (streaming
       // state shards = shuffle partitions at query start, FIXED by the
       // checkpoint — AQE cannot coalesce them, so the session-wide
@@ -482,9 +488,8 @@ object Streaming {
       // corpus drain at sf0.1 before the r17 bound (SCALE.md r17
       // crossover table).
       statePartitions: Option[Int] = None): DataFrame = {
-    val saveMode = if (outputMode == "complete") "overwrite" else "append"
-    val out = drain(df, "graft_stream_", outputMode,
-        drainConfs(df.sparkSession, rocksdbState, noDataBatch, statePartitions)) {
+    val saveMode = if (aggregates(df)) "overwrite" else "append"
+    val out = drain(df, "graft_stream_", rocksdbState, statePartitions) {
       (batch, out) => batch.write.mode(saveMode).parquet(out)
     }
     readBack(df.sparkSession, out, df.schema)()
@@ -528,11 +533,30 @@ object Streaming {
     Some(math.min(n, Int.MaxValue.toLong).toInt) // drainConfs caps at session
   }
 
-  /** The session confs one drain runs under (see [[runAvailableNow]]'s
-    * parameter comments for when each is result-neutral). A streaming
-    * query captures them when it starts (StreamExecution clones the
-    * session), so [[drain]] sets them around its query through
-    * [[graft.core.Sessions.withConfs]] and restores them after.
+  /** True when `df`'s analyzed plan holds a streaming aggregate: the
+    * drain then runs in `complete` mode (see [[runAvailableNow]]). */
+  private def aggregates(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a.isStreaming
+      case _ => false
+    }
+
+  /** True when `df`'s analyzed plan holds a stream-stream join that is
+    * not inner: only then does the drain run the no-data batch (see
+    * [[runAvailableNow]]). */
+  private def outerStreamJoin(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+        j.left.isStreaming && j.right.isStreaming &&
+          j.joinType != org.apache.spark.sql.catalyst.plans.Inner
+      case _ => false
+    }
+
+  /** The session confs one drain of `df` runs under. A streaming query
+    * captures them when it starts (StreamExecution clones the session),
+    * so [[drain]] sets them around `.start()` alone through
+    * [[graft.core.Sessions.withConfs]], which restores them before the
+    * first trigger runs.
     *
     *  - `rocksdbState`: keyed state goes through the RocksDB provider —
     *    REQUIRED when state cardinality is corpus-sized (the
@@ -549,28 +573,23 @@ object Streaming {
     *    by construction: only the CHECKPOINT FORMAT changes, and every
     *    drain starts from a fresh checkpoint. Wall on the graded pair:
     *    mm_phash_maintenance_stream 15.0 -> 9.6 s warm.
-    *  - `noDataBatch = false` turns off the engine's watermark-commit
-    *    batch.
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` is set from
+    *    the plan: `true` only for a non-inner stream-stream join.
     *  - `statePartitions` is the caller's KEY-CARDINALITY bound; it
     *    never EXCEEDS the session's own shuffle-partition setting (a
     *    low-core session would otherwise get MORE state shards than its
     *    default — the bound is a ceiling on useful shards, not a
-    *    floor).
-    *
-    * Same caveat as every session-wide flip: a production caller
-    * running concurrent streams in one session should set these in
-    * the session it builds each query with. */
-  private def drainConfs(spark: SparkSession, rocksdbState: Boolean,
-      noDataBatch: Boolean, statePartitions: Option[Int]): Seq[(String, String)] = {
-    val sessionShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    *    floor). */
+  private def drainConfs(df: DataFrame, rocksdbState: Boolean,
+      statePartitions: Option[Int]): Seq[(String, String)] = {
+    val sessionShuffle = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     (if (!rocksdbState) Nil
      else Seq(
        "spark.sql.streaming.stateStore.providerClass" ->
          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
          "true")) ++
-    (if (noDataBatch) Nil
-     else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) ++
+    Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> outerStreamJoin(df).toString) ++
     statePartitions.map(n =>
       "spark.sql.shuffle.partitions" -> math.min(n, sessionShuffle).toString)
   }
@@ -578,31 +597,30 @@ object Streaming {
   /** The one `Trigger.AvailableNow` drain behind [[runAvailableNow]],
     * [[hashDedupIncrementalStream]] and [[hashDedupMaintStream]]:
     * installs the streaming session settings, makes a fresh `<prefix>`
-    * temp root, runs `df` to exhaustion under `confs` with its
-    * checkpoint at `<root>/ckpt`, and hands every micro-batch to
-    * `sink` together with the output path `<root>/out`, which it
-    * returns.
+    * temp root, starts `df` under [[drainConfs]] in the output mode its
+    * plan calls for, with its checkpoint at `<root>/ckpt`, runs it to
+    * exhaustion and hands every micro-batch to `sink` together with the
+    * output path `<root>/out`, which it returns.
     *
     * The drained output must outlive this call (the returned frame
     * reads it lazily), so reclamation is a JVM-exit hook — without it
     * every drain leaks its checkpoint + output on disk FOREVER across
     * JVMs (found as 24 GB of orphaned graft_stream_ dirs after a probe
     * campaign; at probe scale a single drain is gigabytes). */
-  private def drain(df: DataFrame, prefix: String, outputMode: String,
-      confs: Seq[(String, String)])(sink: (DataFrame, String) => Unit): String = {
+  private def drain(df: DataFrame, prefix: String, rocksdbState: Boolean,
+      statePartitions: Option[Int])(sink: (DataFrame, String) => Unit): String = {
     val spark = df.sparkSession
     StreamingSession.install(spark)
     val root = java.nio.file.Files.createTempDirectory(prefix)
     sweepOnExit(root)
     val out = root.resolve("out").toString
-    graft.core.Sessions.withConfs(spark, confs) {
-      df.writeStream.outputMode(outputMode)
+    graft.core.Sessions.withConfs(spark, drainConfs(df, rocksdbState, statePartitions)) {
+      df.writeStream.outputMode(if (aggregates(df)) "complete" else "append")
         .foreachBatch { (batch: DataFrame, _: Long) => sink(batch, out) }
         .option("checkpointLocation", root.resolve("ckpt").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-        .awaitTermination()
-    }
+    }.awaitTermination()
     out
   }
 
@@ -956,13 +974,8 @@ object Streaming {
     val verdicts = hashDedupIncrementalVerdicts(ds, maxDist,
         watermarkDelayMs, stateMaxBucket)
       .toDF("docId", "tsUs", "bidx", "matchedId", "sig")
-    // noDataBatch = false: the band fMGWS's timeout branch only evicts
-    // (emits nothing — bandDedupStreamGen), so the engine's final
-    // watermark-commit batch can change no verdict; it would pay one
-    // full state reload + commit across every shard. Pinned by the
-    // shared batch oracle.
-    val out = drain(verdicts, "graft_incr_stream_", "append",
-        drainConfs(spark, rocksdbState, noDataBatch = false, statePartitions)) {
+    val out = drain(verdicts, "graft_incr_stream_", rocksdbState,
+        statePartitions) {
       (batch0, out) =>
         // persist the trigger's verdicts ONCE: the fold consumes
         // them twice (per-doc agg + the index-join leg), and each
@@ -1052,13 +1065,8 @@ object Streaming {
     val verdicts = hashDedupIncrementalVerdicts(ds, maxDist,
         watermarkDelayMs, stateMaxBucket)
       .toDF("docId", "tsUs", "bidx", "matchedId", "sig")
-    // noDataBatch = false: same audit as hashDedupIncrementalStream —
-    // the band state's timeout branch emits nothing, the fold/append
-    // cycle runs only on data triggers, so the watermark-commit batch
-    // is pure per-shard reload+commit cost (a third of this drain's
-    // trigger count at the graded two-file slicing).
-    val out = drain(verdicts, "graft_maint_stream_", "append",
-        drainConfs(spark, rocksdbState, noDataBatch = false, statePartitions)) {
+    val out = drain(verdicts, "graft_maint_stream_", rocksdbState,
+        statePartitions) {
       (batch0, out) =>
         val s = batch0.sparkSession
         // one materialization instead of THREE state passes (fold

@@ -12,42 +12,41 @@ class AsofPropertySpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
 
+  /** `rid` of the winning right row per `lid` (-1 when none). */
+  private def ridByLid(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(x => (x.getLong(x.fieldIndex("lid")),
+      if (x.isNullAt(x.fieldIndex("r_rid"))) -1L
+      else x.getLong(x.fieldIndex("r_rid")))).toMap
+
+  /** Seeded (ts, id) rows on a narrow ts range, so equal timestamps
+    * are planted on both sides; ids are unique. */
+  private def tiedRows(rnd: scala.util.Random, n: Int, span: Long): Seq[(Long, Long)] =
+    Seq.fill(n)(rnd.nextLong(span)).zipWithIndex.map { case (t, i) => (t, i.toLong) }
+
+  private val partitionings = Seq(1, 3, 7, 13)
+
   test("asof == brute force, and is repartition-invariant (8 seeds)") {
     import spark.implicits._
     for (seed <- 1 to 8) {
       val rnd = new scala.util.Random(seed)
-      val lts = Seq.fill(40)(rnd.nextLong(200L)).distinct
-      val rts = Seq.fill(25)(rnd.nextLong(200L)).distinct
-
-      val l = lts.zipWithIndex.map { case (t, i) => (t, i.toLong) }
-        .toDF("ts_us", "lid")
-      val r = rts.zipWithIndex.map { case (t, i) => (t, i.toLong) }
-        .toDF("ts_us", "rid")
-
-      def collectMap(lf: org.apache.spark.sql.DataFrame,
-          rf: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-        AsofJoin.asofJoin(lf, rf, "ts_us", rightPrefix = "r",
-            rightTieBreak = Some("rid"))
-          .collect()
-          .map(x => (x.getLong(x.fieldIndex("ts_us")),
-            if (x.isNullAt(x.fieldIndex("r_rid"))) -1L
-            else x.getLong(x.fieldIndex("r_rid"))))
-          .toMap
-
-      val out = collectMap(l, r)
-      val rSorted = rts.zipWithIndex
-      lts.foreach { t =>
-        val expect = rSorted.filter(_._1 <= t) match {
-          case Nil => -1L
-          case xs =>
-            val best = xs.map(_._1).max
-            xs.filter(_._1 == best).map(_._2.toLong).max
-        }
-        assert(out(t) == expect, s"seed=$seed left ts=$t")
+      val ls = tiedRows(rnd, 40, 60L)
+      val rs = tiedRows(rnd, 25, 60L)
+      // the latest right ts at or before the left ts, the largest rid
+      // among equal right ts
+      val want = ls.map { case (t, lid) =>
+        lid -> rs.filter(_._1 <= t).maxByOption(r => (r._1, r._2)).fold(-1L)(_._2)
+      }.toMap
+      val l = ls.toDF("ts_us", "lid")
+      val r = rs.toDF("ts_us", "rid")
+      partitionings.foreach { n =>
+        val ln = l.repartition(n)
+        val rn = r.repartition(n)
+        assert(ridByLid(AsofJoin.asofJoin(ln, rn, "ts_us", rightPrefix = "r",
+          rightTieBreak = Some("rid"))) == want, s"seed=$seed asofJoin, $n partitions")
+        assert(ridByLid(AsofJoin.asofJoinRangePartitioned(ln, rn, "ts_us",
+          rightPrefix = "r", numPartitions = 4, rightTieBreak = Some("rid"))) == want,
+          s"seed=$seed asofJoinRangePartitioned, $n partitions")
       }
-
-      val out2 = collectMap(l.repartition(7), r.repartition(5))
-      assert(out2 == out, s"seed=$seed repartition changed results")
     }
   }
 
@@ -101,13 +100,24 @@ class AsofPropertySpec extends AnyFunSuite {
 
       val want = asSet(AsofJoin.asofJoin(l, r, "ts_us", Seq("k"),
         rightPrefix = "r", rightTieBreak = Some("rid")))
+      // brute force: the same key's latest right ts at or before the
+      // left ts, the largest rid among equal right ts
+      val ls = l.as[(String, Long, Long)].collect().toSeq
+      val rs = r.as[(String, Long, Long, Long)].collect().toSeq
+      val brute = ls.map { case (k, t, lid) =>
+        lid -> rs.filter(x => x._1 == k && x._2 <= t)
+          .maxByOption(x => (x._2, x._3)).fold(-1L)(_._3)
+      }.toMap
+      assert(ridByLid(AsofJoin.asofJoin(l, r, "ts_us", Seq("k"),
+        rightPrefix = "r", rightTieBreak = Some("rid"))) == brute, s"seed=$seed asofJoin")
       // bucket sizes: finer than the span (many buckets incl. empty
       // ones), mid, and wider than the span (degenerates to one bucket
       // per key == the unsalted plan)
-      for (bucketUs <- Seq(7L, 100L, 10000L)) {
-        val salted = AsofJoin.asofJoinSalted(l, r, "ts_us", Seq("k"),
-          bucketUs, rightPrefix = "r", rightTieBreak = Some("rid"))
-        assert(asSet(salted) == want, s"seed=$seed bucketUs=$bucketUs")
+      for (bucketUs <- Seq(7L, 100L, 10000L); n <- partitionings) {
+        val salted = AsofJoin.asofJoinSalted(l.repartition(n), r.repartition(n),
+          "ts_us", Seq("k"), bucketUs, rightPrefix = "r", rightTieBreak = Some("rid"))
+        assert(asSet(salted) == want, s"seed=$seed bucketUs=$bucketUs, $n partitions")
+        assert(ridByLid(salted) == brute, s"seed=$seed bucketUs=$bucketUs, $n partitions")
       }
     }
   }
@@ -126,39 +136,29 @@ class AsofPropertySpec extends AnyFunSuite {
     import spark.implicits._
     for (seed <- 101 to 108) {
       val rnd = new scala.util.Random(seed)
-      val lts = Seq.fill(40)(rnd.nextLong(200L)).distinct
-      val rts = Seq.fill(25)(rnd.nextLong(200L)).distinct
-      val l = lts.zipWithIndex.map { case (t, i) => (t, i.toLong) }
-        .toDF("ts_us", "lid")
-      val r = rts.zipWithIndex.map { case (t, i) => (t, i.toLong) }
-        .toDF("ts_us", "rid")
-
-      def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-        df.collect().map(x => (x.getLong(x.fieldIndex("ts_us")),
-          if (x.isNullAt(x.fieldIndex("r_rid"))) -1L
-          else x.getLong(x.fieldIndex("r_rid")))).toMap
-
-      val fwd = asMap(AsofJoin.asofJoinForward(l, r, "ts_us",
-        rightPrefix = "r", rightTieBreak = Some("rid")))
-      val near = asMap(AsofJoin.asofJoinNearest(l, r, "ts_us",
-        rightPrefix = "r", rightTieBreak = Some("rid")))
-      val rIdx = rts.zipWithIndex
-      lts.foreach { t =>
-        // forward: earliest right ts >= t (rts distinct -> no ties)
-        val fExpect = rIdx.filter(_._1 >= t) match {
-          case Nil => -1L
-          case xs => xs.minBy(_._1)._2.toLong
-        }
-        assert(fwd(t) == fExpect, s"seed=$seed forward ts=$t")
-        // nearest: min |distance|, distance ties resolved backward
-        val nExpect =
-          if (rIdx.isEmpty) -1L
-          else {
-            val best = rIdx.map(x => math.abs(x._1 - t)).min
-            rIdx.filter(x => math.abs(x._1 - t) == best)
-              .minBy(_._1)._2.toLong // smaller ts = backward wins
-          }
-        assert(near(t) == nExpect, s"seed=$seed nearest ts=$t")
+      val ls = tiedRows(rnd, 40, 60L)
+      val rs = tiedRows(rnd, 25, 60L)
+      // forward: the earliest right ts at or after the left ts; among
+      // equal right ts the largest rid wins, as backward
+      val fwant = ls.map { case (t, lid) =>
+        lid -> rs.filter(_._1 >= t).maxByOption(r => (-r._1, r._2)).fold(-1L)(_._2)
+      }.toMap
+      // nearest: min |distance|, distance ties resolved backward
+      // (smaller ts), then the largest rid
+      val nwant = ls.map { case (t, lid) =>
+        lid -> rs.maxByOption(r => (-math.abs(r._1 - t), -r._1, r._2)).fold(-1L)(_._2)
+      }.toMap
+      val l = ls.toDF("ts_us", "lid")
+      val r = rs.toDF("ts_us", "rid")
+      partitionings.foreach { n =>
+        val ln = l.repartition(n)
+        val rn = r.repartition(n)
+        assert(ridByLid(AsofJoin.asofJoinForward(ln, rn, "ts_us",
+          rightPrefix = "r", rightTieBreak = Some("rid"))) == fwant,
+          s"seed=$seed forward, $n partitions")
+        assert(ridByLid(AsofJoin.asofJoinNearest(ln, rn, "ts_us",
+          rightPrefix = "r", rightTieBreak = Some("rid"))) == nwant,
+          s"seed=$seed nearest, $n partitions")
       }
     }
   }

@@ -32,32 +32,6 @@ class BlockWriterSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("minRowsPerBlock buffers micro-batches into compacted blocks") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = Files.createTempDirectory("graft_bw_compact").toString
-    val cat = new BlockCatalog(spark, root)
-    val day0 = 1704067200000000L
-
-    val input = MemoryStream[(Long, Double)]
-    val q = BlockWriter.start(
-      input.toDS().toDF("ts_us", "v"), cat, "feat", "K", "ts_us",
-      triggerMs = 0L, minRowsPerBlock = 5L)
-    try {
-      input.addData((day0, 1.0), (day0 + 1000000L, 2.0))
-      q.processAllAvailable()
-      assert(cat.meta.count() == 0) // 2 rows buffered, below target
-      input.addData((day0 + 2000000L, 3.0), (day0 + 3000000L, 4.0))
-      q.processAllAvailable()
-      assert(cat.meta.count() == 0) // still 4 < 5
-      input.addData((day0 + 4000000L, 5.0))
-      q.processAllAvailable()
-      assert(cat.meta.count() == 1) // one compacted 5-row block
-      assert(cat.meta.select("num_rows").collect()(0).getLong(0) == 5L)
-      assert(cat.scanAll("feat", "K").count() == 5)
-    } finally q.stop()
-  }
-
   test("flush-per-batch sink runs a stateful upstream once: dedup drops each re-send once") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, timestamp_micros}
@@ -81,19 +55,6 @@ class BlockWriterSpec extends AnyFunSuite {
       assert(cat.scanAll("feat", "K").select("ts_us", "text").as[(Long, String)].collect().map(_._2).sorted
         .toSeq == Seq("a", "b", "c", "d"))
     } finally q.stop()
-  }
-
-  test("availableNow with minRowsPerBlock > 0 is rejected, naming the safe mode") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val cat = new BlockCatalog(spark,
-      Files.createTempDirectory("graft_bw_lossy").toString)
-    val e = intercept[IllegalArgumentException] {
-      BlockWriter.start(MemoryStream[(Long, Double)].toDS().toDF("ts_us", "v"),
-        cat, "feat", "K", "ts_us", minRowsPerBlock = 1000L, availableNow = true)
-    }
-    assert(e.getMessage.contains("minRowsPerBlock = 0"))
-    assert(e.getMessage.contains("compactSmallBlocks"))
   }
 
   test("restart on the same checkpoint: the catalog holds exactly the uninterrupted run's rows") {

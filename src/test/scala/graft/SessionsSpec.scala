@@ -22,6 +22,14 @@ object LocalSessionMain {
   }
 }
 
+/** What a task of a drain's trigger saw of the caller's session conf:
+  * tasks run in this JVM in local mode, so they read the session
+  * through this object instead of a serialized copy. */
+object ConfProbe {
+  @volatile var session: org.apache.spark.sql.SparkSession = _
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]
+}
+
 class SessionsSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
@@ -49,13 +57,25 @@ class SessionsSpec extends AnyFunSuite {
 
       val in = Files.createTempDirectory("graft_confs").resolve("in").toString
       Seq("a", "b", "a", "c", "a").toDF("k").write.parquet(in)
+      // the flip spans `.start()` alone: a task of the drain's trigger
+      // reads the caller's session conf and finds it as it was before
+      ConfProbe.session = spark
+      ConfProbe.seen.clear()
+      val probe = org.apache.spark.sql.functions.udf { (k: String) =>
+        ConfProbe.seen.add(ConfProbe.session.conf.getAll); k != null
+      }.asNondeterministic()
       val counts = Streaming.runAvailableNow(
         spark.readStream.schema("k STRING").parquet(in)
-          .groupBy(col("k")).count(),
-        rocksdbState = true, noDataBatch = false, statePartitions = Some(2))
+          .filter(probe(col("k"))).groupBy(col("k")).count(),
+        rocksdbState = true, statePartitions = Some(2))
       assert(counts.as[(String, Long)].collect().toMap ==
         Map("a" -> 3L, "b" -> 1L, "c" -> 1L))
       assert(spark.conf.getAll == before, s"runAvailableNow: $leaked")
+      import scala.jdk.CollectionConverters._
+      val during = ConfProbe.seen.asScala.toSeq
+      assert(during.nonEmpty, "the probe ran in no trigger")
+      during.foreach(c => assert(c == before, "the drain's confs outlived" +
+        s" `.start()`: added ${c.toSet -- before.toSet}, lost ${before.toSet -- c.toSet}"))
 
       val cat = new BlockCatalog(spark,
         Files.createTempDirectory("graft_confs_cat").toString)
@@ -115,6 +135,20 @@ class SessionsSpec extends AnyFunSuite {
     val streaming = sources(Paths.get("graft/streaming/Streaming.scala"))
     assert("writeStream".r.findAllMatchIn(streaming).size == 1,
       "Streaming.scala must drain through its one writeStream")
+    // the drain derives the output mode and the no-data batch from the
+    // plan: no query passes either, and each is set in one place
+    val queries = sources.collect {
+      case (f, text) if f.startsWith(Paths.get("graft/queries")) &&
+        (text.contains("outputMode") || text.contains("noDataBatch")) => f
+    }
+    assert(queries.isEmpty, s"queries that set a drain's mode or no-data batch: $queries")
+    val code = sources.map { case (f, text) => f -> stripComments(text) }
+    Seq("noDataMicroBatches", ".outputMode(").foreach { s =>
+      val n = code.values.map(java.util.regex.Pattern.quote(s).r.findAllMatchIn(_).size).sum
+      assert(n <= 1, s"`$s` appears $n times in src/main; the drain sets it once")
+    }
+    assert(!code(Paths.get("graft/streaming/BlockWriter.scala")).contains("persist"),
+      "BlockWriter flushes every micro-batch; it buffers nothing")
     val catalog = sources(Paths.get("graft/sources/BlockCatalog.scala"))
     assert("xxhash64\\(".r.findAllMatchIn(catalog).size == 1,
       "BlockCatalog.scala must define the block hash in one place")

@@ -1224,6 +1224,102 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("drain rule: the plan sets the output mode; only an outer stream join runs a no-data batch") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, count, expr, lit, sum, timestamp_micros}
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+    import StreamingQueryListener._
+    val t0 = 1704067200000000L
+    val S = 1000000L
+    // one trigger per file: a burst, a quiet stretch 10 s on, and a
+    // last file whose rows at 30 s move the watermark past the left
+    // row at 20 s (id 12), so only a no-data batch can finalize it
+    val files = Seq(
+      (0L until 8L).map(i => (i, t0 + i * 300000L)),
+      (8L until 12L).map(i => (i, t0 + 10 * S + (i - 8) * 300000L)),
+      Seq((12L, t0 + 20 * S), (13L, t0 + 30 * S), (14L, t0 + 31 * S)))
+    val in = java.nio.file.Files.createTempDirectory("graft_drain_rule")
+    files.zipWithIndex.foreach { case (rows, f) =>
+      val p = in.resolve(s"part-$f.json")
+      java.nio.file.Files.write(p, rows.map { case (id, ts) =>
+        s"""{"k": "k${id % 3}", "ts_us": $ts, "id": $id, "v": ${id * 0.5}}"""
+      }.mkString("\n").getBytes("UTF-8"))
+      p.toFile.setLastModified(1700000000000L + f * 1000L)
+    }
+    def src(): DataFrame = spark.readStream
+      .schema("k STRING, ts_us LONG, id LONG, v DOUBLE")
+      .option("maxFilesPerTrigger", "1").json(in.toString)
+    // left rows have even ids, right rows odd ones
+    def side(left: Boolean) = src().filter((col("id") % 2 === 0) === left)
+    def timed(df: DataFrame, id: String, ts: String) =
+      df.select(col("k").as(s"${ts}_k"), col("id").as(id),
+        timestamp_micros(col("ts_us")).as(ts)).withWatermark(ts, "1 second")
+    val plans: Seq[(String, DataFrame, Boolean)] = Seq( // name, plan, complete
+      ("aggregate", src().groupBy("k").agg(count(lit(1)).as("n"), sum("id").as("s")), true),
+      ("keyed fold", Streaming.throttleElapsedStream(src().select(col("k").as("key"),
+          col("ts_us").as("tsUs"), col("id").as("seq"), col("v").as("value"))
+        .as[Streaming.ThrottleEvent], S).toDF(), false),
+      ("band engine", Streaming.hashDedupStream(src().select(col("id"), col("ts_us"),
+          (col("id") % 4 * 0x0F0F0F0FL).as("h")).as[(Long, Long, Long)],
+        maxDist = 3, watermarkDelayMs = 1000L).toDF(), false),
+      ("inner interval join", Streaming.intervalJoinStream(
+          side(true).select(col("k"), col("ts_us"), col("id").as("l_id")),
+          side(false).select(col("k"), col("ts_us"), col("id").as("r_id")),
+          "k", "ts_us", 2 * S, "1 second").select("l_id", "r_id"), false),
+      ("stateless map", src().select(col("id"), (col("v") * 2).as("v2")), false),
+      ("left-outer join", timed(side(true), "l_id", "l_ts").join(
+          timed(side(false), "r_id", "r_ts"),
+          col("l_ts_k") === col("r_ts_k") &&
+            col("r_ts") >= col("l_ts") - expr("INTERVAL 2 SECONDS") &&
+            col("r_ts") <= col("l_ts"), "leftOuter").select("l_id", "r_id"), false))
+
+    val inputRows = new java.util.concurrent.ConcurrentHashMap[
+      java.util.UUID, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        inputRows.computeIfAbsent(e.progress.runId,
+          _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
+          .add(e.progress.numInputRows)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.runId)
+    }
+    // the run that ends next: the bus posts its progress events first
+    def nextEnded(body: => Unit): java.util.UUID = {
+      val before = ended.asScala.toSet
+      body
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while ((ended.asScala.toSet -- before).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val fresh = ended.asScala.toSet -- before
+      assert(fresh.size == 1, s"expected one ended query, got $fresh")
+      fresh.head
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    spark.streams.addListener(listener)
+    try plans.foreach { case (name, df, complete) =>
+      var drained = Seq.empty[String]
+      val run = nextEnded { drained = rows(Streaming.runAvailableNow(df)) }
+      nextEnded {
+        df.writeStream.outputMode(if (complete) "complete" else "append")
+          .format("memory").queryName("drain_rule_out")
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      }
+      assert(drained.nonEmpty && drained == rows(spark.table("drain_rule_out")),
+        s"$name: the drain differs from a plain writeStream")
+      val batches = inputRows.get(run).asScala.toSeq
+      val outer = name == "left-outer join"
+      assert(batches.count(_ > 0) == 3, s"$name: one data batch per file, got $batches")
+      assert(batches.contains(0L) == outer, s"$name: no-data batch ran: $batches")
+      if (outer) {
+        assert(drained.contains("12|null"), s"watermark-finalized row missing: $drained")
+        assert(!drained.contains("14|null"), s"a row past the watermark emitted: $drained")
+      }
+    } finally spark.streams.removeListener(listener)
+  }
+
   /** A two-trigger AvailableNow drain of a JSON-lines directory through
     * exactDedupStream into a foreachBatch collect sink, checkpointed
     * under `root`; returns the rows it emitted. */
