@@ -39,11 +39,12 @@ object Bench {
       // clock: each timed query pays its own persist cost (a warm-up
       // leftover would understate it) and cache residency stays bounded.
       // clearCache only drops catalog-cached DataFrames — RDD-level
-      // persists and localCheckpoint blocks (connectedComponents' final
-      // cut) survive it and pinned the block manager for the rest of
-      // the round-2 bench session (3-4x phantom regressions on
-      // unchanged queries). Freeing every persistent RDD between
-      // queries keeps each measurement independent.
+      // persists and localCheckpoint blocks (the maintenance verdicts'
+      // frozen batch, the distributed connected-components loop's
+      // final cut) survive it; a leaked cut once pinned the block
+      // manager for the rest of a bench session (3-4x phantom
+      // regressions on unchanged queries). Freeing every persistent
+      // RDD between queries keeps each measurement independent.
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))

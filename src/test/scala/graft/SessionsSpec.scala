@@ -160,6 +160,15 @@ class SessionsSpec extends AnyFunSuite {
     }
     assert("growTree\\(".r.findAllMatchIn(trainer).size == 2,
       "Trainer.scala must define growTree once and call it from one place")
+    // connected components are one operator with one distributed loop:
+    // a union-find on the driver below its bound, large-star above it
+    val dedup = code(Paths.get("graft/operators/Dedup.scala"))
+    assert("HashPartitioner\\(".r.findAllMatchIn(dedup).size == 1,
+      "Dedup.scala must partition one distributed connected-components loop")
+    val ccVariants = sources.collect {
+      case (f, text) if text.contains("connectedComponentsLargeStar") => f
+    }
+    assert(ccVariants.isEmpty, s"a second connected-components entry point in $ccVariants")
   }
 
   /** Public defs of `src/main` that nothing outside their own
